@@ -151,10 +151,10 @@ def main(argv: list[str] | None = None) -> int:
             return 0
 
         if args.cmd == "run":
-            from etl_core_spark.plans import JobRunner, build_job
+            from etl_core_spark.plans.runner import run_job
 
             config = json.loads(Path(args.config_path).read_text())
-            result = JobRunner(build_job(_spark(), config)).run()
+            result = run_job(_spark(), config)
             print(json.dumps(result.__dict__))
             return 0 if result.status == "SUCCESS" else 1
 

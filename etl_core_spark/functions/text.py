@@ -523,17 +523,6 @@ def minhash_signature(col: Column, num_hashes: int = 16, shingle_n: int = 3) -> 
     return minhash_signature_from_shingles(shingles(col, shingle_n), num_hashes)
 
 
-def band_keys(sig_col: Column, bands: int, rows: int) -> Column:
-    """LSH banding: signature → array of band bucket keys
-    md5(band_idx || joined rows). Docs sharing ≥1 band key are
-    near-dup candidates."""
-    keys = []
-    for b in range(bands):
-        band = F.slice(sig_col, b * rows + 1, rows)
-        keys.append(F.md5(F.concat(F.lit(f"{b}|"), F.array_join(band, "|"))))
-    return F.array(*keys)
-
-
 def simhash64(col: Column, shingle_n: int = 2, bits: int = 60) -> Column:
     """SimHash fingerprint as a bit-string (60 bits by default, kept
     under a signed long's 63 so the per-shingle hash is plain BIGINT

@@ -83,16 +83,6 @@ def select_unit(df, id_expr_alias, vec_col: str, out_alias: str):
     )
 
 
-def l2_distance(a: Column, b: Column) -> Column:
-    return F.sqrt(
-        F.aggregate(
-            F.zip_with(a, b, lambda x, y: (x.cast("double") - y.cast("double")) ** 2),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-    )
-
-
 def hyperplane_bucket(vec: Column, planes: list[list[float]]) -> Column:
     """Random-hyperplane LSH bucket id: sign bit per plane packed into
     a long. ``planes`` are fixed (seeded) driver-side constants, so

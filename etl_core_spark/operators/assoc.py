@@ -95,7 +95,7 @@ def assoc_rules(
     # pruned is consumed by the oversized-basket probe (groupBy __b)
     # and BOTH sides of the pair self-join (on __b) — cache it
     # PRE-PARTITIONED on the basket key (r14, guide §2.4, the graph
-    # family's _persist_loop_invariant discipline; this is the
+    # loops' keyed-persist discipline; this is the
     # in-session form of "bucket the basket key" from the r13 note).
     # At cluster scale the self-join plans as SMJ and the cached
     # layout satisfies both sides' required distribution: one upfront
@@ -104,9 +104,7 @@ def assoc_rules(
     # timing-neutral. Counts are exact integers, so results are
     # placement-independent bit-for-bit.
     pruned = persist_intermediate(
-        obs.join(item_cnt.select("__i"), on="__i").repartition(
-            F.col("__b")
-        )
+        obs.join(item_cnt.select("__i"), on="__i"), key="__b"
     )
     # loud quadratic guard AFTER the A-priori prune: one existence
     # probe on the first offending basket, actionable message
@@ -117,13 +115,7 @@ def assoc_rules(
         .take(1)
     ) if max_basket_size is not None else []
     if oversized:
-        # release the persisted intermediates before raising — the
-        # plan is abandoned, so nothing downstream will unpersist them
-        for cached in (pruned, item_cnt, obs):
-            try:
-                cached.unpersist()
-            except Exception:
-                pass
+        # the run scope releases the abandoned caches on the way out
         raise OperatorConfigError(
             f"assoc_rules: basket {oversized[0]['__b']!r} still has "
             f"{oversized[0]['__sz']} frequent items after the support "

@@ -68,9 +68,8 @@ def _shingle_table(
     candidate generation and Jaccard verification each consume it (a
     self-join would otherwise recompute the tokenize+shingle+md5
     subtree up to 4×; at 100 TB this is the difference between one
-    corpus scan and four). Tracked via ``persist_intermediate`` so
-    long-lived sessions can release the cache
-    (session.release_intermediates).
+    corpus scan and four). Owned by the run scope
+    (``persist_intermediate``), which releases it when the run ends.
 
     ``persist=False`` for SINGLE-consumer plans (signature-only,
     candidates-only): there the cache materialization is pure
@@ -323,16 +322,15 @@ def minhash_index_update(
             f"refusing update with {meta}"
         )
     sh = _shingle_table(df, text_col, id_col, shingle_n, persist=False)
-    sig = minhash_sig_table(sh.where(F.size("sh") > 0), id_col, num_hashes)
-    sig = sig.localCheckpoint()
+    from etl_core_spark.session import checkpoint, release
+
+    sig = checkpoint(minhash_sig_table(sh.where(F.size("sh") > 0), id_col, num_hashes))
     if sig.isEmpty():
         # a batch of only zero-shingle docs must not CREATE a sigs
         # directory with no parquet files (meta-without-data or a
         # schema-less dir would break every later read — the same
         # failure class the streaming rate soak exposed)
-        from etl_core_spark.session import release_local_checkpoint
-
-        release_local_checkpoint(sig)
+        release(sig)
         return
     table = f"{str(index_path).rstrip('/')}/sigs"
     if mode == "append":
@@ -345,9 +343,7 @@ def minhash_index_update(
         from etl_core_spark.sources.hadoop_fs import fs_write_text
 
         fs_write_text(spark, _index_meta_path(index_path), json.dumps(meta))
-    from etl_core_spark.session import release_local_checkpoint
-
-    release_local_checkpoint(sig)  # written out; blocks no longer needed
+    release(sig)  # written out; blocks no longer needed
 
 
 def minhash_index_compact(spark, index_path: str, by: str = "row") -> int:
@@ -384,13 +380,13 @@ def minhash_index_compact(spark, index_path: str, by: str = "row") -> int:
         )
     else:
         raise OperatorConfigError(f"unknown compact mode {by!r}")
-    compacted = compacted.localCheckpoint()  # detach from the files
-    # about to be overwritten
+    from etl_core_spark.session import checkpoint, release
+
+    # detach from the files about to be overwritten
+    compacted = checkpoint(compacted)
     after = compacted.count()
     compacted.write.mode("overwrite").parquet(table)
-    from etl_core_spark.session import release_local_checkpoint
-
-    release_local_checkpoint(compacted)  # rewritten; blocks not needed
+    release(compacted)  # rewritten; blocks not needed
     return before - after
 
 
@@ -725,16 +721,18 @@ def winnow_near_dup_pairs(
     # lambda, i.e. O(n²·w) md5s per document. Winnowing arrays are
     # never empty (≥1 selection by construction), so outer is
     # semantically identical; null fingerprints (null text) drop at
-    # the equi-join.
+    # the filter below.
     from etl_core_spark.session import persist_intermediate
 
     # join key = xxhash64 of the selected fingerprint: selection
     # stays md5-lexicographic (the oracle surface), but the 3×-reused
     # exploded table and the self-join shuffle 8-byte longs instead
     # of 32-char strings; shared-count output is hash-invariant.
-    # NULL entries (explode_outer of an empty doc) must STAY null —
-    # xxhash64(NULL) is the non-null seed, which would fuse every
-    # empty doc into one hot join key.
+    # NULL entries (explode_outer of an empty doc) are dropped before
+    # hashing: they could never match in the inner join with ``rare``,
+    # xxhash64(NULL) is the non-null seed that would fuse every empty
+    # doc into one hot join key, and even kept as NULL they would all
+    # land in one hot partition of the keyed cache.
     # cached PRE-PARTITIONED on the fingerprint key (r14, guide §2.4):
     # all three consumers are keyed on __fp — the doc-freq groupBy
     # runs exchange-free, its output keeps the layout so the rare
@@ -742,13 +740,9 @@ def winnow_near_dup_pairs(
     # it. One upfront exchange instead of up to four in the SMJ shape.
     ex = persist_intermediate(  # consumed 3× (doc-freq filter + both join sides)
         fp.select(F.col(id_col), F.explode_outer("fingerprints").alias("__fp0"))
-        .select(
-            F.col(id_col),
-            F.when(
-                F.col("__fp0").isNotNull(), F.xxhash64("__fp0")
-            ).alias("__fp"),
-        )
-        .repartition(F.col("__fp"))
+        .where(F.col("__fp0").isNotNull())
+        .select(F.col(id_col), F.xxhash64("__fp0").alias("__fp")),
+        key="__fp",
     )
     rare = (
         ex.groupBy("__fp")
@@ -1351,11 +1345,7 @@ def connected_components(
       executor-loss resilience. Raises after ``max_iters`` rounds
       rather than returning unconverged labels.
     """
-    from etl_core_spark.session import (
-        persist_intermediate,
-        release_local_checkpoint,
-        track_local_checkpoint,
-    )
+    from etl_core_spark.session import checkpoint, persist_intermediate, release
 
     raw = pairs.select(F.col(id_a).alias("s"), F.col(id_b).alias("t"))
     if driver_max_edges > 0:
@@ -1388,13 +1378,12 @@ def connected_components(
         .union(raw.select(F.col("t").alias("id")))
         .distinct()
     )
-    edges = (
+    edges = persist_intermediate(
         raw.where(F.col("s") != F.col("t"))
         .select(
             F.greatest("s", "t").alias("u"), F.least("s", "t").alias("v")
         )
         .distinct()
-        .persist()
     )
 
     def _large_star(e: DataFrame) -> DataFrame:
@@ -1431,7 +1420,7 @@ def connected_components(
         # replaces the plan with a LogicalRDD — per-round analysis
         # stays O(1) and the materialization doubles as the round's
         # cache (persist would materialize anyway for the star test).
-        new_edges = _small_star(_large_star(edges)).localCheckpoint()
+        new_edges = checkpoint(_small_star(_large_star(edges)))
         # Exact convergence test, staged so the expensive half only
         # runs at the fixed point. A min-rooted star set IS the fixed
         # point of both operations (large-star and small-star are
@@ -1476,19 +1465,14 @@ def connected_components(
         prev_sig = sig
         # free the superseded round NOW: new_edges is already
         # materialized (eager localCheckpoint), so nothing references
-        # the previous relation — waiting for JVM GC instead pins
+        # the previous relation — waiting for scope exit instead pins
         # O(rounds x |edges|) of executor storage across the run
-        if i == 0:
-            edges.unpersist()  # the initial persisted edge set
-        else:
-            release_local_checkpoint(edges)
+        release(edges)
         edges = new_edges
         if converged:
             # fixed point: edges are (member, component-min-root);
             # the checkpoint blocks ARE the cache (no extra persist)
-            # and the returned plan reads them — released only by
-            # release_intermediates() after the consuming action
-            track_local_checkpoint(edges)
+            # and the returned plan reads them until the scope exits
             stars = edges.select(
                 F.col("u").alias("id"), F.col("v").alias("__root")
             )
@@ -1499,8 +1483,6 @@ def connected_components(
                     F.coalesce(F.col("__root"), F.col("id")).alias("cluster_id"),
                 )
             )
-    edges.unpersist()
-    release_local_checkpoint(edges)
     raise RuntimeError(
         f"connected_components did not converge in {max_iters} "
         "large-star/small-star rounds — rounds grow O(log n), so this "
@@ -1832,9 +1814,8 @@ def containment_pairs(
             F.col(id_col),
             "__n",
             F.explode("sh").alias("__s0"),
-        )
-        .select(F.col(id_col), "__n", F.xxhash64("__s0").alias("__s"))
-        .repartition(F.col("__s"))
+        ).select(F.col(id_col), "__n", F.xxhash64("__s0").alias("__s")),
+        key="__s",
     )
     if max_shingle_freq is not None:
         rare = (

@@ -44,11 +44,10 @@ class FilterOperator(Operator):
     def apply(self, inputs: PortMap) -> PortMap:
         df = self.single_input(inputs)
         if self.cache:
-            # tracked persist, not a bare .persist(): in a long-lived
+            # owned persist, not a bare .persist(): in a long-lived
             # session (the HTTP API) an ownerless cache accumulates
-            # until executor eviction; persist_intermediate registers
-            # it with session.release_intermediates like every other
-            # operator-persisted subtree
+            # until executor eviction; persist_intermediate hands it
+            # to the run scope like every other operator cache
             from etl_core_spark.session import persist_intermediate
 
             df = persist_intermediate(df)

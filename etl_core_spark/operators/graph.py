@@ -41,60 +41,31 @@ def _normalized_edges(
     return raw.distinct()
 
 
-def _persist_loop_invariant(df: DataFrame, key: str) -> DataFrame:
-    """Persist a loop-invariant relation PRE-PARTITIONED on the key the
-    iterative rounds join it on (r13 optimization, guide §2.4 "remove
-    shuffles outright").
+def _loop_join_hint(df: DataFrame) -> DataFrame:
+    """Hint for a relation an iterative loop joins once per round.
 
-    Every fixed-point loop in this module re-joins the same persisted
-    edge relation once per round. At cluster scale those joins plan as
-    sort-merge/shuffled-hash, and without a declared layout
-    EnsureRequirements re-exchanges the |E|-sized relation EVERY round
-    — rounds × |E| redundant shuffle. Caching it hash-partitioned on
-    the loop join key makes the cached ``outputPartitioning`` satisfy
-    the join's required distribution, so each round only shuffles the
-    node-sized rank/label side: one up-front repartition buys rounds×
-    exchange elisions. Measured at sf0.1 with auto-broadcast disabled
-    (forcing the cluster-scale SMJ shape — numbers in
-    OPTIMIZATION_r13.md); at bench scale with default conf AQE
-    broadcasts these joins and the layout is timing-neutral. Results
-    are value-identical up to floating-point summation order:
-    repartition changes row placement (and so the order partial
-    aggregates combine doubles), never row content — last-ULP
-    differences are absorbed by the family's floor-quantization and
-    re-verified against the oracle at two scales, but bit-exactness
-    across layouts is NOT guaranteed for the fp paths.
+    The graph loops persist that relation keyed on the round's join
+    key (``persist_intermediate(..., key=)``), so at cluster scale,
+    where the round join plans as sort-merge, each round shuffles only
+    the node-sized side (r13, numbers in OPTIMIZATION_r13.md).
 
     ``spark.graft.graph.loopJoinHint`` (default ``auto``): set to
-    ``merge`` to attach a SHUFFLE_MERGE join hint to the returned
-    relation. In the mid-size regime where the edge side still fits
-    under ``spark.sql.autoBroadcastJoinThreshold``, AQE broadcasts
-    the round join and — because each round re-instantiates the
-    cached relation with fresh expression ids — REBUILDS that
-    broadcast every round (ReuseExchange never fires across rounds).
-    Measured r14 on a 2M-edge / ~48 MB edged relation (just under
-    the 64 MB threshold): 1.32–1.43 s/round broadcast vs
-    0.49–0.70 s/round with the pre-partitioned SMJ shape — the
-    rebuild roughly DOUBLES round cost, and the hint recovers the
-    SMJ shape for the graph loops alone without disabling broadcast
-    session-wide. ``auto`` (the local/bench default) leaves AQE's
-    choice untouched: at bench scale the edge side is ~3 MB and the
-    per-round broadcast wins (r13 family measurement), so the knob is
-    a deployment setting for iteration-heavy loops on graphs near the
-    threshold, not a local win. Join strategy never changes values
-    beyond FP summation order (same quantize/oracle argument as the
-    layout above; oracle-verified with the hint forced on).
+    ``merge`` to attach a SHUFFLE_MERGE hint to the persisted handle
+    (outside the cache, so the cached relation stays hint-free). Just
+    under ``spark.sql.autoBroadcastJoinThreshold`` AQE broadcasts the
+    round join and, because each round re-instantiates the cached
+    relation with fresh expression ids, rebuilds that broadcast every
+    round. Measured r14 on a 2M-edge / ~48 MB relation: 1.32–1.43
+    s/round broadcast vs 0.49–0.70 s/round with the pre-partitioned
+    sort-merge shape. ``auto`` leaves AQE's choice alone: at bench
+    scale the per-round broadcast of a ~3 MB edge side wins. Single-
+    pass consumers never take the hint: there is no rebuild to save.
+    The join strategy changes values only by floating-point summation
+    order, which the family's floor quantization absorbs.
     """
-    from etl_core_spark.session import persist_intermediate
-
-    out = persist_intermediate(df.repartition(F.col(key)))
-    hint = df.sparkSession.conf.get("spark.graft.graph.loopJoinHint", "auto")
-    if hint == "merge":
-        # hint OUTSIDE the cache: the InMemoryRelation stays
-        # hint-free (shared), consumers joining this handle prefer
-        # sort-merge and reuse the cached layout with zero exchange
-        out = out.hint("merge")
-    return out
+    if df.sparkSession.conf.get("spark.graft.graph.loopJoinHint", "auto") == "merge":
+        return df.hint("merge")
+    return df
 
 
 def pagerank(
@@ -165,11 +136,7 @@ def pagerank(
         raise OperatorConfigError("pagerank damping must be in (0, 1)")
     if int(iterations) < 1:
         raise OperatorConfigError("pagerank iterations must be >= 1")
-    from etl_core_spark.session import (
-        persist_intermediate,
-        release_local_checkpoint,
-        track_local_checkpoint,
-    )
+    from etl_core_spark.session import checkpoint, persist_intermediate, release
 
     d = F.lit(float(damping))
     if weight_col is None:
@@ -223,8 +190,8 @@ def pagerank(
     # degree rides on every edge so the per-iteration join is a
     # single (ranks x edged) equi-join, not a three-way; cached
     # pre-partitioned on __s so the per-round join never re-exchanges
-    # the edge side (_persist_loop_invariant)
-    edged = _persist_loop_invariant(e.join(deg, on="__s"), "__s")
+    # the edge side (_loop_join_hint)
+    edged = _loop_join_hint(persist_intermediate(e.join(deg, on="__s"), key="__s"))
     q = F.lit(float(10 ** int(quantize)))
     base_of = lambda n_col: (F.lit(1.0) - d) / n_col  # noqa: E731
 
@@ -299,9 +266,7 @@ def pagerank(
         )
     has_dangling = probe["__nd"] > 0
     base = F.lit((1.0 - float(damping)) / n)
-    ranks = nodes.select("__id", F.lit(1.0 / n).alias("__r"))
-    ranks = ranks.localCheckpoint()
-    track_local_checkpoint(ranks)
+    ranks = checkpoint(nodes.select("__id", F.lit(1.0 / n).alias("__r")))
     for _ in range(int(iterations)):
         contrib = (
             ranks.join(edged, ranks["__id"] == edged["__s"])
@@ -340,9 +305,8 @@ def pagerank(
                     "__r"
                 ),
             )
-        new_ranks = new_ranks.localCheckpoint()
-        track_local_checkpoint(new_ranks)
-        release_local_checkpoint(ranks)
+        new_ranks = checkpoint(new_ranks)
+        release(ranks)
         ranks = new_ranks
     return ranks.select(
         F.col("__id").alias("node"),
@@ -419,9 +383,9 @@ def label_propagation(
         )
     from etl_core_spark.session import persist_intermediate
 
-    e = _persist_loop_invariant(
-        _normalized_edges(edges, src, dst, symmetrize=True), "__s"
-    )
+    e = _loop_join_hint(persist_intermediate(
+        _normalized_edges(edges, src, dst, symmetrize=True), key="__s"
+    ))
     nodes = persist_intermediate(
         e.select(F.col("__s").alias("__id")).distinct()
     )
@@ -676,15 +640,15 @@ def personalized_pagerank(
     )
     q = F.lit(float(10 ** int(quantize)))
     if not directed:
-        edged = _persist_loop_invariant(
+        edged = _loop_join_hint(persist_intermediate(
             e.join(deg, on="__s").join(
                 pvec.select(
                     F.col("__id").alias("__t"), F.col("__p").alias("__pt")
                 ),
                 on="__t",
             ),
-            "__s",
-        )
+            key="__s",
+        ))
         ranks = pvec.select("__id", F.col("__p").alias("__r"))
         for _ in range(int(iterations)):
             ranks = (
@@ -710,13 +674,10 @@ def personalized_pagerank(
     # (same trade as directed pagerank: lazy checkpoints showed no
     # reliable win — the per-round dangling broadcast serializes the
     # chain on the driver broadcast thread either way, r10 A/B)
-    from etl_core_spark.session import (
-        release_local_checkpoint,
-        track_local_checkpoint,
-    )
+    from etl_core_spark.session import checkpoint, release
 
     deg_p = persist_intermediate(deg)
-    edged = _persist_loop_invariant(e.join(deg_p, on="__s"), "__s")
+    edged = _loop_join_hint(persist_intermediate(e.join(deg_p, on="__s"), key="__s"))
     # structural (rank-independent) dangling node set, computed once;
     # its emptiness decides whether the per-round mass aggregate
     # exists at all (the directed-pagerank discipline)
@@ -739,9 +700,7 @@ def personalized_pagerank(
             "personalized_pagerank: no seed node appears in the graph"
         )
     has_dangling = 2 in flags
-    ranks = pvec.select("__id", F.col("__p").alias("__r"))
-    ranks = ranks.localCheckpoint()
-    track_local_checkpoint(ranks)
+    ranks = checkpoint(pvec.select("__id", F.col("__p").alias("__r")))
     for _ in range(int(iterations)):
         contrib = (
             ranks.join(edged, ranks["__id"] == edged["__s"])
@@ -777,9 +736,8 @@ def personalized_pagerank(
                     + d * F.coalesce(F.col("__c"), F.lit(0.0))
                 ).alias("__r"),
             )
-        new_ranks = new_ranks.localCheckpoint()
-        track_local_checkpoint(new_ranks)
-        release_local_checkpoint(ranks)
+        new_ranks = checkpoint(new_ranks)
+        release(ranks)
         ranks = new_ranks
     return ranks.select(
         F.col("__id").alias("node"),
@@ -858,41 +816,38 @@ def bfs_distances(
     """
     if int(max_hops) < 0:
         raise OperatorConfigError("bfs_distances max_hops must be >= 0")
-    from etl_core_spark.session import (
-        persist_intermediate,
-        track_local_checkpoint,
-    )
+    from etl_core_spark.session import checkpoint, persist_intermediate
 
-    e = _persist_loop_invariant(
-        _normalized_edges(edges, src, dst, symmetrize=not directed), "__s"
-    )
+    e = _loop_join_hint(persist_intermediate(
+        _normalized_edges(edges, src, dst, symmetrize=not directed), key="__s"
+    ))
     nodes = (
         e.select(F.col("__s").alias("__id"))
         .union(e.select(F.col("__t").alias("__id")))
         .distinct()
     )
-    frontier = (
+    frontier = checkpoint(
         seeds.select(F.col(seed_col).alias("__id"))
         .where(F.col("__id").isNotNull())
         .distinct()
         .join(nodes, on="__id", how="left_semi")
-        .select("__id", F.lit(0).alias("__d"))
-    ).localCheckpoint(eager=False)
-    track_local_checkpoint(frontier)
+        .select("__id", F.lit(0).alias("__d")),
+        eager=False,
+    )
     if frontier.count() == 0:
         raise OperatorConfigError(
             "bfs_distances: no seed node appears in the graph"
         )
     visited = frontier
     for hop in range(1, int(max_hops) + 1):
-        nxt = (
+        nxt = checkpoint(
             frontier.join(e, frontier["__id"] == e["__s"])
             .select(F.col("__t").alias("__id"))
             .distinct()
             .join(visited, on="__id", how="left_anti")
-            .select("__id", F.lit(hop).alias("__d"))
-        ).localCheckpoint(eager=False)
-        track_local_checkpoint(nxt)
+            .select("__id", F.lit(hop).alias("__d")),
+            eager=False,
+        )
         if nxt.count() == 0:
             break
         visited = visited.unionByName(nxt)
@@ -1009,7 +964,7 @@ def modularity(
     (m) ride as a broadcast one-row crossJoin — nothing driver-sized,
     no iteration. ``q_contrib`` floor-quantized (graph-family
     convention)."""
-    from etl_core_spark.session import track_local_checkpoint
+    from etl_core_spark.session import checkpoint, persist_intermediate
 
     # both bounded relations are consumed TWICE (sym: canon + degrees;
     # mem: two membership joins + the per-community rollup). sym's
@@ -1021,30 +976,29 @@ def modularity(
     # the consumer's job, cached for the second reference).
     #
     # Both are cached PRE-PARTITIONED on the key their consumers use
-    # (r14, the _persist_loop_invariant discipline, guide §2.4): sym
+    # (r14, the graph-loop discipline, guide §2.4): sym
     # on __s serves the degree aggregate AND canon's first membership
     # join without re-exchanging the edge relation; mem on its node
     # id serves both membership joins and the per-community rollup's
     # join. At bench scale AQE broadcasts the node-sized mem side and
     # the layout is timing-neutral; at cluster scale (SMJ) it elides
     # one edge-sized and up to three node-sized exchanges.
-    sym = _persist_loop_invariant(
+    sym = persist_intermediate(
         _normalized_edges(edges, src, dst, symmetrize=True).where(
             F.col("__s") != F.col("__t")
         ),
-        "__s",
+        key="__s",
     )
     canon = sym.where(F.col("__s") < F.col("__t"))  # each edge once
-    mem = (
+    mem = checkpoint(
         assignment.select(
             F.col(node_col).alias("__n"),
             F.col(community_col).alias("community"),
         )
         .where(F.col("__n").isNotNull())
-        .repartition(F.col("__n"))
-        .localCheckpoint(eager=False)
+        .repartition(F.col("__n")),
+        eager=False,
     )
-    track_local_checkpoint(mem)
     m_tot = canon.agg(F.count(F.lit(1)).alias("__m"))
     # internal edges per community: both endpoints in the community
     lc = (
@@ -1162,10 +1116,7 @@ def k_core(
         raise OperatorConfigError("k_core requires k >= 1")
     if int(max_rounds) < 1:
         raise OperatorConfigError("k_core requires max_rounds >= 1")
-    from etl_core_spark.session import (
-        persist_intermediate,
-        track_local_checkpoint,
-    )
+    from etl_core_spark.session import checkpoint, persist_intermediate
 
     e = persist_intermediate(
         _normalized_edges(edges, src, dst, symmetrize=True)
@@ -1175,10 +1126,7 @@ def k_core(
     prev_n = None
     for _ in range(int(max_rounds)):
         deg = alive.groupBy("__s").agg(F.count(F.lit(1)).alias("__deg"))
-        keep = deg.where(F.col("__deg") >= int(k)).localCheckpoint(
-            eager=False
-        )
-        track_local_checkpoint(keep)
+        keep = checkpoint(deg.where(F.col("__deg") >= int(k)), eager=False)
         n = keep.count()
         if n == 0 or n == prev_n:
             break
@@ -1266,18 +1214,15 @@ def louvain(
     """
     if int(iterations) < 1:
         raise OperatorConfigError("louvain iterations must be >= 1")
-    from etl_core_spark.session import (
-        persist_intermediate,
-        track_local_checkpoint,
-    )
+    from etl_core_spark.session import checkpoint, persist_intermediate
 
     # the per-round kin join reads e keyed on __t (the neighbor end)
-    e = _persist_loop_invariant(
+    e = _loop_join_hint(persist_intermediate(
         _normalized_edges(edges, src, dst, symmetrize=True).where(
             F.col("__s") != F.col("__t")
         ),
-        "__t",
-    )
+        key="__t",
+    ))
     deg = persist_intermediate(
         e.groupBy(F.col("__s").alias("__id")).agg(
             F.count(F.lit(1)).cast("long").alias("__d")
@@ -1355,10 +1300,9 @@ def louvain(
         # logical plan grows ~5^rounds. A LAZY localCheckpoint (the
         # modularity discipline) cuts lineage with no extra action:
         # it materializes inside the next round's first job
-        assign = moved.unionByName(assign.where(~movable)).localCheckpoint(
-            eager=False
+        assign = checkpoint(
+            moved.unionByName(assign.where(~movable)), eager=False
         )
-        track_local_checkpoint(assign)
     return assign.select(
         F.col("__id").alias("node"), F.col("__c").alias("community")
     )
@@ -1408,7 +1352,7 @@ def _louvain_local_move(
     under coarsening, so every level shares it. Same parity
     alternation, stay-candidate, struct-min tie-break and lazy
     localCheckpoint barrier as ``louvain`` (graph.py:1121)."""
-    from etl_core_spark.session import track_local_checkpoint
+    from etl_core_spark.session import checkpoint
 
     assign = deg.select("__id", F.col("__id").alias("__c"))
     for rnd in range(int(iterations)):
@@ -1461,10 +1405,9 @@ def _louvain_local_move(
                 )["c"].alias("__c")
             )
         )
-        assign = moved.unionByName(assign.where(~movable)).localCheckpoint(
-            eager=False
+        assign = checkpoint(
+            moved.unionByName(assign.where(~movable)), eager=False
         )
-        track_local_checkpoint(assign)
     return assign
 
 
@@ -1522,12 +1465,12 @@ def louvain_multilevel(
 
     # keyed on __t: every level's local-move sweeps join e on the
     # neighbor end (_louvain_local_move kin)
-    e = _persist_loop_invariant(
+    e = _loop_join_hint(persist_intermediate(
         _normalized_edges(edges, src, dst, symmetrize=True)
         .where(F.col("__s") != F.col("__t"))
         .withColumn("__w", F.lit(1).cast("long")),
-        "__t",
-    )
+        key="__t",
+    ))
     deg = persist_intermediate(
         e.groupBy(F.col("__s").alias("__id")).agg(
             F.sum("__w").cast("long").alias("__d")
@@ -1667,7 +1610,7 @@ def louvain_multilevel(
         lut_t = ranked.select(
             F.col("__lab").alias("__ct"), F.col("__rid").alias("__rt")
         )
-        e = _persist_loop_invariant(
+        e = _loop_join_hint(persist_intermediate(
             e.join(ca, on="__s")
             .join(cb, on="__t")
             .where(F.col("__cs") != F.col("__ct"))
@@ -1677,8 +1620,8 @@ def louvain_multilevel(
                 F.col("__rs").alias("__s"), F.col("__rt").alias("__t")
             )
             .agg(F.sum("__w").cast("long").alias("__w")),
-            "__t",
-        )
+            key="__t",
+        ))
         deg = persist_intermediate(
             assign.join(deg, on="__id")
             .join(
@@ -1843,6 +1786,8 @@ def link_predict(
         raise OperatorConfigError("link_predict weight_scale must be >= 1")
     if int(quantize) < 1:
         raise OperatorConfigError("link_predict quantize must be >= 1")
+    from etl_core_spark.session import persist_intermediate
+
     q = float(10 ** int(quantize))
     unit = 10 ** int(weight_scale)
     # cached PRE-PARTITIONED on __s (r14, the modularity treatment,
@@ -1852,11 +1797,11 @@ def link_predict(
     # side (__s is a subset of its join keys) all consume sym on
     # __s — one upfront exchange, zero at the consumers in the SMJ
     # shape.
-    sym = _persist_loop_invariant(
+    sym = persist_intermediate(
         _normalized_edges(edges, src, dst, symmetrize=True).where(
             F.col("__s") != F.col("__t")
         ),
-        "__s",
+        key="__s",
     )
     deg = sym.groupBy("__s").agg(F.count(F.lit(1)).alias("__d"))
     if method == "resource_allocation":

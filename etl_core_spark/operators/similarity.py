@@ -586,8 +586,9 @@ def ivf_index_update(
             cent = refine_centroids(c_unit, cent, kmeans_iters)
         cent.coalesce(1).write.mode("overwrite").parquet(cent_path)
     cent = spark.read.parquet(cent_path)
-    assigned = ivf_assign(c_unit, cent, "__corpus_id", "__cv", nprobe=1)
-    assigned = assigned.localCheckpoint()
+    from etl_core_spark.session import checkpoint
+
+    assigned = checkpoint(ivf_assign(c_unit, cent, "__corpus_id", "__cv", nprobe=1))
     if assigned.isEmpty():
         return  # all-zero-norm batch: never create a file-less table
     assigned.write.mode("append").partitionBy("__cid").parquet(cells_path)
@@ -622,7 +623,7 @@ def ivf_index_topk(
         raise OperatorConfigError(f"no IVF index meta at {index_path!r}")
     id_col = meta["id_col"]
     cent = spark.read.parquet(os.path.join(str(index_path), "centroids"))
-    from etl_core_spark.session import ensure_parallelism
+    from etl_core_spark.session import checkpoint, ensure_parallelism
 
     q_raw = ensure_parallelism(
         queries.select(
@@ -633,9 +634,9 @@ def ivf_index_topk(
     # checkpoint: the assignment subtree (crossJoin + window rank —
     # the dominant narrow-map cost) feeds BOTH the probed-cell collect
     # and the final join; without it the batch is assigned twice
-    q_assigned = ivf_assign(
-        q_unit, cent, "__query_id", "__qv", nprobe=nprobe
-    ).localCheckpoint()
+    q_assigned = checkpoint(
+        ivf_assign(q_unit, cent, "__query_id", "__qv", nprobe=nprobe)
+    )
     # bounded collect: at most num_centroids distinct cells
     probed = [r[0] for r in q_assigned.select("__cid").distinct().collect()]
     cells_schema = spark.read.parquet(os.path.join(str(index_path), "cells")).schema
@@ -1758,13 +1759,12 @@ def mmr_rerank(
         # joins don't each pay full shuffle-width task overhead
         .repartition(4, "__qid")
     )
-    from etl_core_spark.session import track_local_checkpoint
+    from etl_core_spark.session import checkpoint
 
     # checkpoint the shortlist ONCE: every round's winner job replays
     # its lineage, and without this each of the k rounds would re-run
     # the corpus-sized stage-1 scan (measured 5x the ANN cost)
-    state = state.localCheckpoint(eager=False)
-    track_local_checkpoint(state)
+    state = checkpoint(state, eager=False)
 
     picks = []
     for step in range(1, int(k) + 1):
@@ -1775,7 +1775,7 @@ def mmr_rerank(
         w = Window.partitionBy("__qid").orderBy(
             F.col("__score").desc(), F.col("__cid").asc()
         )
-        win = (
+        win = checkpoint(
             scored.withColumn("__rn", F.row_number().over(w))
             .where(F.col("__rn") == 1)
             .select(
@@ -1784,9 +1784,9 @@ def mmr_rerank(
                 F.col("__cv").alias("__wv"),
                 F.col("__rel").alias("__wrel"),
                 F.col("__score").alias("__wscore"),
-            )
-        ).localCheckpoint(eager=False)
-        track_local_checkpoint(win)
+            ),
+            eager=False,
+        )
         picks.append(
             win.select(
                 "__qid", "__wcid", "__wrel", "__wscore",

@@ -21,7 +21,9 @@ from typing import Any
 
 from pyspark.sql import DataFrame, Observation
 
+from etl_core_spark.plans import builder as _builder
 from etl_core_spark.plans.builder import PlanBuilder
+from etl_core_spark.session import run_scope
 from etl_core_spark.sources.base_io import SinkOperator
 
 
@@ -144,6 +146,16 @@ class JobRunner:
                 entry["lines_dismissed"] = max(0, received - forwarded)
             out[name] = entry
         return out
+
+
+def run_job(spark, config) -> RunResult:
+    """Build and run one job in its own run scope: what operators
+    cache or checkpoint at build time must outlive every retry
+    attempt, and is released when the run ends, also on error."""
+    with run_scope():
+        # looked up on the module at call time, so a wrapper installed
+        # on plans.builder.build_job (tracing) sees every build
+        return JobRunner(_builder.build_job(spark, config)).run()
 
 
 def _count_expr():

@@ -177,13 +177,11 @@ class JobStore:
     def start_execution(self, spark, job_id: str) -> ExecutionRecord:
         """Load → build → run → persist; the reference's
         POST /execution/{job_id} flow as one call."""
-        from etl_core_spark.plans.builder import build_job
-        from etl_core_spark.plans.runner import JobRunner
+        from etl_core_spark.plans.runner import run_job
 
         config = self.get_job(job_id)
         started = time.time()
-        builder = build_job(spark, config)
-        result = JobRunner(builder).run()
+        result = run_job(spark, config)
         record = ExecutionRecord(
             execution_id=uuid.uuid4().hex[:12],
             job_id=job_id,

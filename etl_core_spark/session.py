@@ -6,10 +6,26 @@ shuffle partition sizing, Arrow) are on by default so plans built by
 this engine survive a 100 TB / 1000-executor deployment without
 code changes: AQE coalesces small shuffle partitions at low SF and
 splits skewed ones at high SF.
+
+Operator intermediates belong to a run scope. Operators cache
+relations they read several times (``persist_intermediate``) and cut
+deep plans with local checkpoints (``checkpoint``); both register
+with the scope open in the calling context (``run_scope``, bound
+through a contextvar), or with an ambient scope when none is open.
+The lifetime rule: everything is released when the scope exits,
+also on error, and never earlier unless the operator itself calls
+``release`` on a frame nothing references any more, such as a
+superseded loop round. A persisted frame released early only costs
+a recompute, but a local checkpoint has no lineage: freed while a
+plan still reads it, that plan fails. So a scope must span the
+build and every action that consumes it, and each concurrent run
+needs its own scope; ``plans.runner.run_job`` opens one per run.
 """
 
 from __future__ import annotations
 
+import contextlib
+import contextvars
 import os
 import threading
 
@@ -98,113 +114,106 @@ def stop_spark() -> None:
         active.stop()
 
 
-#: operator-internal persisted DataFrames, oldest first (see
-#: ``persist_intermediate``). Process-local, driver-side only.
-_CACHED_INTERMEDIATES: list = []
-_MAX_CACHED_INTERMEDIATES = 8
-_CACHE_LOCK = threading.Lock()
+class RunScope:
+    """Owner of the frames operators cache while this scope is open:
+    persisted intermediates and local checkpoints. ``close()`` frees
+    them all; ``release(df)`` frees one early. Thread-safe, because a
+    scope can be shared by threads that copy its context."""
+
+    def __init__(self):
+        self._held: list = []  # (df, is_checkpoint), oldest first
+        self._lock = threading.Lock()
+
+    def _own(self, df, is_checkpoint: bool):
+        with self._lock:
+            self._held.append((df, is_checkpoint))
+        return df
+
+    def persist(self, df, key: str | None = None):
+        if key is not None:
+            from pyspark.sql import functions as F
+
+            df = df.repartition(F.col(key))
+        df.persist()
+        return self._own(df, False)
+
+    def checkpoint(self, df, eager: bool = True):
+        return self._own(df.localCheckpoint(eager=eager), True)
+
+    def release(self, df) -> None:
+        with self._lock:
+            mine = [h for h in self._held if h[0] is df]
+            self._held = [h for h in self._held if h[0] is not df]
+        for held in mine:
+            _free(*held)
+
+    def close(self) -> int:
+        with self._lock:
+            held, self._held = self._held, []
+        for h in reversed(held):
+            _free(*h)
+        return len(held)
 
 
-def persist_intermediate(df):
-    """``df.persist()`` with a release path.
-
-    Operators persist intermediates consumed several times within one
-    plan (MinHash shingle tables, winnowing exploded fingerprints). A
-    bare ``.persist()`` has no owner: in a long-lived session (the
-    HTTP API server) repeated jobs accumulate cached partitions until
-    executor eviction. This wrapper tracks every such persist in a
-    bounded FIFO — once more than ``_MAX_CACHED_INTERMEDIATES`` are
-    alive the oldest is unpersisted automatically, and
-    ``release_intermediates()`` drops them all (tests/servers call it
-    after the consuming action). Unpersisting is always
-    correctness-safe: any plan still referencing the DataFrame simply
-    recomputes it from lineage.
-    """
-    df.persist()
-    evicted = []
-    with _CACHE_LOCK:
-        _CACHED_INTERMEDIATES.append(df)
-        while len(_CACHED_INTERMEDIATES) > _MAX_CACHED_INTERMEDIATES:
-            evicted.append(_CACHED_INTERMEDIATES.pop(0))
-    for old in evicted:
-        try:
-            old.unpersist()
-        except Exception:
-            pass  # session may already be gone
-    return df
-
-
-def release_local_checkpoint(df) -> None:
-    """Free the executor blocks behind a ``localCheckpoint``-ed
-    DataFrame NOW instead of at JVM garbage-collection time.
-
-    ``DataFrame.unpersist`` only talks to the cache manager; the
-    checkpoint's materialized RDD (persisted MEMORY_AND_DISK by
-    ``localCheckpoint``) stays pinned until the JVM object happens to
-    be collected. In an iterative operator (``connected_components``
-    runs O(log n) rounds, each checkpointing the full edge relation)
-    that lag pins rounds × |edges| of executor storage on a
-    long-lived driver. The checkpointed plan is a ``LogicalRDD``;
-    unpersisting its RDD releases the blocks immediately. Only call
-    on checkpoints nothing references anymore: a local checkpoint has
-    NO lineage, so a released one cannot be recomputed.
-    """
+def _free(df, is_checkpoint: bool) -> None:
     try:
-        df._jdf.queryExecution().analyzed().rdd().unpersist(False)
+        if is_checkpoint:
+            # a checkpoint's blocks belong to its LogicalRDD, not the
+            # cache manager: DataFrame.unpersist would leave them
+            # pinned until the JVM happens to collect the object
+            df._jdf.queryExecution().analyzed().rdd().unpersist(False)
+        else:
+            df.unpersist()
     except Exception:
-        pass  # non-LogicalRDD plan or session already gone
+        pass  # session may already be gone
 
 
-class _LocalCheckpointHandle:
-    """Duck-types ``unpersist`` so the release bookkeeping can free
-    checkpoint blocks the same way it frees plan caches."""
-
-    def __init__(self, df):
-        self._df = df
-
-    def unpersist(self):
-        self._df.unpersist()
-        release_local_checkpoint(self._df)
+#: the scope used when no ``run_scope()`` is open (scripts, bench.py,
+#: interactive use); emptied only by ``release_intermediates()``
+_AMBIENT = RunScope()
+_SCOPE: contextvars.ContextVar[RunScope] = contextvars.ContextVar(
+    "etl_core_spark_run_scope", default=_AMBIENT
+)
 
 
-#: checkpoints still referenced by a returned result — released ONLY
-#: by ``release_intermediates()`` (no FIFO eviction: a released local
-#: checkpoint cannot be recomputed, so evicting one under load would
-#: corrupt a still-running plan, unlike the always-safe persist FIFO)
-_TRACKED_CHECKPOINTS: list = []
+@contextlib.contextmanager
+def run_scope():
+    """Open a scope that owns every intermediate operators cache in
+    this context until it exits; exit frees them, also on error."""
+    scope = RunScope()
+    token = _SCOPE.set(scope)
+    try:
+        yield scope
+    finally:
+        _SCOPE.reset(token)
+        scope.close()
 
 
-def track_local_checkpoint(df):
-    """Register a ``localCheckpoint``-ed DataFrame whose blocks back a
-    returned result, so ``release_intermediates()`` frees them once
-    the consuming action is done. Returns ``df``."""
-    with _CACHE_LOCK:
-        _TRACKED_CHECKPOINTS.append(_LocalCheckpointHandle(df))
-    return df
+def persist_intermediate(df, key: str | None = None):
+    """Persist ``df`` in the current scope. With ``key``, cache it
+    hash-partitioned on that column first: consumers that join or
+    group on ``key`` (every round of a graph loop, both sides of a
+    self-join) then reuse the cached layout instead of re-exchanging
+    the relation each time."""
+    return _SCOPE.get().persist(df, key)
+
+
+def checkpoint(df, eager: bool = True):
+    """``df.localCheckpoint(eager)`` owned by the current scope."""
+    return _SCOPE.get().checkpoint(df, eager)
+
+
+def release(df) -> None:
+    """Free ``df`` now if the current scope owns it: a superseded loop
+    round, or a checkpoint already written out."""
+    _SCOPE.get().release(df)
 
 
 def release_intermediates() -> int:
-    """Unpersist every tracked operator intermediate; returns how many
-    were released. Call after the consuming action (end of a job, a
-    test, or an API request) to leave zero cached partitions behind.
-    Thread-safe: the threaded HTTP API server can run jobs
-    concurrently, and an unlocked check-then-pop raced (unpersist is
-    always correctness-safe — consumers recompute from lineage)."""
-    n = 0
-    while True:
-        with _CACHE_LOCK:
-            if _CACHED_INTERMEDIATES:
-                df = _CACHED_INTERMEDIATES.pop()
-            elif _TRACKED_CHECKPOINTS:
-                df = _TRACKED_CHECKPOINTS.pop()
-            else:
-                break
-        try:
-            df.unpersist()
-            n += 1
-        except Exception:
-            pass
-    return n
+    """Free everything the current scope holds; returns how many
+    frames were released. Only the caller's scope is touched, so a
+    concurrent run's checkpoints survive."""
+    return _SCOPE.get().close()
 
 
 def ensure_parallelism(

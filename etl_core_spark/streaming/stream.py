@@ -395,8 +395,9 @@ def streaming_incremental_dedup(
         minhash_index_update,
         read_index_meta,
     )
+    from etl_core_spark.session import run_scope
 
-    def process(batch_df: DataFrame, batch_id: int) -> None:
+    def dedup_batch(batch_df: DataFrame) -> None:
         batch_df = batch_df.localCheckpoint()
         if batch_df.isEmpty():
             return
@@ -426,6 +427,12 @@ def streaming_incremental_dedup(
             survivors, text_col, id_col, index_path, num_hashes, bands, shingle_n
         )
         survivors.write.mode("append").parquet(out_path)
+
+    def process(batch_df: DataFrame, batch_id: int) -> None:
+        # one run scope per micro-batch: the operators' caches are
+        # released once the batch is written, not held by the stream
+        with run_scope():
+            dedup_batch(batch_df)
 
     writer = (
         stream.writeStream.outputMode("append")

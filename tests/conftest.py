@@ -1,6 +1,6 @@
 import pytest
 
-from etl_core_spark.session import get_spark
+from etl_core_spark.session import get_spark, run_scope
 
 SF_DIR = "/root/testdata/sf0.001"
 
@@ -9,6 +9,14 @@ SF_DIR = "/root/testdata/sf0.001"
 def spark():
     spark = get_spark(app_name="etl_core_spark_tests")
     yield spark
+
+
+@pytest.fixture(autouse=True)
+def _run_scope():
+    """Each test is one run: what operators cache or checkpoint during
+    it is released when it ends, which bounds the session's storage."""
+    with run_scope():
+        yield
 
 
 @pytest.fixture(scope="session")

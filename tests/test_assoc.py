@@ -99,17 +99,18 @@ def test_assoc_rules_oversized_basket_raises(spark):
 
 def test_assoc_rules_probe_raise_unpersists(spark):
     """When the max_basket_size probe raises, the three persisted
-    intermediates are released — the abandoned plan must not pin
-    cached partitions in a long-lived session (ADVICE r11)."""
-    from etl_core_spark.session import release_intermediates
+    intermediates are released as the run scope unwinds — the
+    abandoned plan must not pin cached partitions in a long-lived
+    session (ADVICE r11)."""
+    from etl_core_spark.session import run_scope
 
-    release_intermediates()
     cm = spark._jsparkSession.sharedState().cacheManager()
     assert cm.isEmpty()
     rows = [(1, f"i{j}") for j in range(30)]
     rows += [(2, f"i{j}") for j in range(30)]
     with pytest.raises(OperatorConfigError, match="max_basket_size"):
-        _rules(spark, rows, min_support_count=2, max_basket_size=10)
+        with run_scope():
+            _rules(spark, rows, min_support_count=2, max_basket_size=10)
     assert cm.isEmpty()
 
 

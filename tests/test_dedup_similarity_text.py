@@ -243,6 +243,32 @@ def test_winnow_near_dup_pairs(spark):
     assert [(r["id_a"], r["id_b"]) for r in pairs] == [(1, 2)]
     assert pairs[0]["n_shared"] >= 2
 
+    # a corpus of mostly empty docs (the NULL-fingerprint hot key)
+    # still matches the DuckDB oracle
+    import duckdb
+    import pyarrow as pa
+
+    from __spark_entry__ import _SQL_WINNOW_PAIRS
+
+    rows = [(i, ["", "   ", None][i % 3]) for i in range(60)]
+    rows += [
+        (100, f"intro alpha {common} closing"),
+        (101, f"other frame. {common}. more"),
+        (102, f"{common} and yet another copy"),
+        (103, "nothing shared with anybody here"),
+    ]
+    empties = spark.createDataFrame(rows, "doc_id long, text string")
+    got = winnow_near_dup_pairs(
+        empties, "text", "doc_id", k=8, window=4, min_shared=2, max_doc_freq=5
+    ).collect()
+    con = duckdb.connect()
+    con.register("documents", pa.table(
+        {"doc_id": [r[0] for r in rows], "text": [r[1] for r in rows]}
+    ))
+    want = con.execute(_SQL_WINNOW_PAIRS).fetchall()
+    assert sorted(map(tuple, got)) == sorted(want)
+    assert len(want) == 3
+
 
 def test_shingles_and_jaccard(spark):
     df = spark.createDataFrame([("a b c d",)], "t string")

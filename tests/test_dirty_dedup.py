@@ -240,18 +240,17 @@ def test_dedup_intermediates_released(spark, dirty_docs):
     assert _persistent_rdd_ids(spark) - before == set()
 
 
-def test_intermediate_fifo_bounds_cache(spark, dirty_docs):
+def test_run_scope_bounds_cache(spark, dirty_docs):
     # even WITHOUT an explicit release, repeated jobs must not
-    # accumulate unboundedly: the FIFO evicts past _MAX_CACHED
-    from etl_core_spark import session as S
+    # accumulate: each run's caches die with its scope
+    from etl_core_spark.session import run_scope
 
-    release_intermediates()
     before = _persistent_rdd_ids(spark)
-    for _ in range(S._MAX_CACHED_INTERMEDIATES + 3):
-        minhash_dedup_pairs(dirty_docs, "text", "doc_id").count()
-    assert len(S._CACHED_INTERMEDIATES) <= S._MAX_CACHED_INTERMEDIATES
-    release_intermediates()
-    assert _persistent_rdd_ids(spark) - before == set()
+    for _ in range(3):
+        with run_scope():
+            minhash_dedup_pairs(dirty_docs, "text", "doc_id").count()
+            assert _persistent_rdd_ids(spark) - before  # caches were live
+        assert _persistent_rdd_ids(spark) - before == set()
 
 
 # -- lazy-plan contract --------------------------------------------------
@@ -573,8 +572,8 @@ def test_cc_operator_port(spark):
 def test_cc_releases_its_caches(spark):
     """Repeated CC runs must return the persistent-RDD set EXACTLY to
     baseline once ``release_intermediates()`` runs: superseded rounds
-    are freed in-loop via ``release_local_checkpoint`` and the final
-    checkpoint rides the tracked-checkpoint release list, so nothing
+    are freed in-loop via ``release`` and the final checkpoint is
+    owned by the run scope, so nothing
     waits on the py4j-finalizer -> JVM-GC -> ContextCleaner chain (the
     pre-r8 version of this test allowed "a small constant" of GC
     stragglers and still flaked under load — deterministic release is

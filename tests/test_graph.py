@@ -984,7 +984,7 @@ def test_link_predict_empty_and_no_wedge_graphs(spark):
 def test_loop_invariant_relations_cache_prepartitioned(spark):
     """The iterative operators cache their loop-invariant edge
     relation PRE-PARTITIONED on the per-round join key
-    (graph._persist_loop_invariant, r13 optimization): at cluster
+    (``persist_intermediate(..., key=)``, r13 optimization): at cluster
     scale the per-round SMJ then reuses the cached layout instead of
     re-exchanging |E| every round. The repartition must appear in the
     result lineage, and results must be partitioning-independent."""
@@ -995,29 +995,22 @@ def test_loop_invariant_relations_cache_prepartitioned(spark):
 
     from pyspark.sql import functions as F
 
-    from etl_core_spark.operators.graph import _persist_loop_invariant
+    from etl_core_spark.session import persist_intermediate
 
     edges = spark.createDataFrame(
         [(1, 2), (2, 3), (3, 1), (3, 4), (4, 5)], "src long, dst long"
     )
-    # the helper inserts a keyed repartition below the cache; match
+    # the keyed persist inserts a repartition below the cache; match
     # node name and key SEPARATELY (not one literal prefix) so a
     # Spark-version change in plan toString formatting doesn't fail
     # the test without a real regression
-    from etl_core_spark.session import release_intermediates
-
-    try:
-        part = _persist_loop_invariant(
-            edges.select(F.col("src").alias("__s"), F.col("dst").alias("__t")),
-            "__s",
-        )
-        analyzed_part = part._jdf.queryExecution().analyzed().toString()
-        assert "RepartitionByExpression" in analyzed_part
-        assert "__s" in analyzed_part
-    finally:
-        # release through the module's FIFO discipline, not a direct
-        # unpersist that bypasses _CACHED_INTERMEDIATES bookkeeping
-        release_intermediates()
+    part = persist_intermediate(
+        edges.select(F.col("src").alias("__s"), F.col("dst").alias("__t")),
+        key="__s",
+    )
+    analyzed_part = part._jdf.queryExecution().analyzed().toString()
+    assert "RepartitionByExpression" in analyzed_part
+    assert "__s" in analyzed_part
     # the lazy-chain loops (no checkpoint barrier truncating lineage)
     # must carry the keyed repartition in their analyzed plan; the
     # directed loops checkpoint per round, so their lineage is opaque
@@ -1036,6 +1029,15 @@ def test_loop_invariant_relations_cache_prepartitioned(spark):
     assert abs(sum(ranks.values()) - 1.0) < 1e-6
 
 
+def _executed_plan(df) -> str:
+    """Run ``df`` and return the final adaptive plan that action
+    executed, without the initial plan printed after it."""
+    df.collect()
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert "isFinalPlan=true" in plan
+    return plan.split("== Initial Plan ==")[0]
+
+
 def test_loop_join_hint_conf(spark):
     """spark.graft.graph.loopJoinHint=merge makes joins against the
     pre-partitioned loop-invariant cache plan as SortMergeJoin even
@@ -1045,8 +1047,8 @@ def test_loop_join_hint_conf(spark):
     changes values."""
     from pyspark.sql import functions as F
 
-    from etl_core_spark.operators.graph import _persist_loop_invariant
-    from etl_core_spark.session import release_intermediates
+    from etl_core_spark.operators.graph import _loop_join_hint
+    from etl_core_spark.session import persist_intermediate
 
     edges = spark.createDataFrame(
         [(1, 2), (2, 3), (3, 1), (3, 4)], "src long, dst long"
@@ -1056,23 +1058,44 @@ def test_loop_join_hint_conf(spark):
     )
 
     def round_join(rel):
-        out = probe.join(rel, probe["__id"] == rel["__s"])
-        out.write.format("noop").mode("overwrite").save()
-        return out._jdf.queryExecution().executedPlan().toString()
+        return probe.join(rel, probe["__id"] == rel["__s"])
+
+    def loop_relation():
+        return _loop_join_hint(persist_intermediate(edges, key="__s"))
 
     try:
-        default_plan = round_join(_persist_loop_invariant(edges, "__s"))
+        default_plan = _executed_plan(round_join(loop_relation()))
         assert "BroadcastHashJoin" in default_plan  # tiny -> AQE broadcasts
         spark.conf.set("spark.graft.graph.loopJoinHint", "merge")
-        hinted = _persist_loop_invariant(edges, "__s")
-        hinted_plan = round_join(hinted)
+        hinted = round_join(loop_relation())
+        hinted_plan = _executed_plan(hinted)
         assert "SortMergeJoin" in hinted_plan
         assert "BroadcastHashJoin" not in hinted_plan
         # identical values either way
-        rows = lambda rel: sorted(  # noqa: E731
-            map(tuple, probe.join(rel, probe["__id"] == rel["__s"]).collect())
+        broadcast = round_join(persist_intermediate(edges, key="__s").hint("broadcast"))
+        assert sorted(map(tuple, hinted.collect())) == sorted(
+            map(tuple, broadcast.collect())
         )
-        assert rows(hinted) == rows(_persist_loop_invariant(edges, "__s").hint("broadcast"))
     finally:
         spark.conf.unset("spark.graft.graph.loopJoinHint")
-        release_intermediates()
+
+
+def test_loop_join_hint_skips_single_pass_joins(spark):
+    """The merge hint saves a per-round broadcast rebuild, so only the
+    iterative loops take it: with it set, the single-pass modularity
+    joins still broadcast."""
+    from etl_core_spark.operators.graph import modularity
+
+    edges = spark.createDataFrame(
+        [(1, 2), (2, 3), (3, 1), (3, 4), (4, 5)], "src long, dst long"
+    )
+    assignment = spark.createDataFrame(
+        [(1, 1), (2, 1), (3, 1), (4, 4), (5, 4)], "node long, community long"
+    )
+    spark.conf.set("spark.graft.graph.loopJoinHint", "merge")
+    try:
+        plan = _executed_plan(modularity(edges, assignment))
+    finally:
+        spark.conf.unset("spark.graft.graph.loopJoinHint")
+    assert "BroadcastHashJoin" in plan
+    assert "SortMergeJoin" not in plan

@@ -106,6 +106,10 @@ def test_aqe_splits_skewed_join_partitions(spark):
         "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes": "64KB",
         "spark.sql.adaptive.advisoryPartitionSizeInBytes": "32KB",
         "spark.sql.adaptive.coalescePartitions.minPartitionSize": "8KB",
+        # fixed width: inherited from the core count, 4 partitions
+        # leave no partition large enough relative to the median to
+        # count as skewed
+        "spark.sql.shuffle.partitions": "32",
     }
     old = {}
     for k, v in confs.items():
