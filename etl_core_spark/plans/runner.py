@@ -5,7 +5,8 @@ Replaces the reference's execution layer
 a constant-backoff retry strategy per attempt, metrics aggregation
 ``_finalize_success:657-692``). Here an *attempt* is simply re-running
 the sink actions: the plan is immutable and lazy, so retry is safe
-re-execution (idempotent for overwrite-mode sinks).
+re-execution (idempotent for overwrite-mode sinks). A failure in
+``NOT_RETRYABLE`` would only repeat, so it fails the run at once.
 
 Metrics use ``df.observe`` — row counts ride the same pass as the
 write, instead of the reference's extra
@@ -19,12 +20,21 @@ import dataclasses
 import time
 from typing import Any
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, Observation
 
+from etl_core_spark.functions.casts import CastError
+from etl_core_spark.operators.base import OperatorConfigError
 from etl_core_spark.plans import builder as _builder
 from etl_core_spark.plans.builder import PlanBuilder
+from etl_core_spark.plans.config import JobConfigError
 from etl_core_spark.session import run_scope
 from etl_core_spark.sources.base_io import SinkOperator
+
+#: failures a re-run of the same plan cannot fix: an unresolvable or
+#: conflicting plan (missing column, missing input path, existing
+#: output path under mode "error"), a bad config, an impossible cast
+NOT_RETRYABLE = (AnalysisException, OperatorConfigError, JobConfigError, CastError)
 
 
 @dataclasses.dataclass
@@ -50,21 +60,24 @@ class JobRunner:
         for attempt in range(1, max_attempts + 1):
             try:
                 metrics = self._run_once()
-                return RunResult(
-                    job_name=job.name,
-                    status="SUCCESS",
-                    attempts=attempt,
-                    wall_seconds=time.monotonic() - start,
-                    metrics=metrics,
-                )
             except Exception as exc:  # noqa: BLE001 - retry boundary
                 last_error = f"{type(exc).__name__}: {exc}"
-                if attempt < max_attempts and self.retry_wait_seconds:
+                if attempt == max_attempts or isinstance(exc, NOT_RETRYABLE):
+                    break
+                if self.retry_wait_seconds:
                     time.sleep(self.retry_wait_seconds)
+                continue
+            return RunResult(
+                job_name=job.name,
+                status="SUCCESS",
+                attempts=attempt,
+                wall_seconds=time.monotonic() - start,
+                metrics=metrics,
+            )
         return RunResult(
             job_name=job.name,
             status="FAILED",
-            attempts=max_attempts,
+            attempts=attempt,
             wall_seconds=time.monotonic() - start,
             error=last_error,
         )

@@ -2,12 +2,141 @@
 
 from __future__ import annotations
 
+import collections
+import re
+import threading
+import weakref
 from typing import Optional
 
+from py4j.protocol import Py4JError
 from pyspark.sql import DataFrame, SparkSession
 
 from etl_core_spark.operators.base import Operator, OperatorConfigError, PortMap
 from etl_core_spark.schema import Schema
+
+#: Session SQL confs that file-source schema inference reads. Their
+#: values are part of the inferred-schema cache key, so flipping one
+#: re-infers: column-name case folding, the session time zone and
+#: default timestamp type (CSV/JSON timestamp inference), the parquet
+#: binary/INT96/NTZ/nanos type mappings, footer merging for parquet
+#: and ORC, the ORC reader implementation, partition-value type
+#: inference, and whether corrupt files are skipped while inferring.
+INFERENCE_CONFS = (
+    "spark.sql.caseSensitive",
+    "spark.sql.session.timeZone",
+    "spark.sql.timestampType",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.mergeSchema",
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.orc.mergeSchema",
+    "spark.sql.orc.impl",
+    "spark.sql.sources.partitionColumnTypeInference.enabled",
+    "spark.sql.files.ignoreCorruptFiles",
+)
+
+# Hadoop ``FileStatus.toString``: the fields the fingerprint keeps
+_FILE_STATUS = re.compile(
+    r"path=(.*?); isDirectory=\w+; length=(\d+);.*?modification_time=(-?\d+);"
+)
+# statuses fetched per Py4J call: a reply over ~8 KB stalls ~40 ms on
+# TCP delayed ACK (measured), a batch of 8 stays under it for paths up
+# to ~700 characters
+_STATUS_BATCH = 8
+
+
+def listed_files(df: DataFrame) -> Optional[tuple]:
+    """(path, length, modification time) of every leaf file the file
+    index behind ``df`` listed, in listing order: exactly the files
+    its scan will read. None when ``df`` is not a plain file-index
+    read (a DataSource V2 relation) or a status does not parse."""
+    try:
+        files = (
+            df._jdf.queryExecution().analyzed().relation().location().allFiles()
+        )
+    except Py4JError:
+        return None
+    n = files.length()
+    text = "\n".join(
+        files.slice(i, i + _STATUS_BATCH).mkString("\n")
+        for i in range(0, n, _STATUS_BATCH)
+    )
+    listed = tuple(m.groups() for m in _FILE_STATUS.finditer(text))
+    return listed if len(listed) == n else None
+
+
+class InferredSchemaCache:
+    """Schemas Spark inferred for file sources of one SparkSession,
+    so a re-read of an unchanged file set builds its relation with
+    ``.schema(cached)`` and runs no schema-inference Spark job (a
+    parquet footer read, the CSV header ``take(1)``, a full JSON
+    scan) nor ORC's driver-side footer read.
+
+    The key is the format, the path, every reader option and the
+    ``INFERENCE_CONFS`` values. An entry holds the schema and the
+    ``listed_files`` fingerprint of the relation it was inferred
+    from. A hit builds the relation with the cached schema, which
+    lists the path as any read does (and raises what any read raises
+    while listing, such as PATH_NOT_FOUND), and returns it only if
+    that listing has the same fingerprint. Otherwise the path is read
+    again with inference, so the result and any error are those of
+    an uncached read, and the entry is replaced. Blind spot: a
+    rewrite that keeps a file's length and modification time (same
+    millisecond) still hits; a declared schema has no such case.
+
+    Bounded LRU; thread-safe, because the API server builds jobs on
+    concurrent threads."""
+
+    CAPACITY = 64
+
+    def __init__(self):
+        self._entries: collections.OrderedDict = collections.OrderedDict()
+        self._lock = threading.Lock()
+
+    def read(
+        self, spark: SparkSession, fmt: str, path: str, options: dict
+    ) -> DataFrame:
+        key = (
+            fmt,
+            path,
+            tuple(sorted((k, str(v)) for k, v in options.items())),
+            tuple(spark.conf.get(c) for c in INFERENCE_CONFS),
+        )
+        with self._lock:
+            entry = self._entries.get(key)
+            if entry is not None:
+                self._entries.move_to_end(key)
+        if entry is not None:
+            schema, files = entry
+            df = spark.read.format(fmt).options(**options).schema(schema).load(path)
+            if listed_files(df) == files:
+                return df
+        df = spark.read.format(fmt).options(**options).load(path)
+        files = listed_files(df)
+        if files is not None:
+            with self._lock:
+                self._entries[key] = (df.schema, files)
+                self._entries.move_to_end(key)
+                while len(self._entries) > self.CAPACITY:
+                    self._entries.popitem(last=False)
+        return df
+
+
+_SESSION_CACHES: "weakref.WeakKeyDictionary[SparkSession, InferredSchemaCache]" = (
+    weakref.WeakKeyDictionary()
+)
+_SESSION_CACHES_LOCK = threading.Lock()
+
+
+def inferred_schemas(spark: SparkSession) -> InferredSchemaCache:
+    """The inferred-schema cache of ``spark``; it lives and dies with
+    the session object, so a new session starts empty."""
+    with _SESSION_CACHES_LOCK:
+        cache = _SESSION_CACHES.get(spark)
+        if cache is None:
+            cache = _SESSION_CACHES[spark] = InferredSchemaCache()
+        return cache
 
 
 class SourceOperator(Operator):
@@ -35,6 +164,17 @@ class SourceOperator(Operator):
         if isinstance(s, Schema):
             return s.to_struct_type()
         return Schema.from_dict(s).to_struct_type()
+
+    def read_files(self, fmt: str, **options) -> DataFrame:
+        """Read ``filepath`` as ``fmt`` with reader ``options``: with
+        the declared schema if there is one, else through the
+        session's ``InferredSchemaCache``."""
+        spark = self._session()
+        path = str(self.config["filepath"])
+        schema = self.declared_schema()
+        if schema is None:
+            return inferred_schemas(spark).read(spark, fmt, path, options)
+        return spark.read.format(fmt).options(**options).schema(schema).load(path)
 
     def apply(self, inputs: PortMap) -> PortMap:
         if inputs:

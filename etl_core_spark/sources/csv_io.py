@@ -34,21 +34,18 @@ class ReadCsv(SourceOperator):
             raise OperatorConfigError(f"separator must be one of {SEPARATORS}")
 
     def read(self) -> DataFrame:
-        spark = self._session()
-        reader = (
-            spark.read.option("header", True)
-            .option("delimiter", self.config.get("separator", ","))
+        # all-string parity with the reference's dtype=str read:
+        # inferSchema=False (Spark's default, pinned explicitly) types
+        # every column StringType, but naming the columns still reads
+        # the header row with a one-row Spark job at build time. The
+        # inferred-schema cache skips that job while the file is
+        # unchanged; a declared schema skips it always.
+        return self.read_files(
+            "csv",
+            header=True,
+            delimiter=self.config.get("separator", ","),
+            inferSchema=False,
         )
-        schema = self.declared_schema()
-        if schema is not None:
-            reader = reader.schema(schema)
-        else:
-            # all-string parity with the reference's dtype=str read:
-            # inferSchema=False (Spark's default, pinned explicitly)
-            # already yields all-StringType columns from the header —
-            # no separate schema-probe read needed
-            reader = reader.option("inferSchema", False)
-        return reader.csv(str(self.config["filepath"]))
 
 
 @register_operator("write_csv")

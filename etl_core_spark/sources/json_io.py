@@ -38,15 +38,10 @@ class ReadJson(SourceOperator):
             raise OperatorConfigError("read_json requires 'filepath'")
 
     def read(self) -> DataFrame:
-        spark = self._session()
         path = str(self.config["filepath"])
-        reader = spark.read
-        schema = self.declared_schema()
-        if schema is not None:
-            reader = reader.schema(schema)
         if not is_line_delimited(path) and not self.config.get("lines", False):
-            reader = reader.option("multiLine", True)
-        return reader.json(path)
+            return self.read_files("json", multiLine=True)
+        return self.read_files("json")
 
 
 @register_operator("write_json")

@@ -22,12 +22,7 @@ class ReadOrc(SourceOperator):
             raise OperatorConfigError("read_orc requires 'filepath'")
 
     def read(self) -> DataFrame:
-        spark = self._session()
-        reader = spark.read
-        schema = self.declared_schema()
-        if schema is not None:
-            reader = reader.schema(schema)
-        return reader.orc(str(self.config["filepath"]))
+        return self.read_files("orc")
 
 
 @register_operator("write_orc")

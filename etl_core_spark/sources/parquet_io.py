@@ -22,12 +22,7 @@ class ReadParquet(SourceOperator):
             raise OperatorConfigError("read_parquet requires 'filepath'")
 
     def read(self) -> DataFrame:
-        spark = self._session()
-        reader = spark.read
-        schema = self.declared_schema()
-        if schema is not None:
-            reader = reader.schema(schema)
-        return reader.parquet(str(self.config["filepath"]))
+        return self.read_files("parquet")
 
 
 @register_operator("write_parquet")

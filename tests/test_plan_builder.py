@@ -142,6 +142,32 @@ def test_retry_then_success(spark, tmp_path, monkeypatch):
     assert result.attempts == 2
 
 
+def test_analysis_error_is_not_retried(spark, tmp_path):
+    """Writing with mode "error" onto an existing path fails the same
+    way every time: one attempt, not num_of_retries + 1."""
+    src = make_csv(tmp_path)
+    out_dir = tmp_path / "exists"
+    out_dir.mkdir()
+    job = {
+        "name": "no_retry_job",
+        "num_of_retries": 2,
+        "components": [
+            {
+                "name": "read", "comp_type": "read_csv", "filepath": str(src),
+                "routes": {"out": [{"to": "sink", "in_port": "in"}]},
+            },
+            {
+                "name": "sink", "comp_type": "write_csv",
+                "filepath": str(out_dir), "mode": "error",
+            },
+        ],
+    }
+    result = JobRunner(build_job(spark, job)).run()
+    assert result.status == "FAILED"
+    assert result.attempts == 1
+    assert result.error.startswith("AnalysisException: [PATH_ALREADY_EXISTS]")
+
+
 def test_job_config_json_roundtrip(tmp_path):
     cfg = {
         "name": "j",
