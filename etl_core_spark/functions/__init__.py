@@ -7,7 +7,7 @@ at plan-build time, never per row.
 """
 
 from etl_core_spark.functions.rules import ComparisonRule, LogicalRule, Rule, compile_rule, rule_from_dict
-from etl_core_spark.functions.casts import CastRule, OnError, compile_cast
+from etl_core_spark.functions.casts import CastRule
 
 __all__ = [
     "ComparisonRule",
@@ -16,6 +16,4 @@ __all__ = [
     "compile_rule",
     "rule_from_dict",
     "CastRule",
-    "OnError",
-    "compile_cast",
 ]

@@ -7,15 +7,15 @@ type_conversion_component.py:57-145`` and
 
 - Rule: ``{column_path, target, on_error}``; paths support dots into
   structs and ``*`` for array elements (``payload.items.*.price``).
-- ``on_error='raise'``: first unconvertible value fails the query
-  (ANSI cast).
+- ``on_error='raise'``: the first unconvertible value fails the
+  build (the operator probes the rule's failure flag).
 - ``on_error='null'``: unconvertible → NULL (``try_cast``).
 - ``on_error='skip'``: the reference keeps the original value,
   producing a mixed-dtype pandas column — impossible in Spark's typed
   model. Documented deviation (SURVEY.md §7.4): 'skip' here keeps the
   original value only when it round-trips, else NULL, and the column
   is typed to the target; callers needing the untouched originals
-  route them via a filter on the convertibility predicate instead.
+  take them from the type_conversion operator's ``errors`` port.
 
 Semantics tables reproduced from the reference
 (``type_conversion_helper.py:51-53,92-144``):
@@ -34,9 +34,8 @@ Catalyst expressions, codegen'd, no Python per row.
 from __future__ import annotations
 
 import dataclasses
-from typing import Optional
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -81,10 +80,6 @@ class CastRule:
             raise CastError(f"unknown cast target: {self.target!r}")
         if self.on_error not in ON_ERROR:
             raise CastError(f"unknown on_error policy: {self.on_error!r}")
-
-
-# Back-compat alias used in docs/tests
-OnError = ON_ERROR
 
 
 def _normalized_string(col: Column) -> Column:
@@ -194,36 +189,13 @@ def _convert_stages(col, source_type, target):
 def _convert(col: Column, source_type: T.DataType, target: str) -> Column:
     """Build the conversion expression; unconvertible values → NULL.
 
-    Single-expression composition of ``_convert_stages`` (for filter
-    predicates and nested-path rebuilds where a staged projection
-    isn't available). The on_error policy is layered on top by
-    ``compile_cast``.
+    Single-expression composition of ``_convert_stages``, for
+    nested-path rebuilds where a staged projection isn't available.
+    The on_error policy is layered on top by the type_conversion
+    operator.
     """
     prep, finish = _convert_stages(col, source_type, target)
     return finish(prep) if prep is not None else finish(col)
-
-
-def compile_cast(
-    df: DataFrame, rule: CastRule, source_type: Optional[T.DataType] = None
-) -> Column:
-    """Compile one cast rule against ``df``'s schema to a Column.
-
-    Supports dotted struct paths and ``*`` array-element paths by
-    rebuilding the enclosing struct/array with ``withField`` /
-    ``transform`` (done in the operator; here we compile the leaf
-    expression for a directly-addressable column).
-    """
-    path = rule.column_path
-    if source_type is None:
-        source_type = _resolve_type(df.schema, path)
-    col = F.col(path)
-    converted = _convert(col, source_type, rule.target)
-    if rule.on_error == "skip" and rule.target != "string":
-        # keep-original where convertible-check fails is not typable;
-        # nearest semantics: convert when possible, else NULL — same
-        # output as 'null'. Deviation documented in module docstring.
-        return converted
-    return converted
 
 
 def _resolve_type(schema: T.StructType, path: str) -> T.DataType:
@@ -240,26 +212,3 @@ def _resolve_type(schema: T.StructType, path: str) -> T.DataType:
         else:
             raise CastError(f"cannot descend into {current} at '{part}' for path '{path}'")
     return current
-
-
-def raise_on_unconvertible(
-    df: DataFrame, rule: CastRule, converted_name: str
-) -> DataFrame:
-    """on_error='raise' enforcement: fail the job if any non-null
-    source value converted to NULL.
-
-    Uses a single aggregate over the already-computed conversion
-    column — one extra pass, no Python loop. At cluster scale this is
-    a map-side count reduced to one row.
-    """
-    src = F.col(rule.column_path)
-    bad = df.filter(
-        src.isNotNull() & ~_null_marker(src) & F.col(converted_name).isNull()
-    )
-    first_bad = bad.select(src.cast("string").alias("v")).limit(1).collect()
-    if first_bad:
-        raise CastError(
-            f"type_conversion(on_error=raise): value {first_bad[0]['v']!r} in "
-            f"'{rule.column_path}' is not convertible to {rule.target}"
-        )
-    return df

@@ -68,7 +68,7 @@ def select_unit(df, id_expr_alias, vec_col: str, out_alias: str):
     the lambda body), so CollapseProject keeps the staging projection
     separate instead of inlining the aggregate back into the lambda —
     the same Catalyst contract the cast ladders rely on
-    (operators/type_conversion.py:_staged_convert). At dim=64 this is
+    (operators/type_conversion.py:_stage_convert). At dim=64 this is
     a ~60× cut in normalization arithmetic; the previous inlined form
     re-ran the norm aggregate for every element."""
     id_expr, id_alias = id_expr_alias

@@ -5,7 +5,7 @@ become typed columns via ONE ``from_json`` parse. The parse is
 staged in its own projection (non-cheap + referenced once per
 declared field), so CollapseProject cannot inline a separate parse
 per output column — the same Catalyst contract the cast ladders use
-(operators/type_conversion.py:_staged_convert); a plan test pins
+(operators/type_conversion.py:_stage_convert); a plan test pins
 ``from_json`` to exactly one occurrence. Malformed JSON rows yield
 NULL fields (from_json's PERMISSIVE default), matching the engine's
 on_error='null' conversion posture.

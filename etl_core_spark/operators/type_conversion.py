@@ -6,102 +6,82 @@ type_conversion_component.py:57-145``; semantics tables and the
 ``*`` array-path handling in
 ``receivers/.../type_conversion/type_conversion_helper.py:26-277``).
 
+Each rule's cast ladder is compiled once, in config order, into one
+staged frame, and all three uses read that compile:
+
+- ``out`` takes each column's last converted value, in the input's
+  column order;
+- ``errors`` keeps the rows where some top-level rule failed, with
+  their original columns. A rule failed on a row when the value it
+  received is non-null and not a null marker, yet converted to NULL;
+- an ``on_error='raise'`` rule probes its own failure flag at build
+  time and raises ``CastError`` with the first offending value.
+
+A path named by several rules chains: each rule converts the value
+the previous rule produced, and its failure flag judges that value.
+With rules ``integer`` then ``boolean``, ``"1.0"`` becomes ``True``
+and is no error, while ``"2"`` (an integer, but no boolean) is one.
+
 Paths: ``a.b`` descends into structs, ``a.items.*.price`` converts
 each array element's field. Struct rebuilds use ``withField`` and
 array rebuilds use ``F.transform`` — no explode/regroup shuffle, the
-conversion stays a narrow map.
+conversion stays a narrow map. Nested and ``*`` paths take no part in
+``errors`` or the raise check: an element's failure is not
+row-addressable.
 """
 
 from __future__ import annotations
+
+import functools
+import operator
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from etl_core_spark.functions.casts import (
-    CastRule,
-    _convert,
-    _convert_stages,
-    _resolve_type,
-    raise_on_unconvertible,
-)
+from etl_core_spark.functions import casts
+from etl_core_spark.functions.casts import CastError, CastRule
 from etl_core_spark.operators.base import Operator, OperatorConfigError, PortMap, register_operator
 
 
-def _staged_convert(df: DataFrame, name: str, out_name: str, src_type: T.DataType, target: str) -> DataFrame:
-    """Convert a top-level column via a two-projection plan: the parse
-    intermediate is materialized once as its own (non-cheap,
-    multi-referenced) projection, so CollapseProject cannot inline it
-    into every reference of the finishing ladder."""
-    prep, finish = _convert_stages(F.col(name), src_type, target)
+def _stage_convert(df: DataFrame, value: Column, src_type: T.DataType, target: str, out_name: str) -> DataFrame:
+    """Add ``value`` converted to ``target`` as column ``out_name`` via
+    a two-projection plan: the parse intermediate is materialized once
+    as its own (non-cheap, multi-referenced) projection, so
+    CollapseProject cannot inline it into every reference of the
+    finishing ladder. The intermediate stays on the frame as
+    ``<out_name>_prep``."""
+    prep, finish = casts._convert_stages(value, src_type, target)
     if prep is None:
-        return df.withColumn(out_name, finish(F.col(name)))
-    tmp = f"__tc_prep_{name}"
-    return (
-        df.withColumn(tmp, prep)
-        .withColumn(out_name, finish(F.col(tmp)))
-        .drop(tmp)
-    )
+        return df.withColumn(out_name, finish(value))
+    tmp = f"{out_name}_prep"
+    return df.withColumn(tmp, prep).withColumn(out_name, finish(F.col(tmp)))
 
 
-def _apply_rule(df: DataFrame, rule: CastRule) -> DataFrame:
-    parts = rule.column_path.split(".")
-    src_type = _resolve_type(df.schema, rule.column_path)
-
-    if rule.on_error == "raise" and "*" not in parts and len(parts) == 1:
-        # one aggregate pass over the conversion expr; fails fast with
-        # the first offending value (≈ reference helper:149-162)
-        probe = _staged_convert(df, parts[0], "__conv_probe", src_type, rule.target)
-        raise_on_unconvertible(probe, rule, "__conv_probe")
-
-    if "*" not in parts and len(parts) == 1:
-        return _staged_convert(df, parts[0], parts[0], src_type, rule.target)
-    return df.withColumn(
-        parts[0],
-        _rebuild(
-            F.col(parts[0]), _subtype(df.schema, parts[0]), parts[1:], src_type, rule.target
-        ),
-    )
-
-
-def _subtype(schema: T.StructType, name: str) -> T.DataType:
-    match = next((f for f in schema.fields if f.name == name), None)
-    if match is None:
-        raise OperatorConfigError(f"column {name!r} not found")
-    return match.dataType
-
-
-def _rebuild(col: Column, dtype: T.DataType, rest: list[str], leaf_type: T.DataType, target: str) -> Column:
-    """Recursively rebuild struct/array columns, converting the leaf."""
+def _rebuild(col: Column, dtype: T.DataType, rest: list[str], target: str) -> Column:
+    """Recursively rebuild struct/array columns, converting the leaf.
+    The path was resolved against ``dtype`` already."""
     if not rest:
-        return _convert(col, leaf_type, target)
+        return casts._convert(col, dtype, target)
     head, tail = rest[0], rest[1:]
-    if head == "*":
-        if not isinstance(dtype, T.ArrayType):
-            raise OperatorConfigError("'*' path segment requires an array column")
-        elem = dtype.elementType
-        return F.transform(col, lambda x: _rebuild(x, elem, tail, leaf_type, target))
-    if not isinstance(dtype, T.StructType):
-        raise OperatorConfigError(f"cannot descend into {dtype} at {head!r}")
-    sub = next((f for f in dtype.fields if f.name == head), None)
-    if sub is None:
-        raise OperatorConfigError(f"field {head!r} not found in struct")
-    return col.withField(head, _rebuild(col.getField(head), sub.dataType, tail, leaf_type, target))
+    if isinstance(dtype, T.ArrayType):  # head is "*"
+        return F.transform(col, lambda x: _rebuild(x, dtype.elementType, tail, target))
+    return col.withField(head, _rebuild(col.getField(head), dtype[head].dataType, tail, target))
 
 
-def _unconvertible_predicate(df: DataFrame, rule: CastRule):
-    """True where this rule would turn a real (non-null, non-marker)
-    source value into NULL. Only direct top-level paths participate —
-    nested/array element failures aren't row-addressable."""
-    from etl_core_spark.functions.casts import _null_marker
-
-    parts = rule.column_path.split(".")
-    if "*" in parts or len(parts) > 1:
-        return None
-    src = F.col(rule.column_path)
-    src_type = _resolve_type(df.schema, rule.column_path)
-    converted = _convert(src, src_type, rule.target)
-    return src.isNotNull() & ~_null_marker(src) & converted.isNull()
+def _with_leaf(dtype: T.DataType, parts: list[str], leaf: T.DataType) -> T.DataType:
+    """``dtype`` with the type at the (already resolved) path ``parts``
+    replaced by ``leaf``: the schema a rule leaves behind, tracked
+    without asking Spark."""
+    if not parts:
+        return leaf
+    head, tail = parts[0], parts[1:]
+    if isinstance(dtype, T.ArrayType):
+        return T.ArrayType(_with_leaf(dtype.elementType, tail, leaf), dtype.containsNull)
+    return T.StructType([
+        T.StructField(f.name, _with_leaf(f.dataType, tail, leaf), f.nullable) if f.name == head else f
+        for f in dtype.fields
+    ])
 
 
 @register_operator("type_conversion")
@@ -128,15 +108,40 @@ class TypeConversionOperator(Operator):
 
     def apply(self, inputs: PortMap) -> PortMap:
         df = self.single_input(inputs)
-        failed = None
-        for rule in self.rules:
-            pred = _unconvertible_predicate(df, rule)
-            if pred is not None:
-                failed = pred if failed is None else (failed | pred)
-        out = df
-        for rule in self.rules:
-            out = _apply_rule(out, rule)
+        schema = df.schema
+        staged = df
+        latest: dict[str, str] = {}  # column -> staged column holding its latest value
+        internal: list[str] = []
+        flags: list[Column] = []
+        for i, rule in enumerate(self.rules):
+            parts = rule.column_path.split(".")
+            name = parts[0]
+            src_type = casts._resolve_type(schema, rule.column_path)
+            value = F.col(latest.get(name, name))
+            conv = f"__tc_{i}"
+            if len(parts) > 1:
+                staged = staged.withColumn(conv, _rebuild(value, schema[name].dataType, parts[1:], rule.target))
+            else:
+                staged = _stage_convert(staged, value, src_type, rule.target, conv)
+                internal.append(f"{conv}_prep")
+                flag = value.isNotNull() & ~casts._null_marker(value) & F.col(conv).isNull()
+                flags.append(flag)
+                if rule.on_error == "raise":
+                    # fails fast with the first offending value
+                    # (≈ reference helper:149-162)
+                    bad = staged.filter(flag).select(value.cast("string").alias("v")).limit(1).collect()
+                    if bad:
+                        raise CastError(
+                            f"type_conversion(on_error=raise): value {bad[0]['v']!r} in "
+                            f"'{rule.column_path}' is not convertible to {rule.target}"
+                        )
+            schema = _with_leaf(schema, parts, casts._TARGET_SPARK[rule.target])
+            latest[name] = conv
+            internal.append(conv)
+        out = staged.withColumns({c: F.col(v) for c, v in latest.items()}).drop(*internal)
         errors = (
-            df.filter(failed) if failed is not None else df.limit(0)
+            staged.filter(functools.reduce(operator.or_, flags)).drop(*internal)
+            if flags
+            else df.limit(0)
         )
         return {"out": out, "errors": errors}

@@ -35,18 +35,16 @@ class PlanBuilder:
         spark: SparkSession,
         job: JobConfig,
         strict_schemas: bool = False,  # keep in sync with build_job
-        observe_metrics: bool = True,
     ):
         self.spark = spark
         self.job = job
         self.strict_schemas = strict_schemas
-        self.observe_metrics = observe_metrics
         self.operators: dict[str, Operator] = {}
         self.outputs: dict[str, dict[str, DataFrame]] = {}
         self.sinks: list[str] = []
         self.sink_inputs: dict[str, DataFrame] = {}
         #: per-component {out_port: Observation} for ports on a live
-        #: path to a sink (populated when observe_metrics)
+        #: path to a sink
         self.observations: dict[str, dict[str, Any]] = {}
         #: inbound edges per component: [(src_name, src_port, in_port)]
         self.inbound_edges: dict[str, list[tuple[str, str, str]]] = {}
@@ -139,7 +137,7 @@ class PlanBuilder:
                 for edge in edges:
                     inbound[edge.to].append((comp.name, out_port, edge.in_port))
         self.inbound_edges = inbound
-        live = self._live_components() if self.observe_metrics else set()
+        live = self._live_components()
 
         for name in order:
             comp = self.job.component(name)
@@ -170,7 +168,7 @@ class PlanBuilder:
             else:
                 outputs = op.apply(inputs)
             self._check_port_schemas(comp, outputs)
-            if self.observe_metrics and name in live and not isinstance(op, SinkOperator):
+            if name in live and not isinstance(op, SinkOperator):
                 outputs = self._observe_outputs(comp, outputs, live)
             self.outputs[name] = outputs
         return self.outputs

@@ -95,16 +95,8 @@ class JobRunner:
             # Observation.get block forever on the stale listener
             obs = Observation(f"{sink_name}_rows_{uuid.uuid4().hex[:8]}")
             observed: DataFrame = df.observe(obs, _count_expr())
-            written = op.write(observed)
-            # foreachPartition-based sinks (jdbc/mongo DML) run an RDD
-            # action that never completes the observation — they
-            # return their accumulator-counted rows instead; waiting
-            # on obs.get there would hang the runner forever
-            metrics[sink_name] = {
-                "lines_received": (
-                    int(written) if written is not None else obs.get["count"]
-                )
-            }
+            op.write(observed)
+            metrics[sink_name] = {"lines_received": obs.get["count"]}
         metrics.update(self._component_metrics(metrics))
         return metrics
 

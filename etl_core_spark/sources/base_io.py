@@ -204,9 +204,7 @@ class SinkOperator(Operator):
         (``foreachPartition``) never fires the
         QueryExecutionListener, starving every upstream
         ``Observation.get`` forever. Per-partition imperative writes
-        (DML, bulk wire protocols) go through ``run_partition_dml``.
-        May return a row count; the runner prefers it over the sink
-        observation when present."""
+        (DML, bulk wire protocols) go through ``run_partition_dml``."""
         raise NotImplementedError
 
 

@@ -11,8 +11,8 @@ Parity with the reference database components
   reads in parallel, a strict upgrade.
 - write: INSERT (append) / TRUNCATE+insert (overwrite+truncate) map
   to native JDBC writes; UPSERT / UPDATE have no JDBC-native form, so
-  they compile per-dialect DML executed by ``foreachPartition``
-  batches (mirroring the reference's dialect SQL:
+  they compile per-dialect DML executed per partition by
+  ``base_io.run_partition_dml`` (mirroring the reference's dialect SQL:
   ``ON CONFLICT DO UPDATE`` — postgresql_write.py:58-69,
   ``ON DUPLICATE KEY UPDATE`` — mariadb_write.py:58-65,
   ``MERGE`` — sqlserver_write.py:59-69) but in executor-parallel
@@ -29,7 +29,7 @@ Wire coverage in this container (no JDBC driver jars, no psycopg2):
   when psycopg2 is absent.
 - MariaDB / SQL Server: no servers — DML generation and config
   validation are unit-tested, and the executor-side DML wire path
-  (``foreachPartition`` → ``_execute_dml_partition``) runs
+  (``run_partition_dml`` → ``_execute_dml_partition``) runs
   end-to-end against an in-process SQLite DB via the
   ``jdbc:sqlite:`` DBAPI mapping (the postgres upsert/update SQL is
   valid SQLite verbatim).

@@ -12,7 +12,7 @@ Parity with the reference Mongo components
   the connector jar is absent: pymongo on the driver →
   ``createDataFrame`` (the reference's own single-node shape).
 - write: insert/truncate via the connector; upsert/update via
-  ``foreachPartition`` + pymongo ``UpdateOne($set)`` bulk_write with
+  ``base_io.run_partition_dml`` + pymongo ``UpdateOne($set)`` bulk_write with
   ``key_fields`` / ``match_filter`` / ``update_fields`` / ``ordered``
   (receiver:91-133, 260-422).
 

@@ -7,8 +7,9 @@ import math
 import pytest
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
+from pyspark.sql import functions as F
 
-from etl_core_spark.functions.casts import FALSE_STRINGS, NULL_STRINGS, TRUE_STRINGS
+from etl_core_spark.functions.casts import FALSE_STRINGS, NULL_STRINGS, TRUE_STRINGS, CastError
 from etl_core_spark.functions.rules import ComparisonRule, LogicalRule, compile_rule
 from etl_core_spark.operators.base import get_operator
 
@@ -123,14 +124,41 @@ def test_cast_ladders_match_reference_tables(spark, values):
     op_bool = get_operator("type_conversion")(
         rules=[{"column_path": "v", "target": "boolean", "on_error": "null"}]
     )
-    got_bool = [r["v"] for r in op_bool.apply({"in": df})["out"].collect()]
+    bool_ports = op_bool.apply({"in": df})
+    got_bool = [r["v"] for r in bool_ports["out"].collect()]
     assert got_bool == [model_str_to_bool(v) for v in values]
 
     op_int = get_operator("type_conversion")(
         rules=[{"column_path": "v", "target": "integer", "on_error": "null"}]
     )
-    got_int = [r["v"] for r in op_int.apply({"in": df})["out"].collect()]
+    int_ports = op_int.apply({"in": df})
+    got_int = [r["v"] for r in int_ports["out"].collect()]
     assert got_int == [model_str_to_int(v) for v in values]
+
+    # errors: exactly the real (non-null, non-marker) values the model
+    # maps to None, per rule; both ports read in one action
+    def real_failure(v, model):
+        return v is not None and v.strip().lower() not in NULL_STRINGS and model(v) is None
+
+    errors = bool_ports["errors"].withColumn("t", F.lit("boolean")).unionByName(
+        int_ports["errors"].withColumn("t", F.lit("integer"))
+    )
+    got_errors = sorted((r["t"], r["v"]) for r in errors.collect())
+    want_errors = sorted(
+        [("boolean", v) for v in values if real_failure(v, model_str_to_bool)]
+        + [("integer", v) for v in values if real_failure(v, model_str_to_int)]
+    )
+    assert got_errors == want_errors
+
+    # on_error='raise' raises iff such a value exists
+    op_raise = get_operator("type_conversion")(
+        rules=[{"column_path": "v", "target": "integer", "on_error": "raise"}]
+    )
+    if any(real_failure(v, model_str_to_int) for v in values):
+        with pytest.raises(CastError, match="not convertible"):
+            op_raise.apply({"in": df})
+    else:
+        op_raise.apply({"in": df})
 
 
 @settings(**_SETTINGS)

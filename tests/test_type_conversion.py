@@ -92,6 +92,57 @@ def test_on_error_raise_passes_when_clean(spark):
     assert [r["v"] for r in out.collect()] == [3, 4, None]
 
 
+def test_repeated_path_chains_and_judges_each_rule_on_its_input(spark):
+    # the second rule converts (and is judged on) the first rule's
+    # output: "1.0" -> 1 -> True is no error, "2" -> 2 is no boolean
+    df = spark.createDataFrame([("1.0",), ("2",), ("x",), (None,)], "v string")
+    ports = tc(
+        rules=[
+            {"column_path": "v", "target": "integer", "on_error": "null"},
+            {"column_path": "v", "target": "boolean", "on_error": "null"},
+        ]
+    ).apply({"in": df})
+    assert [r["v"] for r in ports["out"].collect()] == [True, None, None, None]
+    assert sorted(r["v"] for r in ports["errors"].collect()) == ["2", "x"]
+    assert ports["errors"].columns == ["v"]
+
+
+def test_repeated_nested_path_sees_the_converted_type(spark):
+    # the second rule must see the first rule's output type (string);
+    # judged on the stale boolean type it would pass the strings through
+    df = spark.createDataFrame([([(True,), (False,)],)], "items array<struct<b:boolean>>")
+    out = tc(
+        rules=[
+            {"column_path": "items.*.b", "target": "string", "on_error": "null"},
+            {"column_path": "items.*.b", "target": "boolean", "on_error": "null"},
+        ]
+    ).apply({"in": df})["out"]
+    assert out.schema.simpleString() == "struct<items:array<struct<b:boolean>>>"
+    assert [x["b"] for x in out.collect()[0]["items"]] == [True, False]
+
+
+def test_each_top_level_rule_compiles_its_ladder_once(spark, monkeypatch):
+    from etl_core_spark.functions import casts
+
+    calls = []
+    real = casts._convert_stages
+
+    def spy(col, source_type, target):
+        calls.append(target)
+        return real(col, source_type, target)
+
+    monkeypatch.setattr(casts, "_convert_stages", spy)
+    df = spark.createDataFrame([("3", "yes", 1)], "n string, b string, k long")
+    ports = tc(
+        rules=[
+            {"column_path": "n", "target": "integer", "on_error": "raise"},
+            {"column_path": "b", "target": "boolean", "on_error": "null"},
+        ]
+    ).apply({"in": df})
+    assert calls == ["integer", "boolean"]
+    assert ports["out"].columns == ["n", "b", "k"]
+
+
 def test_nested_struct_path(spark):
     df = spark.createDataFrame([((("5",),),)], "payload struct<inner:struct<v:string>>")
     out = tc(rules=[{"column_path": "payload.inner.v", "target": "integer"}]).apply(
