@@ -175,17 +175,14 @@ class ApiServer:
                     except (json.JSONDecodeError, UnicodeDecodeError) as exc:
                         # malformed body must yield a 400 payload, not
                         # an uncaught traceback + dropped connection
-                        status, payload = 400, {"error": f"invalid JSON body: {exc}"}
-                        data = json.dumps(payload).encode()
-                        self.send_response(status)
-                        self.send_header("Content-Type", "application/json")
-                        self.send_header("Content-Length", str(len(data)))
-                        self.end_headers()
-                        self.wfile.write(data)
+                        self._send(400, {"error": f"invalid JSON body: {exc}"})
                         return
                 status, payload = api.dispatch(
                     self.command, parsed.path, parse_qs(parsed.query), body
                 )
+                self._send(status, payload)
+
+            def _send(self, status: int, payload) -> None:
                 data = json.dumps(payload).encode()
                 self.send_response(status)
                 self.send_header("Content-Type", "application/json")

@@ -11,9 +11,19 @@ plan per sink, so pushdown/pruning/AQE span the whole job.
 Wiring validation (≈ ``runtimejob.py:49-129,265-322``): routes must
 reference existing components and declared in-ports, every component
 must be reachable/acyclic, fan-in collisions are detected, and
-declared port schemas are checked against the actual DataFrame
-schemas at build time (strict mode: unknown extra columns are errors,
-matching ``common_helpers.py:161-179``).
+declared port columns must exist in the actual DataFrame schemas at
+build time.
+
+Row counts: every edge into a live component (one on some path to a
+sink) carries its own ``df.observe`` row counter. The counts ride the
+sink actions themselves (one CollectMetrics node per edge, zero extra
+scans) — the reference pays an extra
+``map_partitions(len).sum().compute()`` pass per metric
+(``filter_receiver.py:107-116``). Counting per edge rather than per
+port keeps a sink's count exact when a sibling consumer of the same
+port runs a build-time probe (a ``take(1)``) that completes its own
+counter early. A sink's pass-through ``out`` port re-emits its
+uncounted input.
 """
 
 from __future__ import annotations
@@ -21,48 +31,45 @@ from __future__ import annotations
 import graphlib
 from typing import Any
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import functions as F
 
 from etl_core_spark.operators.base import Operator, get_operator
 from etl_core_spark.plans.config import ComponentConfig, JobConfig, JobConfigError
-from etl_core_spark.schema import Schema
 from etl_core_spark.sources.base_io import SinkOperator, SourceOperator
 
 
 class PlanBuilder:
-    def __init__(
-        self,
-        spark: SparkSession,
-        job: JobConfig,
-        strict_schemas: bool = False,  # keep in sync with build_job
-    ):
+    def __init__(self, spark: SparkSession, job: JobConfig):
         self.spark = spark
         self.job = job
-        self.strict_schemas = strict_schemas
         self.operators: dict[str, Operator] = {}
         self.outputs: dict[str, dict[str, DataFrame]] = {}
         self.sinks: list[str] = []
         self.sink_inputs: dict[str, DataFrame] = {}
-        #: per-component {out_port: Observation} for ports on a live
-        #: path to a sink
-        self.observations: dict[str, dict[str, Any]] = {}
-        #: inbound edges per component: [(src_name, src_port, in_port)]
-        self.inbound_edges: dict[str, list[tuple[str, str, str]]] = {}
+        #: one row counter per edge into a live component:
+        #: [(src_name, src_port, dst_name, Observation)]
+        self.edge_counters: list[tuple[str, str, str, Observation]] = []
 
-    # -- validation -----------------------------------------------------
-
-    def _instantiate(self, comp: ComponentConfig) -> Operator:
+    def _instantiate(self, comp: ComponentConfig, cls: type[Operator]) -> Operator:
         from etl_core_spark.plans.context import apply_context
 
-        cls = get_operator(comp.comp_type)
         params = apply_context(comp.params)
         if issubclass(cls, SourceOperator):
             return cls(spark=self.spark, **params)
         return cls(**params)
 
-    def _topo_order(self) -> list[str]:
-        ts: graphlib.TopologicalSorter[str] = graphlib.TopologicalSorter()
+    def _plan(
+        self, classes: dict[str, type[Operator]]
+    ) -> tuple[list[str], dict[str, list[tuple[str, str, str]]], set[str]]:
+        """Topological order, inbound edges ``[(src_name, src_port,
+        in_port)]`` per component, and the live set, from one walk of
+        the edge list. Counters attach only to edges into live
+        components: a dead branch never executes, and an
+        ``Observation.get`` on it would block forever."""
         names = {c.name for c in self.job.components}
+        inbound: dict[str, list[tuple[str, str, str]]] = {n: [] for n in names}
+        ts: graphlib.TopologicalSorter[str] = graphlib.TopologicalSorter()
         for comp in self.job.components:
             ts.add(comp.name)
             for out_port, edges in comp.routes.items():
@@ -73,81 +80,37 @@ class PlanBuilder:
                             f"{edge.to!r}"
                         )
                     ts.add(edge.to, comp.name)
+                    inbound[edge.to].append((comp.name, out_port, edge.in_port))
         try:
-            return list(ts.static_order())
+            order = list(ts.static_order())
         except graphlib.CycleError as exc:
             raise JobConfigError(f"job DAG has a cycle: {exc.args[1]}") from exc
-
-    def _live_components(self) -> set[str]:
-        """Components on some path to a sink. Observations attach only
-        to live out-ports: a dead branch never executes, and an
-        ``Observation.get`` on it would block forever."""
-        rev: dict[str, set[str]] = {c.name: set() for c in self.job.components}
-        live: set[str] = set()
-        for comp in self.job.components:
-            if issubclass(get_operator(comp.comp_type), SinkOperator):
-                live.add(comp.name)
-            for edges in comp.routes.values():
-                for edge in edges:
-                    rev[edge.to].add(comp.name)
-        stack = list(live)
-        while stack:
-            for pred in rev[stack.pop()]:
-                if pred not in live:
-                    live.add(pred)
-                    stack.append(pred)
-        return live
-
-    def _observe_outputs(
-        self, comp: ComponentConfig, outputs: dict[str, DataFrame], live: set[str]
-    ) -> dict[str, DataFrame]:
-        """Wrap live out-ports with ``df.observe`` row counters.
-
-        Counts ride the sink actions themselves (one CollectMetrics
-        node per port, zero extra scans) — the reference pays an extra
-        ``map_partitions(len).sum().compute()`` pass per metric
-        (``filter_receiver.py:107-116``). Observation names carry a
-        uuid: names are global per session and a rebuilt plan must not
-        collide with a previous build's listeners."""
-        import uuid
-
-        from pyspark.sql import Observation
-        from pyspark.sql import functions as F
-
-        obs_map: dict[str, Any] = {}
-        for port, df in outputs.items():
-            edges = comp.routes.get(port, ())
-            if not any(e.to in live for e in edges):
-                continue
-            obs = Observation(f"m_{comp.name}_{port}_{uuid.uuid4().hex[:8]}")
-            outputs[port] = df.observe(obs, F.count(F.lit(1)).alias("count"))
-            obs_map[port] = obs
-        if obs_map:
-            self.observations[comp.name] = obs_map
-        return outputs
+        # successors come first in reverse order, so one pass marks
+        # every component on a path to a sink
+        live = {n for n in order if issubclass(classes[n], SinkOperator)}
+        for name in reversed(order):
+            if name in live:
+                live.update(src for src, _, _ in inbound[name])
+        return order, inbound, live
 
     # -- build ----------------------------------------------------------
 
     def build(self) -> dict[str, dict[str, DataFrame]]:
-        order = self._topo_order()
-        # collect inbound edges per component
-        inbound: dict[str, list[tuple[str, str, str]]] = {c.name: [] for c in self.job.components}
-        for comp in self.job.components:
-            for out_port, edges in comp.routes.items():
-                for edge in edges:
-                    inbound[edge.to].append((comp.name, out_port, edge.in_port))
-        self.inbound_edges = inbound
-        live = self._live_components()
+        comps = {c.name: c for c in self.job.components}
+        classes = {n: get_operator(c.comp_type) for n, c in comps.items()}
+        order, inbound, live = self._plan(classes)
+        # one Column shared by every counter of this build
+        count = F.count(F.lit(1)).alias("count")
 
         for name in order:
-            comp = self.job.component(name)
-            op = self._instantiate(comp)
-            self.operators[name] = op
+            comp = comps[name]
+            op = self.operators[name] = self._instantiate(comp, classes[name])
 
             inputs: dict[str, DataFrame] = {}
+            uncounted: dict[str, DataFrame] = {}
             per_port_count: dict[str, int] = {}
             for src_name, src_port, in_port in inbound[name]:
-                src_out = self.outputs.get(src_name, {})
+                src_out = self.outputs[src_name]
                 if src_port not in src_out:
                     raise JobConfigError(
                         f"{src_name} has no out port {src_port!r} "
@@ -156,20 +119,22 @@ class PlanBuilder:
                 n = per_port_count.get(in_port, 0)
                 key = in_port if n == 0 else f"{in_port}#{n}"
                 per_port_count[in_port] = n + 1
-                inputs[key] = src_out[src_port]
+                df = uncounted[key] = src_out[src_port]
+                if name in live:
+                    obs = Observation()
+                    df = df.observe(obs, count)
+                    self.edge_counters.append((src_name, src_port, name, obs))
+                inputs[key] = df
 
             if isinstance(op, SinkOperator):
                 # defer the terminal action to the runner; the plan
                 # stays lazy end-to-end at build time
-                df = op.single_input(inputs)
-                outputs = {"out": df}
-                self.sink_inputs[name] = df
+                self.sink_inputs[name] = op.single_input(inputs)
                 self.sinks.append(name)
+                outputs = {"out": op.single_input(uncounted)}
             else:
                 outputs = op.apply(inputs)
             self._check_port_schemas(comp, outputs)
-            if name in live and not isinstance(op, SinkOperator):
-                outputs = self._observe_outputs(comp, outputs, live)
             self.outputs[name] = outputs
         return self.outputs
 
@@ -178,41 +143,16 @@ class PlanBuilder:
             if port not in outputs:
                 continue
             expected = schema.to_struct_type()
-            actual = outputs[port].schema
-            expected_names = [f.name for f in expected.fields]
-            actual_names = [f.name for f in actual.fields]
-            missing = [n for n in expected_names if n not in actual_names]
+            actual_names = [f.name for f in outputs[port].schema.fields]
+            missing = [f.name for f in expected.fields if f.name not in actual_names]
             if missing:
                 raise JobConfigError(
                     f"{comp.name}.{port}: missing declared columns {missing}"
                 )
-            if self.strict_schemas:
-                extra = [n for n in actual_names if n not in expected_names]
-                if extra:
-                    raise JobConfigError(
-                        f"{comp.name}.{port}: unexpected extra columns {extra} "
-                        "(strict mode)"
-                    )
-                # declared TYPES are part of the strict contract: a
-                # declared integer backed by a string column must fail
-                # at BUILD time, not deep inside a downstream
-                # aggregation (name-presence alone defeated the
-                # advertised build-time schema gate)
-                actual_types = {f.name: f.dataType for f in actual.fields}
-                for fld in expected.fields:
-                    got = actual_types[fld.name]
-                    if got.simpleString() != fld.dataType.simpleString():
-                        raise JobConfigError(
-                            f"{comp.name}.{port}.{fld.name}: declared "
-                            f"{fld.dataType.simpleString()} but the plan "
-                            f"produces {got.simpleString()} (strict mode)"
-                        )
 
 
-def build_job(
-    spark: SparkSession, config: JobConfig | dict[str, Any], strict_schemas: bool = False
-) -> PlanBuilder:
+def build_job(spark: SparkSession, config: JobConfig | dict[str, Any]) -> PlanBuilder:
     job = config if isinstance(config, JobConfig) else JobConfig.from_dict(config)
-    builder = PlanBuilder(spark, job, strict_schemas=strict_schemas)
+    builder = PlanBuilder(spark, job)
     builder.build()
     return builder

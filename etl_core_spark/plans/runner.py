@@ -4,12 +4,14 @@ Replaces the reference's execution layer
 (``job_execution_handler.py:52-67,206-259`` — asyncio main loop with
 a constant-backoff retry strategy per attempt, metrics aggregation
 ``_finalize_success:657-692``). Here an *attempt* is simply re-running
-the sink actions: the plan is immutable and lazy, so retry is safe
-re-execution (idempotent for overwrite-mode sinks). A failure in
-``NOT_RETRYABLE`` would only repeat, so it fails the run at once.
+the sink actions, at once and with no backoff: the plan is immutable
+and lazy, so retry is safe re-execution (idempotent for overwrite-mode
+sinks). A failure in ``NOT_RETRYABLE`` would only repeat, so it fails
+the run at once.
 
-Metrics use ``df.observe`` — row counts ride the same pass as the
-write, instead of the reference's extra
+The runner only writes. Metrics are read from the row counters the
+builder attached to every edge into a live component, so the counts
+ride the same pass as the writes, instead of the reference's extra
 ``map_partitions(len).sum().compute()`` passes
 (``filter_receiver.py:107-116`` triple-computes the graph).
 """
@@ -21,7 +23,6 @@ import time
 from typing import Any
 
 from pyspark.errors import AnalysisException
-from pyspark.sql import DataFrame, Observation
 
 from etl_core_spark.functions.casts import CastError
 from etl_core_spark.operators.base import OperatorConfigError
@@ -48,9 +49,8 @@ class RunResult:
 
 
 class JobRunner:
-    def __init__(self, builder: PlanBuilder, retry_wait_seconds: float = 0.0):
+    def __init__(self, builder: PlanBuilder):
         self.builder = builder
-        self.retry_wait_seconds = retry_wait_seconds
 
     def run(self) -> RunResult:
         job = self.builder.job
@@ -64,8 +64,6 @@ class JobRunner:
                 last_error = f"{type(exc).__name__}: {exc}"
                 if attempt == max_attempts or isinstance(exc, NOT_RETRYABLE):
                     break
-                if self.retry_wait_seconds:
-                    time.sleep(self.retry_wait_seconds)
                 continue
             return RunResult(
                 job_name=job.name,
@@ -83,73 +81,45 @@ class JobRunner:
         )
 
     def _run_once(self) -> dict[str, Any]:
-        import uuid
-
-        metrics: dict[str, Any] = {}
         for sink_name in self.builder.sinks:
-            op = self.builder.operators[sink_name]
-            assert isinstance(op, SinkOperator)
-            df = self.builder.sink_inputs[sink_name]
-            # observation names must be globally unique: a retried
-            # attempt registering a same-named observation makes
-            # Observation.get block forever on the stale listener
-            obs = Observation(f"{sink_name}_rows_{uuid.uuid4().hex[:8]}")
-            observed: DataFrame = df.observe(obs, _count_expr())
-            op.write(observed)
-            metrics[sink_name] = {"lines_received": obs.get["count"]}
-        metrics.update(self._component_metrics(metrics))
-        return metrics
+            self.builder.operators[sink_name].write(self.builder.sink_inputs[sink_name])
+        return self._component_metrics()
 
-    def _component_metrics(self, sink_metrics: dict[str, Any] | None = None) -> dict[str, Any]:
+    def _component_metrics(self) -> dict[str, Any]:
         """Reference-parity per-component counters
         (``component_metrics.py:4-31``: lines_received / forwarded /
-        dismissed), read from the build-time observations — every
+        dismissed), read from the build-time edge counters — every
         value rode a sink action, zero extra scans or count() calls.
 
-        received = sum of inbound edge counts (an edge into a live
-        component comes from an observed port by construction);
-        forwarded = sum of observed out-port counts; dismissed = rows
+        received = sum of the inbound edge counts; a port's count =
+        the largest count among its edges (a build-time action over
+        an edge, such as a ``take(1)`` probe, sees at most that edge's
+        rows); forwarded = sum of the port counts; dismissed = rows
         received but not forwarded on any live port, floored at 0 —
         for a filter whose ``fail`` port is unrouted this is exactly
         the reference's FilterMetrics ``lines_dismissed``; for
         fan-out operators (split/join) forwarded may legitimately
-        exceed received, hence the floor. Sinks keep their own
-        ``lines_received`` entry from the write action itself.
+        exceed received, hence the floor. Sinks report only
+        ``lines_received``; sources have no received side.
         """
-        obs = self.builder.observations
-        if not obs:
-            return {}
-        port_counts: dict[str, dict[str, int]] = {
-            name: {port: o.get["count"] for port, o in ports.items()}
-            for name, ports in obs.items()
-        }
+        received: dict[str, int] = {}
+        ports: dict[str, dict[str, int]] = {}
+        for src, src_port, dst, obs in self.builder.edge_counters:
+            n = obs.get["count"]
+            received[dst] = received.get(dst, 0) + n
+            src_ports = ports.setdefault(src, {})
+            src_ports[src_port] = max(n, src_ports.get(src_port, 0))
         out: dict[str, Any] = {}
-        for name, ports in port_counts.items():
-            received = None
-            inbound = self.builder.inbound_edges.get(name, [])
-            # an edge can also come from a SINK's pass-through out
-            # port (sinks are chainable); those ports are never
-            # observed, but a sink forwards its input unchanged, so
-            # its write-action lines_received IS the edge count —
-            # without this the downstream component read received=0
-            sink_metrics = sink_metrics or {}
-            in_counts = []
-            for src, src_port, _ in inbound:
-                if src in port_counts and src_port in port_counts[src]:
-                    in_counts.append(port_counts[src][src_port])
-                elif src in sink_metrics and "lines_received" in sink_metrics[src]:
-                    in_counts.append(sink_metrics[src]["lines_received"])
-            if in_counts or inbound:
-                received = sum(in_counts)
-            forwarded = sum(ports.values())
-            entry: dict[str, Any] = {
-                "lines_forwarded": forwarded,
-                "ports": dict(ports),
-            }
-            if received is not None:
-                entry["lines_received"] = received
-                entry["lines_dismissed"] = max(0, received - forwarded)
-            out[name] = entry
+        for name, op in self.builder.operators.items():
+            if isinstance(op, SinkOperator):
+                out[name] = {"lines_received": received[name]}
+            elif name in ports:
+                forwarded = sum(ports[name].values())
+                entry: dict[str, Any] = {"lines_forwarded": forwarded, "ports": ports[name]}
+                if name in received:
+                    entry["lines_received"] = received[name]
+                    entry["lines_dismissed"] = max(0, received[name] - forwarded)
+                out[name] = entry
         return out
 
 
@@ -162,8 +132,3 @@ def run_job(spark, config) -> RunResult:
         # on plans.builder.build_job (tracing) sees every build
         return JobRunner(_builder.build_job(spark, config)).run()
 
-
-def _count_expr():
-    from pyspark.sql import functions as F
-
-    return F.count(F.lit(1)).alias("count")

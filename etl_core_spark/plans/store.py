@@ -193,16 +193,21 @@ class JobStore:
             started_at=started,
         )
         with self._lock:
-            self._conn.execute(
-                "INSERT INTO executions VALUES (?, ?, ?, ?, ?, ?, ?, ?)",
-                (
-                    record.execution_id, record.job_id, record.status, record.attempts,
-                    record.wall_seconds, json.dumps(record.metrics), record.error,
-                    record.started_at,
-                ),
-            )
+            self._insert_execution(record)
             self._conn.commit()
         return record
+
+    def _insert_execution(self, record: ExecutionRecord) -> None:
+        """Add one row to ``executions``; the caller holds the lock and
+        commits."""
+        self._conn.execute(
+            "INSERT INTO executions VALUES (?, ?, ?, ?, ?, ?, ?, ?)",
+            (
+                record.execution_id, record.job_id, record.status, record.attempts,
+                record.wall_seconds, json.dumps(record.metrics), record.error,
+                record.started_at,
+            ),
+        )
 
     def list_executions(self, job_id: str | None = None) -> list[ExecutionRecord]:
         sql = "SELECT * FROM executions"
@@ -360,15 +365,7 @@ class JobStore:
                     started_at=now,
                 )
                 with self._lock:
-                    self._conn.execute(
-                        "INSERT INTO executions VALUES (?, ?, ?, ?, ?, ?, ?, ?)",
-                        (
-                            record.execution_id, record.job_id, record.status,
-                            record.attempts, record.wall_seconds,
-                            json.dumps(record.metrics), record.error,
-                            record.started_at,
-                        ),
-                    )
+                    self._insert_execution(record)
                 records.append(record)
                 # disable ONLY when the job row is definitively gone.
                 # isinstance(exc, KeyError) also matched ContextError

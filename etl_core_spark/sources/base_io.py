@@ -199,7 +199,7 @@ class SinkOperator(Operator):
 
     def write(self, df: DataFrame):  # pragma: no cover - abstract
         """Terminal action. MUST finish with a SQL (DataFrame)
-        action, never a bare RDD action: the runner and builder ride
+        action, never a bare RDD action: the builder rides
         ``df.observe`` row counters on the plan, and an RDD action
         (``foreachPartition``) never fires the
         QueryExecutionListener, starving every upstream

@@ -12,6 +12,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from etl_core_spark.operators.base import OperatorConfigError, register_operator
+from etl_core_spark.session import checkpoint, run_scope
 from etl_core_spark.sources.base_io import SinkOperator, SourceOperator
 
 
@@ -103,6 +104,10 @@ class WriteParquet(SinkOperator):
         writer.parquet(str(self.config["filepath"]))
 
 
+# its own run scope: the checkpoints below are dead once the table is
+# written, so they are freed when the call returns, not when the run
+# that called it ends
+@run_scope()
 def upsert_parquet(
     updates: DataFrame,
     table_path: str,
@@ -189,7 +194,7 @@ def upsert_parquet(
             "swap only replaces directories present in the merged batch, "
             "so it cannot delete a partition a moved key vacated"
         )
-    updates = updates.localCheckpoint()  # detach from any streaming/
+    updates = checkpoint(updates)  # detach from any streaming/
     # source lineage; also read consistently while overwriting below
     if updates.isEmpty():
         # creating a table from an empty batch would leave a directory
@@ -250,7 +255,7 @@ def upsert_parquet(
         for k in keys:
             eq = existing[k].eqNullSafe(updates[k])
             cond = eq if cond is None else (cond & eq)
-        carried = existing.join(updates, on=cond, how="left_anti").localCheckpoint()
+        carried = checkpoint(existing.join(updates, on=cond, how="left_anti"))
         merged = updates.unionByName(carried, allowMissingColumns=schema_changed)
     # staged + schema evolution still works: the full carry puts every
     # partition into staging, so the swap loop replaces them all

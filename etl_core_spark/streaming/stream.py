@@ -32,6 +32,7 @@ from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from etl_core_spark.schema import Schema
+from etl_core_spark.session import checkpoint, run_scope
 
 
 def read_stream(
@@ -296,6 +297,7 @@ def incremental_rollup(
         )
     )
 
+    @run_scope()  # one scope per micro-batch, freed once it is written
     def upsert_partitions(batch_df: DataFrame, batch_id: int) -> None:
         # update mode emits only the (window, group) rows that CHANGED
         # this batch (with cumulative values). Overwriting a window
@@ -306,7 +308,7 @@ def incremental_rollup(
         # pruned to those windows, so per-batch I/O stays proportional
         # to the windows the batch touched, never the table.
         spark = batch_df.sparkSession
-        batch_df = batch_df.localCheckpoint()  # detach from streaming lineage
+        batch_df = checkpoint(batch_df)  # detach from streaming lineage
         if batch_df.isEmpty():
             # Update mode emits NOTHING until the watermark first
             # advances — a live source's first micro-batches are
@@ -323,12 +325,12 @@ def incremental_rollup(
             existing = spark.read.parquet(table_path).where(
                 F.col("__window").isin(windows)
             )
-            carried = existing.join(
+            carried = checkpoint(existing.join(
                 batch_df.select("__window", *group_cols),
                 on=["__window", *group_cols],
                 how="left_anti",
-            ).localCheckpoint()  # detach lineage from table_path: the
-            # write below overwrites the very partitions being read
+            ))  # detach lineage from table_path: the write below
+            # overwrites the very partitions being read
             merged = batch_df.unionByName(carried)
         # per-WRITE dynamic overwrite: mutating the session conf here
         # raced with any concurrent write on the same SparkSession
@@ -395,10 +397,10 @@ def streaming_incremental_dedup(
         minhash_index_update,
         read_index_meta,
     )
-    from etl_core_spark.session import run_scope
 
-    def dedup_batch(batch_df: DataFrame) -> None:
-        batch_df = batch_df.localCheckpoint()
+    @run_scope()  # one scope per micro-batch, freed once it is written
+    def process(batch_df: DataFrame, batch_id: int) -> None:
+        batch_df = checkpoint(batch_df)
         if batch_df.isEmpty():
             return
         pairs_in = minhash_dedup_pairs(
@@ -414,7 +416,7 @@ def streaming_incremental_dedup(
                 .distinct()
             )
             survivors = survivors.join(matched, on=id_col, how="left_anti")
-        survivors = survivors.localCheckpoint()  # one computation feeds
+        survivors = checkpoint(survivors)  # one computation feeds
         # both writes below (and detaches from the index being appended)
         if survivors.isEmpty():
             # a batch whose docs ALL match the indexed corpus (e.g. an
@@ -427,12 +429,6 @@ def streaming_incremental_dedup(
             survivors, text_col, id_col, index_path, num_hashes, bands, shingle_n
         )
         survivors.write.mode("append").parquet(out_path)
-
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        # one run scope per micro-batch: the operators' caches are
-        # released once the batch is written, not held by the stream
-        with run_scope():
-            dedup_batch(batch_df)
 
     writer = (
         stream.writeStream.outputMode("append")
@@ -491,6 +487,7 @@ def streaming_export_shards(
     # path; keyed state lives exactly as long as the query object
     running: dict = {"by_shard": None}
 
+    @run_scope()  # one scope per micro-batch, freed once it is written
     def process(batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():
             # an empty micro-batch must not churn the manifest (or
@@ -541,9 +538,9 @@ def streaming_export_shards(
                     running["by_shard"] = shard_stats(prior, key_col, salt)
                 else:
                     running["by_shard"] = {}
-        with_shard = batch_df.withColumn(
+        with_shard = checkpoint(batch_df.withColumn(
             "shard", shard_col(key_col, salt, int(n_shards))
-        ).localCheckpoint()  # one computation feeds write AND stats
+        ))  # one computation feeds write AND stats
         (
             with_shard.write.mode("append")
             .partitionBy("shard")

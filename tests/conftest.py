@@ -1,3 +1,7 @@
+import contextlib
+import gc
+import types
+
 import pytest
 
 from etl_core_spark.session import get_spark, run_scope
@@ -59,3 +63,34 @@ def assert_df_equal(spark_df, duck_rows, sort_cols=None, approx=None):
                 assert gv == pytest.approx(wv, abs=approx), f"{g} vs {w}"
             else:
                 assert gv == wv, f"{g} vs {w}"
+
+
+@contextlib.contextmanager
+def _count_round_trips():
+    """Count the Py4J commands this process sends to the JVM inside
+    the block. Object-release messages (``m\nd\n``) are skipped and
+    a ``gc.collect()`` runs first: Python's garbage collector sends
+    those whenever it happens to run, and counted they make one warm
+    build read anywhere from 2,212 to 3,007 calls."""
+    from py4j.clientserver import ClientServerConnection
+
+    gc.collect()
+    calls = types.SimpleNamespace(n=0)
+    real = ClientServerConnection.send_command
+
+    def send_command(self, command, *args, **kwargs):
+        if not command.startswith("m\nd\n"):
+            calls.n += 1
+        return real(self, command, *args, **kwargs)
+
+    ClientServerConnection.send_command = send_command
+    try:
+        yield calls
+    finally:
+        ClientServerConnection.send_command = real
+
+
+@pytest.fixture
+def py4j_round_trips():
+    """``with py4j_round_trips() as calls: ...`` then ``calls.n``."""
+    return _count_round_trips

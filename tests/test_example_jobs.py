@@ -652,6 +652,35 @@ def test_parquet_targeted_selection(spark, tmp_path, tables):
     }
 
 
+def test_fan_out_counts_survive_build_time_probes(spark, tmp_path, tables):
+    """The crawl read also feeds a copy sink. The gate and DSIR stages
+    run build-time ``take(1)`` probes over their inputs, which complete
+    row counters early; counting per edge keeps the sink's count and
+    the read's forwarded count exact anyway."""
+    in_dir = tmp_path / "in"
+    out_dir = tmp_path / "out"
+    crawl = tables["documents"].select("doc_id", "text", "source")
+    crawl.repartition(4).write.parquet(str(in_dir / "crawl.parquet"))
+    n_rows = crawl.count()
+    raw = (EXAMPLES / "parquet_targeted_selection.json").read_text()
+    config = json.loads(
+        raw.replace("__IN__", str(in_dir)).replace("__OUT__", str(out_dir))
+    )
+    read = next(c for c in config["components"] if c["name"] == "read_crawl")
+    read["routes"]["out"].append({"to": "copy", "in_port": "in"})
+    config["components"].append(
+        {"name": "copy", "comp_type": "write_parquet", "filepath": str(out_dir / "copy")}
+    )
+    assert len(list((in_dir / "crawl.parquet").glob("*.parquet"))) > 1
+
+    result = JobRunner(build_job(spark, config)).run()
+    assert result.status == "SUCCESS", result.error
+    written = spark.read.parquet(str(out_dir / "copy")).count()
+    assert written == n_rows
+    assert result.metrics["copy"]["lines_received"] == written
+    assert result.metrics["read_crawl"]["lines_forwarded"] == n_rows
+
+
 def test_parquet_crawl_to_training_set(spark, tmp_path, tables):
     """The full curation chain through the JSON runner: gopher
     quality gate -> minhash near-dedup -> self-trained LM fluency

@@ -213,6 +213,40 @@ def test_streaming_export_shards_continuous_incremental(spark, tmp_path):
     assert set(verify_export(spark, out).values()) == {"ok"}
 
 
+def test_streaming_export_batches_hold_no_storage(spark, tmp_path):
+    """Each micro-batch handler opens its own run scope, so the
+    checkpoint a continuous export takes per batch is freed once that
+    batch is written, not held for the life of the session."""
+    import gc
+
+    from etl_core_spark.sources.export_io import read_manifest
+    from etl_core_spark.streaming.stream import streaming_export_shards
+
+    src = tmp_path / "src"
+    src.mkdir()
+    schema = "doc_id long, text string"
+    for b in range(2):
+        spark.createDataFrame(
+            [(10 * b + i, f"doc {i}") for i in range(10)], schema
+        ).coalesce(1).write.parquet(str(src / f"b{b}.parquet"))
+    held = spark.sparkContext._jsc.getPersistentRDDs
+    before = held().size()
+    q = streaming_export_shards(
+        spark.readStream.schema(schema)
+        .option("maxFilesPerTrigger", 1)
+        .parquet(str(src) + "/*"),
+        str(tmp_path / "export"), str(tmp_path / "ckpt"),
+        key_col="doc_id", n_shards=4, trigger_once=False,
+    )
+    try:
+        q.processAllAvailable()
+    finally:
+        q.stop()
+    gc.collect()
+    assert held().size() == before
+    assert read_manifest(spark, str(tmp_path / "export"))["total_rows"] == 20
+
+
 def test_streaming_export_seed_skips_dataless_dir_but_propagates_errors(
     spark, tmp_path
 ):

@@ -272,3 +272,56 @@ def test_metrics_skip_dead_branch(spark, tmp_path):
     assert result.status == "SUCCESS", result.error
     assert result.metrics["sp"]["ports"] == {"a": 3}  # only the live branch
     assert "dead" not in result.metrics
+
+
+def _two_sink_job(tmp_path):
+    src = make_csv(tmp_path)
+    return {
+        "name": "two_sinks",
+        "components": [
+            {
+                "name": "read",
+                "comp_type": "read_csv",
+                "filepath": str(src),
+                "routes": {"out": [{"to": "flt", "in_port": "in"}]},
+            },
+            {
+                "name": "flt",
+                "comp_type": "filter",
+                "rule": {"column": "age", "operator": ">", "value": "18"},
+                "routes": {
+                    "pass": [{"to": "adults", "in_port": "in"}],
+                    "fail": [{"to": "minors", "in_port": "in"}],
+                },
+            },
+            {"name": "adults", "comp_type": "write_csv", "filepath": str(tmp_path / "adults")},
+            {"name": "minors", "comp_type": "write_json", "filepath": str(tmp_path / "minors")},
+        ],
+    }
+
+
+#: Py4J round trips of one warm build+run of ``_two_sink_job``
+TWO_SINK_ROUND_TRIPS = 146
+
+
+def test_warm_build_and_run_round_trip_budget(spark, tmp_path, py4j_round_trips):
+    """Driver-to-JVM round trips per warm build+run of a small two-sink
+    job, object-release messages excluded. Unlike wall time the count
+    does not drift with host load: a change that adds calls to the
+    build or the runner fails here, one that removes calls lowers the
+    budget."""
+    from etl_core_spark.plans.runner import run_job
+
+    job = _two_sink_job(tmp_path)
+    for _ in range(2):  # cold: schema inference, first-use lookups
+        assert run_job(spark, job).status == "SUCCESS"
+    counts = []
+    for _ in range(2):
+        with py4j_round_trips() as calls:
+            result = run_job(spark, job)
+        assert result.status == "SUCCESS", result.error
+        counts.append(calls.n)
+    assert result.metrics["adults"] == {"lines_received": 2}
+    assert result.metrics["minors"] == {"lines_received": 1}
+    assert counts[0] == counts[1], counts
+    assert counts[0] <= TWO_SINK_ROUND_TRIPS, counts

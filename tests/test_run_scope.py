@@ -181,3 +181,20 @@ def test_shared_scope_loses_no_frames_under_contention():
         sys.setswitchinterval(old)
     assert scope.close() == 16 * 100
     assert all(f.persisted == f.unpersisted == 1 for m in frames for f in m)
+
+
+def test_upsert_parquet_holds_no_storage(spark, tmp_path):
+    """upsert_parquet checkpoints its batch and the carried rows; it
+    frees both when it returns, not when the enclosing run ends."""
+    import gc
+
+    from etl_core_spark.sources.parquet_io import upsert_parquet
+
+    table = str(tmp_path / "table")
+    before = _held(spark)
+    for batch in ([(1, "a"), (2, "b")], [(2, "B"), (3, "c")], [(1, "A")]):
+        upsert_parquet(spark.createDataFrame(batch, "id long, v string"), table, keys=["id"])
+    gc.collect()
+    assert _held(spark) == before
+    got = sorted(tuple(r) for r in spark.read.parquet(table).collect())
+    assert got == [(1, "A"), (2, "B"), (3, "c")]
