@@ -33,6 +33,7 @@ from typing import Any
 
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.classic.column import _to_seq
 
 from etl_core_spark.operators.base import Operator, get_operator
 from etl_core_spark.plans.config import ComponentConfig, JobConfig, JobConfigError
@@ -47,7 +48,8 @@ class PlanBuilder:
         self.outputs: dict[str, dict[str, DataFrame]] = {}
         self.sinks: list[str] = []
         self.sink_inputs: dict[str, DataFrame] = {}
-        #: one row counter per edge into a live component:
+        #: one row counter per edge into a live component, in the
+        #: topological order of the targets:
         #: [(src_name, src_port, dst_name, Observation)]
         self.edge_counters: list[tuple[str, str, str, Observation]] = []
 
@@ -99,8 +101,13 @@ class PlanBuilder:
         comps = {c.name: c for c in self.job.components}
         classes = {n: get_operator(c.comp_type) for n, c in comps.items()}
         order, inbound, live = self._plan(classes)
-        # one Column shared by every counter of this build
+        # one Column, JVM Observation class and empty Seq shared by
+        # every counter of this build: ``df.observe(Observation(), ...)``
+        # looks up the class and builds the Seq again on each edge
         count = F.count(F.lit(1)).alias("count")
+        jvm = self.spark._jvm
+        jobservation = getattr(jvm, "org.apache.spark.sql.Observation")
+        no_more_exprs = _to_seq(self.spark.sparkContext, [])
 
         for name in order:
             comp = comps[name]
@@ -121,8 +128,12 @@ class PlanBuilder:
                 per_port_count[in_port] = n + 1
                 df = uncounted[key] = src_out[src_port]
                 if name in live:
+                    # what Observation._on does, with the shared lookups
                     obs = Observation()
-                    df = df.observe(obs, count)
+                    obs._jvm, obs._jo = jvm, jobservation()
+                    df = DataFrame(
+                        df._jdf.observe(obs._jo, count._jc, no_more_exprs), df.sparkSession
+                    )
                     self.edge_counters.append((src_name, src_port, name, obs))
                 inputs[key] = df
 

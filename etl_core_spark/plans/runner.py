@@ -9,6 +9,18 @@ and lazy, so retry is safe re-execution (idempotent for overwrite-mode
 sinks). A failure in ``NOT_RETRYABLE`` would only repeat, so it fails
 the run at once.
 
+Sinks write concurrently, as the reference runs every component at
+once (one asyncio worker per component, ``job_execution_handler.py:
+261-329``): each write is mostly fixed per-action cost (planning,
+commit, tiny stages), which the scheduler overlaps. Sinks whose order
+is observable share a *lane* and write one after another: a sink fed
+through another sink's pass-through ``out`` port writes after it, and
+all DML sinks write in config order. The first lane runs on the
+calling thread, every other lane on a thread of its own started for
+the attempt, with the caller's contextvars (the run scope) and Spark
+local properties (job group, tags). An attempt still means every
+sink: it fails if any sink fails, and names each failing sink.
+
 The runner only writes. Metrics are read from the row counters the
 builder attached to every edge into a live component, so the counts
 ride the same pass as the writes, instead of the reference's extra
@@ -18,7 +30,10 @@ ride the same pass as the writes, instead of the reference's extra
 
 from __future__ import annotations
 
+import collections
+import contextvars
 import dataclasses
+import threading
 import time
 from typing import Any
 
@@ -38,6 +53,16 @@ from etl_core_spark.sources.base_io import SinkOperator
 NOT_RETRYABLE = (AnalysisException, OperatorConfigError, JobConfigError, CastError)
 
 
+class SinkFailures(Exception):
+    """The sinks that failed in one attempt, each with its error."""
+
+    def __init__(self, failures: list[tuple[str, Exception]]):
+        self.failures = failures
+        super().__init__(
+            "\n".join(f"{type(exc).__name__}: {exc} (sink {name!r})" for name, exc in failures)
+        )
+
+
 @dataclasses.dataclass
 class RunResult:
     job_name: str
@@ -51,6 +76,7 @@ class RunResult:
 class JobRunner:
     def __init__(self, builder: PlanBuilder):
         self.builder = builder
+        self.lanes = sink_lanes(builder)
 
     def run(self) -> RunResult:
         job = self.builder.job
@@ -60,18 +86,22 @@ class JobRunner:
         for attempt in range(1, max_attempts + 1):
             try:
                 metrics = self._run_once()
+            except SinkFailures as exc:
+                last_error = str(exc)
+                final = any(isinstance(e, NOT_RETRYABLE) for _, e in exc.failures)
             except Exception as exc:  # noqa: BLE001 - retry boundary
                 last_error = f"{type(exc).__name__}: {exc}"
-                if attempt == max_attempts or isinstance(exc, NOT_RETRYABLE):
-                    break
-                continue
-            return RunResult(
-                job_name=job.name,
-                status="SUCCESS",
-                attempts=attempt,
-                wall_seconds=time.monotonic() - start,
-                metrics=metrics,
-            )
+                final = isinstance(exc, NOT_RETRYABLE)
+            else:
+                return RunResult(
+                    job_name=job.name,
+                    status="SUCCESS",
+                    attempts=attempt,
+                    wall_seconds=time.monotonic() - start,
+                    metrics=metrics,
+                )
+            if final or attempt == max_attempts:
+                break
         return RunResult(
             job_name=job.name,
             status="FAILED",
@@ -81,9 +111,47 @@ class JobRunner:
         )
 
     def _run_once(self) -> dict[str, Any]:
-        for sink_name in self.builder.sinks:
-            self.builder.operators[sink_name].write(self.builder.sink_inputs[sink_name])
+        if not self.lanes:  # a job without sinks writes nothing
+            return self._component_metrics()
+        failures: dict[str, Exception] = {}
+        first, *others = self.lanes
+        workers = []
+        if others:
+            # a worker's Py4J connection has a JVM thread of its own,
+            # which inherits none of the caller's local properties;
+            # each worker gets its own copy, taken before any write
+            jsc = self.builder.spark.sparkContext._jsc.sc()
+            props = jsc.getLocalProperties()
+            workers = [
+                threading.Thread(
+                    target=contextvars.copy_context().run,
+                    args=(self._write_lane, lane, failures, jsc, props.clone()),
+                )
+                for lane in others
+            ]
+        for worker in workers:
+            worker.start()
+        try:
+            self._write_lane(first, failures)
+        finally:
+            for worker in workers:
+                worker.join()
+        if failures:
+            raise SinkFailures([(s, failures[s]) for s in self.builder.sinks if s in failures])
         return self._component_metrics()
+
+    def _write_lane(self, lane: list[str], failures: dict[str, Exception],
+                    jsc=None, props=None) -> None:
+        """Write ``lane`` in order; its first failure ends it and is
+        recorded under the failing sink's name."""
+        name = lane[0]
+        try:
+            if props is not None:
+                jsc.setLocalProperties(props)
+            for name in lane:
+                self.builder.operators[name].write(self.builder.sink_inputs[name])
+        except Exception as exc:  # noqa: BLE001 - reported with the attempt
+            failures[name] = exc
 
     def _component_metrics(self) -> dict[str, Any]:
         """Reference-parity per-component counters
@@ -121,6 +189,34 @@ class JobRunner:
                     entry["lines_dismissed"] = max(0, received[name] - forwarded)
                 out[name] = entry
         return out
+
+
+def sink_lanes(builder: PlanBuilder) -> list[list[str]]:
+    """The job's sinks, split into lanes that may write at the same
+    time. Two sinks share a lane when one is fed, directly or through
+    other components, by the other's pass-through ``out`` port, or
+    when both are DML sinks. A lane lists a chained sink after the
+    sinks that feed it and is otherwise in config order; the lanes
+    are in the order of their first sinks."""
+    sinks = set(builder.sinks)
+    dml = {s for s in sinks if builder.operators[s].dml}
+    # the sinks upstream of each live component: every component on a
+    # path to a sink is live, and its counted edges come after its
+    # source's
+    above: dict[str, set[str]] = collections.defaultdict(set)
+    for src, _, dst, _ in builder.edge_counters:
+        above[dst] |= above[src] | ({src} & sinks)
+    groups: list[set[str]] = []
+    for s in builder.sinks:
+        tied = above[s] | (dml if s in dml else set())
+        groups = [g for g in groups if not g & tied] + [
+            {s}.union(*(g for g in groups if g & tied))
+        ]
+    # a sink has more sinks above it than any sink that feeds it
+    rank = {c.name: i for i, c in enumerate(builder.job.components)}
+    order = sorted(sinks, key=lambda s: (len(above[s]), rank[s]))
+    lanes = [[s for s in order if s in g] for g in groups]
+    return sorted(lanes, key=lambda lane: order.index(lane[0]))
 
 
 def run_job(spark, config) -> RunResult:

@@ -191,6 +191,10 @@ class SinkOperator(Operator):
 
     in_ports = ("in",)
     out_ports = ("out",)
+    #: True for a sink that runs DML against an external store, where
+    #: one sink's write can change what another's does: the runner
+    #: writes a job's DML sinks one after another, in config order
+    dml = False
 
     def apply(self, inputs: PortMap) -> PortMap:
         df = self.single_input(inputs)

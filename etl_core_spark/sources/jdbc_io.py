@@ -266,6 +266,7 @@ def _make_jdbc_write(dialect: str):
     @register_operator(f"write_{dialect}")
     class WriteJdbc(SinkOperator, _JdbcBase):
         __doc__ = f"JDBC write for {dialect} (insert/upsert/update/truncate)."
+        dml = True
 
         def validate_config(self) -> None:
             self.config.setdefault("dialect", dialect)

@@ -154,6 +154,8 @@ class ReadMongodb(SourceOperator):
 
 @register_operator("write_mongodb")
 class WriteMongodb(SinkOperator):
+    dml = True
+
     def validate_config(self) -> None:
         for key in ("database", "collection"):
             if key not in self.config:

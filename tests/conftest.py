@@ -1,5 +1,6 @@
 import contextlib
 import gc
+import threading
 import types
 
 import pytest
@@ -77,10 +78,12 @@ def _count_round_trips():
     gc.collect()
     calls = types.SimpleNamespace(n=0)
     real = ClientServerConnection.send_command
+    lock = threading.Lock()  # sink threads send commands concurrently
 
     def send_command(self, command, *args, **kwargs):
         if not command.startswith("m\nd\n"):
-            calls.n += 1
+            with lock:
+                calls.n += 1
         return real(self, command, *args, **kwargs)
 
     ClientServerConnection.send_command = send_command
