@@ -59,9 +59,7 @@ class ApiServer:
     # -- routing --------------------------------------------------------
 
     def dispatch(self, method: str, path: str, query: dict, body: Any) -> tuple[int, Any]:
-        import inspect
-
-        from etl_core_spark.operators.base import get_operator, operator_names
+        from etl_core_spark.operators.base import get_operator, operator_doc, operator_names
         from etl_core_spark.plans import op_schemas
 
         def field(name):
@@ -99,7 +97,7 @@ class ApiServer:
             ("GET", r"^/operators$", lambda m: (200, operator_names())),
             ("GET", r"^/operators/([^/]+)$",
              lambda m: (200, {"name": m.group(1),
-                              "doc": inspect.getdoc(get_operator(m.group(1))) or ""})),
+                              "doc": operator_doc(get_operator(m.group(1)))})),
             # schedules (reference api/routers/schedules.py: CRUD +
             # pause/resume/run-now, interval/cron/date triggers)
             ("POST", r"^/schedules$",

@@ -139,13 +139,10 @@ def main(argv: list[str] | None = None) -> int:
     # expected user error (exit 2, one line), not a traceback
     try:
         if args.cmd == "operators":
-            import inspect
-
-            from etl_core_spark.operators.base import get_operator, operator_names
+            from etl_core_spark.operators.base import get_operator, operator_doc, operator_names
 
             if args.name:
-                cls = get_operator(args.name)
-                print(f"{args.name}: {inspect.getdoc(cls) or inspect.getdoc(inspect.getmodule(cls))}")
+                print(f"{args.name}: {operator_doc(get_operator(args.name))}")
             else:
                 print(json.dumps(operator_names(), indent=2))
             return 0

@@ -26,9 +26,10 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from etl_core_spark.operators.base import Operator, OperatorConfigError, PortMap, register_operator
+from etl_core_spark.operators.base import OperatorConfigError, bind_operator, ensure
 
 
+@bind_operator("as_of_join", in_ports=("left", "right"))
 def as_of_join(
     left: DataFrame,
     right: DataFrame,
@@ -94,6 +95,7 @@ def as_of_join(
     return out
 
 
+@bind_operator("range_join", in_ports=("points", "intervals"))
 def range_join(
     points: DataFrame,
     intervals: DataFrame,
@@ -191,6 +193,7 @@ def range_join(
     return joined.unionByName(unmatched)
 
 
+@bind_operator("interval_join", in_ports=("left", "right"))
 def interval_join(
     left: DataFrame,
     right: DataFrame,
@@ -260,73 +263,11 @@ def interval_join(
     )
 
 
-@register_operator("interval_join")
-class IntervalJoinOperator(Operator):
-    in_ports = ("left", "right")
-    out_ports = ("out",)
-
-    def validate_config(self) -> None:
-        for key in ("left_lo", "left_hi", "right_lo", "right_hi", "bucket_width"):
-            if self.config.get(key) is None:
-                raise OperatorConfigError(f"interval_join requires {key!r}")
-
-    def apply(self, inputs: PortMap) -> PortMap:
-        c = self.config
-        return {
-            "out": interval_join(
-                inputs["left"], inputs["right"], c["left_lo"], c["left_hi"],
-                c["right_lo"], c["right_hi"], float(c["bucket_width"]),
-                str(c.get("suffix", "_r")),
-            )
-        }
+def _check_temporal_join(how, **_) -> None:
+    ensure(how in ("inner", "left"), "temporal_join how must be inner|left")
 
 
-@register_operator("as_of_join")
-class AsOfJoinOperator(Operator):
-    in_ports = ("left", "right")
-    out_ports = ("out",)
-
-    def validate_config(self) -> None:
-        for key in ("on", "left_ts", "right_ts", "value_cols"):
-            if not self.config.get(key):
-                raise OperatorConfigError(f"as_of_join requires {key!r}")
-
-    def apply(self, inputs: PortMap) -> PortMap:
-        c = self.config
-        return {
-            "out": as_of_join(
-                inputs["left"], inputs["right"], c["on"], c["left_ts"],
-                c["right_ts"], list(c["value_cols"]), bool(c.get("strict", False)),
-            )
-        }
-
-
-@register_operator("range_join")
-class RangeJoinOperator(Operator):
-    """Bucketized point-in-interval join (``range_join``). Config:
-    ``point_col``, ``lo_col``, ``hi_col``, ``bucket_width`` (all
-    required), ``how`` ∈ {inner, left}, ``broadcast_intervals``
-    (True/False/None = stats-gated auto)."""
-
-    in_ports = ("points", "intervals")
-    out_ports = ("out",)
-
-    def validate_config(self) -> None:
-        for key in ("point_col", "lo_col", "hi_col", "bucket_width"):
-            if self.config.get(key) is None:
-                raise OperatorConfigError(f"range_join requires {key!r}")
-
-    def apply(self, inputs: PortMap) -> PortMap:
-        c = self.config
-        return {
-            "out": range_join(
-                inputs["points"], inputs["intervals"], c["point_col"],
-                c["lo_col"], c["hi_col"], float(c["bucket_width"]),
-                c.get("how", "inner"), c.get("broadcast_intervals"),
-            )
-        }
-
-
+@bind_operator("temporal_join", in_ports=("facts", "dim"), check=_check_temporal_join)
 def temporal_join(
     facts: DataFrame,
     dim: DataFrame,
@@ -401,39 +342,3 @@ def temporal_join(
         d[c] for c in d.columns if c not in on
     ]
     return joined.select(*out_cols)
-
-
-@register_operator("temporal_join")
-class TemporalJoinOperator(Operator):
-    """Config: ``on`` (list, required), ``ts_col`` (required);
-    ``valid_from_col``, ``valid_to_col``, ``how`` ∈ {inner, left}.
-    Ports: ``facts``, ``dim``."""
-
-    in_ports = ("facts", "dim")
-    out_ports = ("out",)
-
-    def validate_config(self) -> None:
-        if not self.config.get("on"):
-            raise OperatorConfigError("temporal_join requires 'on'")
-        if not self.config.get("ts_col"):
-            raise OperatorConfigError("temporal_join requires 'ts_col'")
-        if self.config.get("how", "inner") not in ("inner", "left"):
-            raise OperatorConfigError("temporal_join how must be inner|left")
-
-    def apply(self, inputs: PortMap) -> PortMap:
-        if set(inputs) != {"facts", "dim"}:
-            raise OperatorConfigError(
-                f"temporal_join takes ports facts/dim, got {sorted(inputs)}"
-            )
-        c = self.config
-        return {
-            "out": temporal_join(
-                inputs["facts"],
-                inputs["dim"],
-                list(c["on"]),
-                c["ts_col"],
-                c.get("valid_from_col", "valid_from"),
-                c.get("valid_to_col", "valid_to"),
-                c.get("how", "inner"),
-            )
-        }

@@ -13,14 +13,18 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from etl_core_spark.operators.base import (
-    Operator,
-    OperatorConfigError,
-    PortMap,
-    register_operator,
-)
+from etl_core_spark.operators.base import OperatorConfigError, bind_operator, ensure
 
 
+def _check_assoc_rules(min_support_count, max_basket_size, **_) -> None:
+    ensure(min_support_count >= 1, "assoc_rules min_support_count must be >= 1")
+    ensure(
+        max_basket_size is None or max_basket_size >= 2,
+        "assoc_rules max_basket_size must be >= 2",
+    )
+
+
+@bind_operator("assoc_rules", check=_check_assoc_rules)
 def assoc_rules(
     df: DataFrame,
     basket_col: str,
@@ -156,39 +160,3 @@ def assoc_rules(
             cab * nb, F.col("__ca").cast(dec) * F.col("__cb").cast(dec)
         ).alias("lift"),
     )
-
-
-@register_operator("assoc_rules")
-class AssocRulesOperator(Operator):
-    """Config: ``basket_col``, ``item_col`` (required);
-    ``min_support_count``, ``max_basket_size``, ``quantize``."""
-
-    in_ports = ("in",)
-    out_ports = ("out",)
-
-    def validate_config(self) -> None:
-        for key in ("basket_col", "item_col"):
-            if not self.config.get(key):
-                raise OperatorConfigError(f"assoc_rules requires {key!r}")
-        if int(self.config.get("min_support_count", 2)) < 1:
-            raise OperatorConfigError(
-                "assoc_rules min_support_count must be >= 1"
-            )
-        mbs = self.config.get("max_basket_size", 10_000)
-        if mbs is not None and int(mbs) < 2:
-            raise OperatorConfigError(
-                "assoc_rules max_basket_size must be >= 2"
-            )
-
-    def apply(self, inputs: PortMap) -> PortMap:
-        c = self.config
-        return {
-            "out": assoc_rules(
-                self.single_input(inputs),
-                c["basket_col"],
-                c["item_col"],
-                int(c.get("min_support_count", 2)),
-                c.get("max_basket_size", 10_000),
-                int(c.get("quantize", 9)),
-            )
-        }

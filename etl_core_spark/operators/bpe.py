@@ -36,12 +36,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from etl_core_spark.operators.base import (
-    Operator,
-    OperatorConfigError,
-    PortMap,
-    register_operator,
-)
+from etl_core_spark.operators.base import OperatorConfigError, bind_operator, ensure
 
 _EOW = "▁"  # end-of-word marker (the sentencepiece block char)
 
@@ -194,6 +189,11 @@ def bpe_encode(
     return df.mapInPandas(encode, out_schema)
 
 
+def _check_bpe_tokenize(num_merges, **_) -> None:
+    ensure(num_merges >= 1, "bpe_tokenize num_merges must be >= 1")
+
+
+@bind_operator("bpe_tokenize", in_ports=("in", "train"), check=_check_bpe_tokenize)
 def bpe_tokenize(
     df: DataFrame,
     train_df: DataFrame | None = None,
@@ -225,39 +225,3 @@ def bpe_tokenize(
                 "bpe merges must be (left, right) pairs"
             )
     return bpe_encode(df, merges, text_col, id_col, lowercase, emit_tokens)
-
-
-@register_operator("bpe_tokenize")
-class BpeTokenizeOperator(Operator):
-    """Config: ``text_col``, ``id_col``, ``num_merges``,
-    ``max_train_words``, ``lowercase``, ``emit_tokens``. Ports:
-    ``in`` (docs to encode); optional ``train`` (corpus to learn
-    merges from — default the input itself)."""
-
-    in_ports = ("in", "train")
-    out_ports = ("out",)
-
-    def validate_config(self) -> None:
-        if int(self.config.get("num_merges", 200)) < 1:
-            raise OperatorConfigError("bpe_tokenize num_merges must be >= 1")
-
-    def apply(self, inputs: PortMap) -> PortMap:
-        if not set(inputs) <= {"in", "train"} or "in" not in inputs:
-            raise OperatorConfigError(
-                f"bpe_tokenize takes ports in (+optional train), "
-                f"got {sorted(inputs)}"
-            )
-        c = self.config
-        return {
-            "out": bpe_tokenize(
-                inputs["in"],
-                inputs.get("train"),
-                c.get("text_col", "text"),
-                c.get("id_col", "doc_id"),
-                int(c.get("num_merges", 200)),
-                int(c.get("max_train_words", 100_000)),
-                bool(c.get("lowercase", True)),
-                bool(c.get("emit_tokens", False)),
-                c.get("merges"),
-            )
-        }

@@ -21,12 +21,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from etl_core_spark.operators.base import (
-    Operator,
-    OperatorConfigError,
-    PortMap,
-    register_operator,
-)
+from etl_core_spark.operators.base import OperatorConfigError, bind_operator, ensure
 
 
 def _all_eq(cond_pairs: list[tuple[Column, Column]]) -> Column:
@@ -37,6 +32,7 @@ def _all_eq(cond_pairs: list[tuple[Column, Column]]) -> Column:
     return out if out is not None else F.lit(True)
 
 
+@bind_operator("diff_datasets", in_ports=("left", "right"))
 def diff_datasets(
     left: DataFrame,
     right: DataFrame,
@@ -62,7 +58,7 @@ def diff_datasets(
     """
     if not key_cols:
         raise OperatorConfigError("diff_datasets requires key_cols")
-    if compare_cols is None:
+    if not compare_cols:
         rcols = set(right.columns)
         compare_cols = [
             c for c in left.columns if c not in set(key_cols) and c in rcols
@@ -124,35 +120,7 @@ def diff_datasets(
     )
 
 
-@register_operator("diff_datasets")
-class DiffDatasetsOperator(Operator):
-    """Config: ``key_cols`` (required), ``compare_cols``,
-    ``status_col``. Ports: ``left`` (old) and ``right`` (new)."""
-
-    in_ports = ("left", "right")
-    out_ports = ("out",)
-
-    def validate_config(self) -> None:
-        if not self.config.get("key_cols"):
-            raise OperatorConfigError("diff_datasets requires 'key_cols'")
-
-    def apply(self, inputs: PortMap) -> PortMap:
-        if set(inputs) != {"left", "right"}:
-            raise OperatorConfigError(
-                f"diff_datasets takes ports left/right, got {sorted(inputs)}"
-            )
-        c = self.config
-        return {
-            "out": diff_datasets(
-                inputs["left"],
-                inputs["right"],
-                list(c["key_cols"]),
-                list(c["compare_cols"]) if c.get("compare_cols") else None,
-                c.get("status_col", "diff_status"),
-            )
-        }
-
-
+@bind_operator("scd2_merge", in_ports=("current", "updates"))
 def scd2_merge(
     current: DataFrame,
     updates: DataFrame,
@@ -266,39 +234,7 @@ def scd2_merge(
     return hist.unionByName(merged)
 
 
-@register_operator("scd2_merge")
-class Scd2MergeOperator(Operator):
-    """Config: ``key_cols``, ``tracked_cols`` (required),
-    ``effective_col``, ``from_col``, ``to_col``. Ports: ``current``
-    (the dimension) and ``updates`` (the batch)."""
-
-    in_ports = ("current", "updates")
-    out_ports = ("out",)
-
-    def validate_config(self) -> None:
-        for key in ("key_cols", "tracked_cols"):
-            if not self.config.get(key):
-                raise OperatorConfigError(f"scd2_merge requires {key!r}")
-
-    def apply(self, inputs: PortMap) -> PortMap:
-        if set(inputs) != {"current", "updates"}:
-            raise OperatorConfigError(
-                f"scd2_merge takes ports current/updates, got {sorted(inputs)}"
-            )
-        c = self.config
-        return {
-            "out": scd2_merge(
-                inputs["current"],
-                inputs["updates"],
-                list(c["key_cols"]),
-                list(c["tracked_cols"]),
-                c.get("effective_col", "effective_at"),
-                c.get("from_col", "valid_from"),
-                c.get("to_col", "valid_to"),
-            )
-        }
-
-
+@bind_operator("ks_drift", in_ports=("left", "right"))
 def ks_drift(
     left: DataFrame,
     right: DataFrame,
@@ -399,35 +335,6 @@ def ks_drift(
     )
 
 
-@register_operator("ks_drift")
-class KsDriftOperator(Operator):
-    """Config: ``value_col`` (required); ``group_cols``,
-    ``quantize``. Ports: ``left``, ``right``."""
-
-    in_ports = ("left", "right")
-    out_ports = ("out",)
-
-    def validate_config(self) -> None:
-        if not self.config.get("value_col"):
-            raise OperatorConfigError("ks_drift requires 'value_col'")
-
-    def apply(self, inputs: PortMap) -> PortMap:
-        if set(inputs) != {"left", "right"}:
-            raise OperatorConfigError(
-                f"ks_drift takes ports left/right, got {sorted(inputs)}"
-            )
-        c = self.config
-        return {
-            "out": ks_drift(
-                inputs["left"],
-                inputs["right"],
-                c["value_col"],
-                list(c.get("group_cols") or []),
-                int(c.get("quantize", 6)),
-            )
-        }
-
-
 def bucket_index(vc: Column, edges: list[float]) -> Column:
     """Searched-CASE bucket index over strictly increasing edges:
     ``v < edges[0] -> 0, ..., else len(edges)`` — the shared binning
@@ -440,6 +347,7 @@ def bucket_index(vc: Column, edges: list[float]) -> Column:
     return expr
 
 
+@bind_operator("psi_drift", in_ports=("left", "right"))
 def psi_drift(
     left: DataFrame,
     right: DataFrame,
@@ -568,42 +476,11 @@ def psi_drift(
     )
 
 
-@register_operator("psi_drift")
-class PsiDriftOperator(Operator):
-    """Config: ``value_col``, ``edges`` (required); ``group_cols``,
-    ``epsilon``, ``threshold`` (None omits the drift column),
-    ``quantize``. Ports: ``left`` (reference), ``right`` (current)."""
-
-    in_ports = ("left", "right")
-    out_ports = ("out",)
-
-    def validate_config(self) -> None:
-        if not self.config.get("value_col"):
-            raise OperatorConfigError("psi_drift requires 'value_col'")
-        if not self.config.get("edges"):
-            raise OperatorConfigError("psi_drift requires 'edges'")
-
-    def apply(self, inputs: PortMap) -> PortMap:
-        if set(inputs) != {"left", "right"}:
-            raise OperatorConfigError(
-                f"psi_drift takes ports left/right, got {sorted(inputs)}"
-            )
-        c = self.config
-        thr = c.get("threshold", 0.2)
-        return {
-            "out": psi_drift(
-                inputs["left"],
-                inputs["right"],
-                c["value_col"],
-                [float(e) for e in c["edges"]],
-                list(c.get("group_cols") or []),
-                float(c.get("epsilon", 1e-4)),
-                float(thr) if thr is not None else None,
-                int(c.get("quantize", 6)),
-            )
-        }
+def _check_prop_ztest(control, treatment, **_) -> None:
+    ensure(control != treatment, "prop_ztest control and treatment must differ")
 
 
+@bind_operator("prop_ztest", check=_check_prop_ztest)
 def prop_ztest(
     df: DataFrame,
     variant_col: str,
@@ -708,41 +585,7 @@ def prop_ztest(
     )
 
 
-@register_operator("prop_ztest")
-class PropZtestOperator(Operator):
-    """Config: ``variant_col``, ``success_col``, ``control``,
-    ``treatment`` (required); ``group_cols``, ``z_crit`` (None omits
-    the significant column), ``quantize``."""
-
-    in_ports = ("in",)
-    out_ports = ("out",)
-
-    def validate_config(self) -> None:
-        for key in ("variant_col", "success_col", "control", "treatment"):
-            if not self.config.get(key):
-                raise OperatorConfigError(f"prop_ztest requires {key!r}")
-        if self.config["control"] == self.config["treatment"]:
-            raise OperatorConfigError(
-                "prop_ztest control and treatment must differ"
-            )
-
-    def apply(self, inputs: PortMap) -> PortMap:
-        c = self.config
-        zc = c.get("z_crit", 1.959963984540054)
-        return {
-            "out": prop_ztest(
-                self.single_input(inputs),
-                c["variant_col"],
-                c["success_col"],
-                c["control"],
-                c["treatment"],
-                list(c.get("group_cols") or []),
-                float(zc) if zc is not None else None,
-                int(c.get("quantize", 9)),
-            )
-        }
-
-
+@bind_operator("cdc_apply", in_ports=("snapshot", "changes"))
 def cdc_apply(
     snapshot: DataFrame,
     changes: DataFrame,
@@ -789,7 +632,7 @@ def cdc_apply(
     if not key_cols:
         raise OperatorConfigError("cdc_apply requires key_cols")
     dels = [str(x) for x in (delete_ops if delete_ops is not None else ["D"])]
-    if value_cols is None:
+    if not value_cols:
         ccols = set(changes.columns)
         value_cols = [
             c for c in snapshot.columns
@@ -840,38 +683,7 @@ def cdc_apply(
     return kept.select(*out)
 
 
-@register_operator("cdc_apply")
-class CdcApplyOperator(Operator):
-    """Config: ``key_cols`` (required); ``seq_col``, ``op_col``,
-    ``value_cols``, ``delete_ops``. Ports: ``snapshot`` (the table)
-    and ``changes`` (the CDC batch)."""
-
-    in_ports = ("snapshot", "changes")
-    out_ports = ("out",)
-
-    def validate_config(self) -> None:
-        if not self.config.get("key_cols"):
-            raise OperatorConfigError("cdc_apply requires 'key_cols'")
-
-    def apply(self, inputs: PortMap) -> PortMap:
-        if set(inputs) != {"snapshot", "changes"}:
-            raise OperatorConfigError(
-                f"cdc_apply takes ports snapshot/changes, got {sorted(inputs)}"
-            )
-        c = self.config
-        return {
-            "out": cdc_apply(
-                inputs["snapshot"],
-                inputs["changes"],
-                list(c["key_cols"]),
-                c.get("seq_col", "seq"),
-                c.get("op_col", "op"),
-                list(c["value_cols"]) if c.get("value_cols") else None,
-                list(c["delete_ops"]) if c.get("delete_ops") is not None else None,
-            )
-        }
-
-
+@bind_operator("mannwhitney_u", in_ports=("left", "right"))
 def mannwhitney_u(
     left: DataFrame,
     right: DataFrame,
@@ -1001,38 +813,11 @@ def mannwhitney_u(
     )
 
 
-@register_operator("mannwhitney_u")
-class MannWhitneyUOperator(Operator):
-    """Config: ``value_col`` (required); ``group_cols``, ``z_crit``
-    (None omits the significant column), ``quantize``. Ports:
-    ``left``, ``right``."""
-
-    in_ports = ("left", "right")
-    out_ports = ("out",)
-
-    def validate_config(self) -> None:
-        if not self.config.get("value_col"):
-            raise OperatorConfigError("mannwhitney_u requires 'value_col'")
-
-    def apply(self, inputs: PortMap) -> PortMap:
-        if set(inputs) != {"left", "right"}:
-            raise OperatorConfigError(
-                f"mannwhitney_u takes ports left/right, got {sorted(inputs)}"
-            )
-        c = self.config
-        zc = c.get("z_crit", 1.959963984540054)
-        return {
-            "out": mannwhitney_u(
-                inputs["left"],
-                inputs["right"],
-                c["value_col"],
-                list(c.get("group_cols") or []),
-                float(zc) if zc is not None else None,
-                int(c.get("quantize", 9)),
-            )
-        }
+def _check_welch_ttest(value_scale, **_) -> None:
+    ensure(value_scale > 0, "welch_ttest value_scale must be > 0")
 
 
+@bind_operator("welch_ttest", in_ports=("left", "right"), check=_check_welch_ttest)
 def welch_ttest(
     left: DataFrame,
     right: DataFrame,
@@ -1150,41 +935,16 @@ def welch_ttest(
     )
 
 
-@register_operator("welch_ttest")
-class WelchTtestOperator(Operator):
-    """Config: ``value_col`` (required); ``group_cols``,
-    ``value_scale``, ``t_crit`` (None omits the significant column),
-    ``quantize``. Ports: ``left``, ``right``."""
-
-    in_ports = ("left", "right")
-    out_ports = ("out",)
-
-    def validate_config(self) -> None:
-        if not self.config.get("value_col"):
-            raise OperatorConfigError("welch_ttest requires 'value_col'")
-        if int(self.config.get("value_scale", 100)) <= 0:
-            raise OperatorConfigError("welch_ttest value_scale must be > 0")
-
-    def apply(self, inputs: PortMap) -> PortMap:
-        if set(inputs) != {"left", "right"}:
-            raise OperatorConfigError(
-                f"welch_ttest takes ports left/right, got {sorted(inputs)}"
-            )
-        c = self.config
-        tc = c.get("t_crit", 1.959963984540054)
-        return {
-            "out": welch_ttest(
-                inputs["left"],
-                inputs["right"],
-                c["value_col"],
-                list(c.get("group_cols") or []),
-                int(c.get("value_scale", 100)),
-                float(tc) if tc is not None else None,
-                int(c.get("quantize", 9)),
-            )
-        }
+def _check_chi2_independence(categories_a, categories_b, **_) -> None:
+    for key, categories in (("categories_a", categories_a), ("categories_b", categories_b)):
+        ensure(
+            len(categories) >= 2,
+            f"chi2_independence {key!r} needs >= 2 categories "
+            "(1-category margins make dof = 0)",
+        )
 
 
+@bind_operator("chi2_independence", check=_check_chi2_independence)
 def chi2_independence(
     df: DataFrame,
     col_a: str,
@@ -1306,39 +1066,3 @@ def sum_or(acc, cols):
     for c in cols:
         acc = c if acc is None else acc + c
     return acc
-
-
-@register_operator("chi2_independence")
-class Chi2IndependenceOperator(Operator):
-    """Config: ``col_a``, ``col_b``, ``categories_a``,
-    ``categories_b`` (required); ``group_cols``, ``quantize``."""
-
-    in_ports = ("in",)
-    out_ports = ("out",)
-
-    def validate_config(self) -> None:
-        for key in ("col_a", "col_b", "categories_a", "categories_b"):
-            if not self.config.get(key):
-                raise OperatorConfigError(
-                    f"chi2_independence requires {key!r}"
-                )
-        for key in ("categories_a", "categories_b"):
-            if len(self.config[key]) < 2:
-                raise OperatorConfigError(
-                    f"chi2_independence {key!r} needs >= 2 categories "
-                    "(1-category margins make dof = 0)"
-                )
-
-    def apply(self, inputs: PortMap) -> PortMap:
-        c = self.config
-        return {
-            "out": chi2_independence(
-                self.single_input(inputs),
-                c["col_a"],
-                c["col_b"],
-                list(c["categories_a"]),
-                list(c["categories_b"]),
-                list(c.get("group_cols") or []),
-                int(c.get("quantize", 9)),
-            )
-        }

@@ -24,7 +24,14 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from etl_core_spark.functions import text as X
-from etl_core_spark.operators.base import Operator, OperatorConfigError, PortMap, register_operator
+from etl_core_spark.operators.base import (
+    Operator,
+    OperatorConfigError,
+    PortMap,
+    bind_operator,
+    ensure,
+    register_operator,
+)
 from etl_core_spark.sources.base_io import SinkOperator
 
 
@@ -987,6 +994,17 @@ def simhash_near_dup_pairs(
     )
 
 
+def _check_hamming_near_dup_pairs(max_hamming, bits, max_band_freq, **_) -> None:
+    ensure(max_hamming >= 0, "hamming_near_dup_pairs max_hamming must be >= 0")
+    ensure(1 <= bits <= 1024, "hamming_near_dup_pairs bits must be in [1, 1024]")
+    ensure(max_hamming < bits, "hamming_near_dup_pairs max_hamming must be < bits")
+    ensure(
+        max_band_freq is None or max_band_freq >= 1,
+        "hamming_near_dup_pairs max_band_freq must be >= 1",
+    )
+
+
+@bind_operator("hamming_near_dup_pairs", check=_check_hamming_near_dup_pairs)
 def hamming_near_dup_pairs(
     df: DataFrame,
     fp_col: str,
@@ -1160,57 +1178,6 @@ def hamming_near_dup_pairs(
     )
 
 
-@register_operator("hamming_near_dup_pairs")
-class HammingNearDupPairsOperator(Operator):
-    """Config: ``fp_col``, ``id_col`` (required); ``max_hamming``,
-    ``bits``, ``max_band_freq``. Emits (id_a, id_b, hamming) for
-    precomputed bit-string fingerprints within the hamming budget —
-    banded candidates, never all-pairs."""
-
-    in_ports = ("in",)
-    out_ports = ("out",)
-
-    def validate_config(self) -> None:
-        for key in ("fp_col", "id_col"):
-            if not self.config.get(key):
-                raise OperatorConfigError(
-                    f"hamming_near_dup_pairs requires {key!r}"
-                )
-        if int(self.config.get("max_hamming", 6)) < 0:
-            raise OperatorConfigError(
-                "hamming_near_dup_pairs max_hamming must be >= 0"
-            )
-        if not 1 <= int(self.config.get("bits", 64)) <= 1024:
-            raise OperatorConfigError(
-                "hamming_near_dup_pairs bits must be in [1, 1024]"
-            )
-        if int(self.config.get("max_hamming", 6)) >= int(
-            self.config.get("bits", 64)
-        ):
-            raise OperatorConfigError(
-                "hamming_near_dup_pairs max_hamming must be < bits"
-            )
-        mbf = self.config.get("max_band_freq")
-        if mbf is not None and int(mbf) < 1:
-            raise OperatorConfigError(
-                "hamming_near_dup_pairs max_band_freq must be >= 1"
-            )
-
-    def apply(self, inputs: PortMap) -> PortMap:
-        c = self.config
-        mbf = c.get("max_band_freq")
-        return {
-            "out": hamming_near_dup_pairs(
-                self.single_input(inputs),
-                c["fp_col"],
-                c["id_col"],
-                int(c.get("max_hamming", 6)),
-                int(c.get("bits", 64)),
-                int(mbf) if mbf is not None else None,
-            )
-        }
-
-
 def typo_near_dup_pairs(
     df: DataFrame,
     text_col: str,
@@ -1305,6 +1272,7 @@ def _star_overlap_probe(e: DataFrame) -> bool:
     return overlap == 0
 
 
+@bind_operator("near_dup_clusters", in_ports=("pairs",))
 def connected_components(
     pairs: DataFrame,
     id_a: str = "id_a",
@@ -1489,30 +1457,6 @@ def connected_components(
         "indicates a defect or an extraordinarily large graph; raise "
         "max_iters"
     )
-
-
-@register_operator("near_dup_clusters")
-class NearDupClustersOperator(Operator):
-    """CC over a pairs relation (in-port ``pairs`` with columns
-    ``id_a``/``id_b``) → (id, cluster_id). Compose after any pair
-    producer (minhash/simhash/winnow/cosine near-dup)."""
-
-    in_ports = ("pairs",)
-    out_ports = ("out",)
-
-    def validate_config(self) -> None:
-        self.id_a = self.config.get("id_a", "id_a")
-        self.id_b = self.config.get("id_b", "id_b")
-        self.max_iters = int(self.config.get("max_iters", 50))
-        self.driver_max_edges = int(self.config.get("driver_max_edges", 1_000_000))
-
-    def apply(self, inputs: PortMap) -> PortMap:
-        return {
-            "out": connected_components(
-                inputs["pairs"], self.id_a, self.id_b, self.max_iters,
-                driver_max_edges=self.driver_max_edges,
-            )
-        }
 
 
 def simhash_dup_groups(df: DataFrame, text_col: str, id_col: str, shingle_n: int = 2) -> DataFrame:
@@ -1767,10 +1711,15 @@ class MinHashIndexSink(SinkOperator):
         )
 
 
+def _check_containment_pairs(threshold, **_) -> None:
+    ensure(0 < threshold <= 1, "containment threshold must be in (0, 1]")
+
+
+@bind_operator("containment_pairs", check=_check_containment_pairs)
 def containment_pairs(
     df: DataFrame,
-    text_col: str,
-    id_col: str,
+    text_col: str = "text",
+    id_col: str = "doc_id",
     threshold: float = 0.8,
     shingle_n: int = 3,
     max_shingle_freq: int | None = 100,
@@ -1844,36 +1793,3 @@ def containment_pairs(
         .where(F.col("containment") >= float(threshold))
         .select("id_a", "id_b", "n_shared", "containment")
     )
-
-
-@register_operator("containment_pairs")
-class ContainmentPairsOperator(Operator):
-    """Config: ``text_col``, ``id_col``, ``threshold``, ``shingle_n``,
-    ``max_shingle_freq``."""
-
-    in_ports = ("in",)
-    out_ports = ("out",)
-
-    def validate_config(self) -> None:
-        t = float(self.config.get("threshold", 0.8))
-        if not 0 < t <= 1:
-            raise OperatorConfigError(
-                "containment threshold must be in (0, 1]"
-            )
-
-    def apply(self, inputs: PortMap) -> PortMap:
-        c = self.config
-        return {
-            "out": containment_pairs(
-                self.single_input(inputs),
-                c.get("text_col", "text"),
-                c.get("id_col", "doc_id"),
-                float(c.get("threshold", 0.8)),
-                int(c.get("shingle_n", 3)),
-                (
-                    int(c["max_shingle_freq"])
-                    if c.get("max_shingle_freq") is not None
-                    else None
-                ),
-            )
-        }

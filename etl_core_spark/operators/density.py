@@ -29,14 +29,15 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from etl_core_spark.operators.base import (
-    Operator,
-    OperatorConfigError,
-    PortMap,
-    register_operator,
-)
+from etl_core_spark.operators.base import OperatorConfigError, bind_operator, ensure
 
 
+def _check_dbscan(eps, min_pts, **_) -> None:
+    ensure(eps > 0, "dbscan eps must be > 0")
+    ensure(min_pts >= 1, "dbscan min_pts must be >= 1")
+
+
+@bind_operator("dbscan", check=_check_dbscan)
 def dbscan(
     df: DataFrame,
     x_col: str,
@@ -167,35 +168,3 @@ def dbscan(
             F.coalesce(F.col("is_core"), F.lit(False)).alias("is_core"),
         )
     )
-
-
-@register_operator("dbscan")
-class DbscanOperator(Operator):
-    """Config: ``x_col``, ``y_col``, ``eps``, ``min_pts`` (required);
-    ``id_col``, ``max_cell_size``."""
-
-    in_ports = ("in",)
-    out_ports = ("out",)
-
-    def validate_config(self) -> None:
-        for key in ("x_col", "y_col", "eps", "min_pts"):
-            if self.config.get(key) in (None, ""):
-                raise OperatorConfigError(f"dbscan requires {key!r}")
-        if float(self.config["eps"]) <= 0:
-            raise OperatorConfigError("dbscan eps must be > 0")
-        if int(self.config["min_pts"]) < 1:
-            raise OperatorConfigError("dbscan min_pts must be >= 1")
-
-    def apply(self, inputs: PortMap) -> PortMap:
-        c = self.config
-        return {
-            "out": dbscan(
-                self.single_input(inputs),
-                c["x_col"],
-                c["y_col"],
-                float(c["eps"]),
-                int(c["min_pts"]),
-                c.get("id_col", "id"),
-                int(c.get("max_cell_size", 5000)),
-            )
-        }

@@ -20,6 +20,8 @@ from etl_core_spark.operators.base import (
     Operator,
     OperatorConfigError,
     PortMap,
+    bind_operator,
+    ensure,
     register_operator,
 )
 
@@ -68,6 +70,7 @@ def _loop_join_hint(df: DataFrame) -> DataFrame:
     return df
 
 
+@bind_operator("pagerank", required=("src", "dst"))
 def pagerank(
     edges: DataFrame,
     src: str = "src",
@@ -314,35 +317,7 @@ def pagerank(
     )
 
 
-@register_operator("pagerank")
-class PageRankOperator(Operator):
-    """Config: ``src``, ``dst`` (required); ``damping``,
-    ``iterations``, ``undirected``, ``quantize``, ``weight_col``."""
-
-    in_ports = ("in",)
-    out_ports = ("out",)
-
-    def validate_config(self) -> None:
-        for key in ("src", "dst"):
-            if not self.config.get(key):
-                raise OperatorConfigError(f"pagerank requires {key!r}")
-
-    def apply(self, inputs: PortMap) -> PortMap:
-        c = self.config
-        return {
-            "out": pagerank(
-                self.single_input(inputs),
-                c["src"],
-                c["dst"],
-                float(c.get("damping", 0.85)),
-                int(c.get("iterations", 10)),
-                bool(c.get("undirected", False)),
-                int(c.get("quantize", 9)),
-                c.get("weight_col"),
-            )
-        }
-
-
+@bind_operator("label_propagation", required=("src", "dst"))
 def label_propagation(
     edges: DataFrame,
     src: str = "src",
@@ -406,32 +381,7 @@ def label_propagation(
     )
 
 
-@register_operator("label_propagation")
-class LabelPropagationOperator(Operator):
-    """Config: ``src``, ``dst`` (required); ``iterations``."""
-
-    in_ports = ("in",)
-    out_ports = ("out",)
-
-    def validate_config(self) -> None:
-        for key in ("src", "dst"):
-            if not self.config.get(key):
-                raise OperatorConfigError(
-                    f"label_propagation requires {key!r}"
-                )
-
-    def apply(self, inputs: PortMap) -> PortMap:
-        c = self.config
-        return {
-            "out": label_propagation(
-                self.single_input(inputs),
-                c["src"],
-                c["dst"],
-                int(c.get("iterations", 5)),
-            )
-        }
-
-
+@bind_operator("triangle_count", required=("src", "dst"))
 def triangle_count(
     edges: DataFrame,
     src: str = "src",
@@ -521,27 +471,7 @@ def triangle_count(
     )
 
 
-@register_operator("triangle_count")
-class TriangleCountOperator(Operator):
-    """Config: ``src``, ``dst`` (required)."""
-
-    in_ports = ("in",)
-    out_ports = ("out",)
-
-    def validate_config(self) -> None:
-        for key in ("src", "dst"):
-            if not self.config.get(key):
-                raise OperatorConfigError(f"triangle_count requires {key!r}")
-
-    def apply(self, inputs: PortMap) -> PortMap:
-        c = self.config
-        return {
-            "out": triangle_count(
-                self.single_input(inputs), c["src"], c["dst"]
-            )
-        }
-
-
+@bind_operator("personalized_pagerank", in_ports=("in", "seeds"), required=("src", "dst"))
 def personalized_pagerank(
     edges: DataFrame,
     seeds: DataFrame,
@@ -745,41 +675,7 @@ def personalized_pagerank(
     )
 
 
-@register_operator("personalized_pagerank")
-class PersonalizedPageRankOperator(Operator):
-    """Config: ``src``, ``dst`` (required); ``seed_col``,
-    ``damping``, ``iterations``, ``quantize``, ``directed``
-    (TrustRank proper: trust flows only along link direction,
-    dangling mass teleports to the seeds). Ports: ``in`` (edges),
-    ``seeds`` (seed node list)."""
-
-    in_ports = ("in", "seeds")
-    out_ports = ("out",)
-
-    def validate_config(self) -> None:
-        for key in ("src", "dst"):
-            if not self.config.get(key):
-                raise OperatorConfigError(
-                    f"personalized_pagerank requires {key!r}"
-                )
-
-    def apply(self, inputs: PortMap) -> PortMap:
-        c = self.config
-        return {
-            "out": personalized_pagerank(
-                inputs["in"],
-                inputs["seeds"],
-                c["src"],
-                c["dst"],
-                c.get("seed_col", "node"),
-                float(c.get("damping", 0.85)),
-                int(c.get("iterations", 10)),
-                int(c.get("quantize", 9)),
-                bool(c.get("directed", False)),
-            )
-        }
-
-
+@bind_operator("bfs_distances", in_ports=("in", "seeds"), required=("src", "dst"))
 def bfs_distances(
     edges: DataFrame,
     seeds: DataFrame,
@@ -857,38 +753,6 @@ def bfs_distances(
     )
 
 
-@register_operator("bfs_distances")
-class BfsDistancesOperator(Operator):
-    """Config: ``src``, ``dst`` (required); ``seed_col``,
-    ``max_hops``, ``directed``. Ports: ``in`` (edges), ``seeds``."""
-
-    in_ports = ("in", "seeds")
-    out_ports = ("out",)
-
-    def validate_config(self) -> None:
-        for key in ("src", "dst"):
-            if not self.config.get(key):
-                raise OperatorConfigError(f"bfs_distances requires {key!r}")
-
-    def apply(self, inputs: PortMap) -> PortMap:
-        if set(inputs) != {"in", "seeds"}:
-            raise OperatorConfigError(
-                f"bfs_distances takes ports in/seeds, got {sorted(inputs)}"
-            )
-        c = self.config
-        return {
-            "out": bfs_distances(
-                inputs["in"],
-                inputs["seeds"],
-                c["src"],
-                c["dst"],
-                c.get("seed_col", "node"),
-                int(c.get("max_hops", 6)),
-                bool(c.get("directed", False)),
-            )
-        }
-
-
 @register_operator("connected_components")
 class ConnectedComponentsOperator(Operator):
     """Standalone connected components over ANY edge list →
@@ -936,6 +800,7 @@ class ConnectedComponentsOperator(Operator):
         }
 
 
+@bind_operator("modularity", in_ports=("in", "assignment"), required=("src", "dst"))
 def modularity(
     edges: DataFrame,
     assignment: DataFrame,
@@ -1047,39 +912,11 @@ def modularity(
     )
 
 
-@register_operator("modularity")
-class ModularityOperator(Operator):
-    """Config: ``src``, ``dst``, ``node_col``, ``community_col``,
-    ``quantize``. Ports: ``in`` (edges), ``assignment``
-    (node -> community)."""
-
-    in_ports = ("in", "assignment")
-    out_ports = ("out",)
-
-    def validate_config(self) -> None:
-        for key in ("src", "dst"):
-            if not self.config.get(key):
-                raise OperatorConfigError(f"modularity requires {key!r}")
-
-    def apply(self, inputs: PortMap) -> PortMap:
-        if set(inputs) != {"in", "assignment"}:
-            raise OperatorConfigError(
-                f"modularity takes ports in/assignment, got {sorted(inputs)}"
-            )
-        c = self.config
-        return {
-            "out": modularity(
-                inputs["in"],
-                inputs["assignment"],
-                c["src"],
-                c["dst"],
-                c.get("node_col", "node"),
-                c.get("community_col", "community"),
-                int(c.get("quantize", 9)),
-            )
-        }
+def _check_k_core(k, **_) -> None:
+    ensure(k >= 1, "k_core requires k >= 1")
 
 
+@bind_operator("k_core", check=_check_k_core)
 def k_core(
     edges: DataFrame,
     k: int,
@@ -1141,30 +978,11 @@ def k_core(
     )
 
 
-@register_operator("k_core")
-class KCoreOperator(Operator):
-    """Config: ``k`` (required); ``src``, ``dst``, ``max_rounds``."""
-
-    in_ports = ("in",)
-    out_ports = ("out",)
-
-    def validate_config(self) -> None:
-        if int(self.config.get("k", 0)) < 1:
-            raise OperatorConfigError("k_core requires k >= 1")
-
-    def apply(self, inputs: PortMap) -> PortMap:
-        c = self.config
-        return {
-            "out": k_core(
-                self.single_input(inputs),
-                int(c["k"]),
-                c.get("src", "src"),
-                c.get("dst", "dst"),
-                int(c.get("max_rounds", 20)),
-            )
-        }
+def _check_louvain(iterations, **_) -> None:
+    ensure(iterations >= 1, "louvain iterations must be >= 1")
 
 
+@bind_operator("louvain", required=("src", "dst"), check=_check_louvain)
 def louvain(
     edges: DataFrame,
     src: str = "src",
@@ -1308,32 +1126,6 @@ def louvain(
     )
 
 
-@register_operator("louvain")
-class LouvainOperator(Operator):
-    """Config: ``src``, ``dst`` (required); ``iterations``."""
-
-    in_ports = ("in",)
-    out_ports = ("out",)
-
-    def validate_config(self) -> None:
-        for key in ("src", "dst"):
-            if not self.config.get(key):
-                raise OperatorConfigError(f"louvain requires {key!r}")
-        if int(self.config.get("iterations", 4)) < 1:
-            raise OperatorConfigError("louvain iterations must be >= 1")
-
-    def apply(self, inputs: PortMap) -> PortMap:
-        c = self.config
-        return {
-            "out": louvain(
-                self.single_input(inputs),
-                c["src"],
-                c["dst"],
-                int(c.get("iterations", 4)),
-            )
-        }
-
-
 def _louvain_local_move(
     e: DataFrame,
     deg: DataFrame,
@@ -1411,6 +1203,12 @@ def _louvain_local_move(
     return assign
 
 
+def _check_louvain_multilevel(iterations, levels, **_) -> None:
+    ensure(iterations >= 1, "louvain_multilevel iterations must be >= 1")
+    ensure(levels >= 1, "louvain_multilevel levels must be >= 1")
+
+
+@bind_operator("louvain_multilevel", required=("src", "dst"), check=_check_louvain_multilevel)
 def louvain_multilevel(
     edges: DataFrame,
     src: str = "src",
@@ -1683,42 +1481,18 @@ def louvain_multilevel(
     )
 
 
-@register_operator("louvain_multilevel")
-class LouvainMultilevelOperator(Operator):
-    """Config: ``src``, ``dst`` (required); ``iterations`` (per
-    level), ``levels``."""
-
-    in_ports = ("in",)
-    out_ports = ("out",)
-
-    def validate_config(self) -> None:
-        for key in ("src", "dst"):
-            if not self.config.get(key):
-                raise OperatorConfigError(
-                    f"louvain_multilevel requires {key!r}"
-                )
-        if int(self.config.get("iterations", 4)) < 1:
-            raise OperatorConfigError(
-                "louvain_multilevel iterations must be >= 1"
-            )
-        if int(self.config.get("levels", 2)) < 1:
-            raise OperatorConfigError(
-                "louvain_multilevel levels must be >= 1"
-            )
-
-    def apply(self, inputs: PortMap) -> PortMap:
-        c = self.config
-        return {
-            "out": louvain_multilevel(
-                self.single_input(inputs),
-                c["src"],
-                c["dst"],
-                int(c.get("iterations", 4)),
-                int(c.get("levels", 2)),
-            )
-        }
+def _check_link_predict(method, max_degree, min_common, weight_scale, quantize, **_) -> None:
+    ensure(
+        method in ("common_neighbors", "resource_allocation", "adamic_adar"),
+        f"link_predict: unknown method {method!r}",
+    )
+    ensure(max_degree >= 2, "link_predict max_degree must be >= 2")
+    ensure(min_common >= 1, "link_predict min_common must be >= 1")
+    ensure(weight_scale >= 1, "link_predict weight_scale must be >= 1")
+    ensure(quantize >= 1, "link_predict quantize must be >= 1")
 
 
+@bind_operator("link_predict", required=("src", "dst"), check=_check_link_predict)
 def link_predict(
     edges: DataFrame,
     src: str = "src",
@@ -1870,56 +1644,3 @@ def link_predict(
         F.col("__cn").cast("long").alias("common_neighbors"),
         score.alias("score"),
     )
-
-
-@register_operator("link_predict")
-class LinkPredictOperator(Operator):
-    """Config: ``src``, ``dst`` (required); ``method``,
-    ``max_degree``, ``min_common``, ``exclude_adjacent``,
-    ``weight_scale``, ``quantize``."""
-
-    in_ports = ("in",)
-    out_ports = ("out",)
-
-    def validate_config(self) -> None:
-        for key in ("src", "dst"):
-            if not self.config.get(key):
-                raise OperatorConfigError(f"link_predict requires {key!r}")
-        m = self.config.get("method", "resource_allocation")
-        if m not in ("common_neighbors", "resource_allocation",
-                     "adamic_adar"):
-            raise OperatorConfigError(
-                f"link_predict: unknown method {m!r}"
-            )
-        if int(self.config.get("max_degree", 10_000)) < 2:
-            raise OperatorConfigError(
-                "link_predict max_degree must be >= 2"
-            )
-        if int(self.config.get("min_common", 1)) < 1:
-            raise OperatorConfigError(
-                "link_predict min_common must be >= 1"
-            )
-        if int(self.config.get("weight_scale", 12)) < 1:
-            raise OperatorConfigError(
-                "link_predict weight_scale must be >= 1"
-            )
-        if int(self.config.get("quantize", 9)) < 1:
-            raise OperatorConfigError(
-                "link_predict quantize must be >= 1"
-            )
-
-    def apply(self, inputs: PortMap) -> PortMap:
-        c = self.config
-        return {
-            "out": link_predict(
-                self.single_input(inputs),
-                c["src"],
-                c["dst"],
-                c.get("method", "resource_allocation"),
-                int(c.get("max_degree", 10_000)),
-                int(c.get("min_common", 1)),
-                bool(c.get("exclude_adjacent", True)),
-                int(c.get("weight_scale", 12)),
-                int(c.get("quantize", 9)),
-            )
-        }

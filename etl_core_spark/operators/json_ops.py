@@ -17,10 +17,11 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from etl_core_spark.operators.base import Operator, OperatorConfigError, PortMap, register_operator
+from etl_core_spark.operators.base import OperatorConfigError, bind_operator
 from etl_core_spark.schema import Schema
 
 
+@bind_operator("json_expand")
 def json_expand(
     df: DataFrame,
     json_col: str,
@@ -41,25 +42,3 @@ def json_expand(
     # withColumn above already replaced the source — dropping the name
     # now would delete the freshly extracted field, not the raw JSON
     return out.drop(json_col) if drop_source and not replaces_source else out
-
-
-@register_operator("json_expand")
-class JsonExpandOperator(Operator):
-    in_ports = ("in",)
-    out_ports = ("out",)
-
-    def validate_config(self) -> None:
-        if not self.config.get("json_col"):
-            raise OperatorConfigError("json_expand requires 'json_col'")
-        if not self.config.get("fields"):
-            raise OperatorConfigError("json_expand requires 'fields'")
-
-    def apply(self, inputs: PortMap) -> PortMap:
-        return {
-            "out": json_expand(
-                self.single_input(inputs),
-                self.config["json_col"],
-                list(self.config["fields"]),
-                bool(self.config.get("drop_source", False)),
-            )
-        }

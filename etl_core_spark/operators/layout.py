@@ -16,14 +16,15 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from etl_core_spark.functions.layout import zvalue
-from etl_core_spark.operators.base import (
-    Operator,
-    OperatorConfigError,
-    PortMap,
-    register_operator,
-)
+from etl_core_spark.operators.base import OperatorConfigError, bind_operator, ensure
 
 
+def _check_zorder_key(cols, method, **_) -> None:
+    ensure(1 <= len(cols) <= 4, "zorder_key requires 1-4 'cols'")
+    ensure(method in ("range", "quantile"), "zorder_key method must be range/quantile")
+
+
+@bind_operator("zorder_key", check=_check_zorder_key)
 def zorder_key(
     df: DataFrame,
     cols: list[str],
@@ -63,35 +64,3 @@ def zorder_key(
             int(partitions), F.col(out_col)
         ).sortWithinPartitions(out_col)
     return keyed
-
-
-@register_operator("zorder_key")
-class ZorderKeyOperator(Operator):
-    """Config: ``cols`` (required, 1-4); ``method`` (range/quantile),
-    ``out_col`` (default ``zvalue``), ``partitions`` (optional —
-    when set, the output is range-partitioned and sorted on the
-    z-value, ready for a clustered write)."""
-
-    in_ports = ("in",)
-    out_ports = ("out",)
-
-    def validate_config(self) -> None:
-        cols = self.config.get("cols")
-        if not cols or not 1 <= len(cols) <= 4:
-            raise OperatorConfigError("zorder_key requires 1-4 'cols'")
-        if self.config.get("method", "range") not in ("range", "quantile"):
-            raise OperatorConfigError(
-                "zorder_key method must be range/quantile"
-            )
-
-    def apply(self, inputs: PortMap) -> PortMap:
-        c = self.config
-        return {
-            "out": zorder_key(
-                self.single_input(inputs),
-                list(c["cols"]),
-                c.get("method", "range"),
-                c.get("out_col", "zvalue"),
-                int(c["partitions"]) if c.get("partitions") else None,
-            )
-        }

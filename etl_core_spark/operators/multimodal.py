@@ -29,7 +29,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from etl_core_spark.operators.base import Operator, OperatorConfigError, PortMap, register_operator
+from etl_core_spark.operators.base import OperatorConfigError, bind_operator, ensure
 
 MEDIA_SCHEMA = T.StructType(
     [
@@ -136,6 +136,11 @@ def _cap_slices(
                 yield pdf
 
 
+def _check_extract_features(feature_dim, **_) -> None:
+    ensure(feature_dim > 0, "feature_dim must be positive")
+
+
+@bind_operator("multimodal_features", check=_check_extract_features)
 def extract_features(
     df: DataFrame,
     payload_col: str = "payload",
@@ -189,6 +194,11 @@ PNG_FEATURE_SCHEMA = T.StructType(
 )
 
 
+def _check_png_features(on_error, **_) -> None:
+    ensure(on_error in ("raise", "null"), "png_features on_error must be raise|null")
+
+
+@bind_operator("png_features", check=_check_png_features)
 def png_features(
     df: DataFrame,
     payload_col: str = "payload",
@@ -274,33 +284,6 @@ def png_features(
     )
 
 
-@register_operator("png_features")
-class PngFeaturesOperator(Operator):
-    """Config: ``payload_col``, ``id_col``, ``on_error``
-    (raise|null), ``max_records_per_batch``."""
-
-    in_ports = ("in",)
-    out_ports = ("out",)
-
-    def validate_config(self) -> None:
-        if self.config.get("on_error", "raise") not in ("raise", "null"):
-            raise OperatorConfigError(
-                "png_features on_error must be raise|null"
-            )
-
-    def apply(self, inputs: PortMap) -> PortMap:
-        c = self.config
-        return {
-            "out": png_features(
-                self.single_input(inputs),
-                payload_col=c.get("payload_col", "payload"),
-                id_col=c.get("id_col", "media_id"),
-                on_error=c.get("on_error", "raise"),
-                max_records_per_batch=int(c.get("max_records_per_batch", 256)),
-            )
-        }
-
-
 def frame_sample(df: DataFrame, every_ms: int = 1000, id_col: str = "media_id") -> DataFrame:
     """Video frame sampling plan: expand (media, duration) into frame
     timestamps via ``sequence`` — pure SQL, the decode of each frame
@@ -341,29 +324,6 @@ def synthetic_media(
     # actual row count so tiny tables don't fan out to 32 workers
     parts = max(1, min(n // 16, spark.sparkContext.defaultParallelism))
     return spark.createDataFrame(rows, MEDIA_SCHEMA).coalesce(parts)
-
-
-@register_operator("multimodal_features")
-class MultimodalFeaturesOperator(Operator):
-    in_ports = ("in",)
-    out_ports = ("out",)
-
-    def validate_config(self) -> None:
-        self.feature_dim = int(self.config.get("feature_dim", 8))
-        if self.feature_dim <= 0:
-            raise OperatorConfigError("feature_dim must be positive")
-
-    def apply(self, inputs: PortMap) -> PortMap:
-        df = self.single_input(inputs)
-        return {
-            "out": extract_features(
-                df,
-                payload_col=self.config.get("payload_col", "payload"),
-                id_col=self.config.get("id_col", "media_id"),
-                feature_dim=self.feature_dim,
-                max_records_per_batch=int(self.config.get("max_records_per_batch", 256)),
-            )
-        }
 
 
 PHASH_SCHEMA = (
@@ -416,6 +376,12 @@ def _ahash_bits(w: int, h: int, ch: int, px: bytes, g: int) -> str:
     return "".join("1" if m > mean_of_means else "0" for m in means)
 
 
+def _check_image_phash(grid, on_error, **_) -> None:
+    ensure(on_error in ("raise", "null"), "image_phash on_error must be raise|null")
+    ensure(grid >= 2, "image_phash grid must be >= 2")
+
+
+@bind_operator("image_phash", check=_check_image_phash)
 def image_phash(
     df: DataFrame,
     payload_col: str = "payload",
@@ -504,44 +470,17 @@ def image_phash(
     )
 
 
-@register_operator("image_phash")
-class ImagePhashOperator(Operator):
-    """Config: ``payload_col``, ``id_col``, ``grid``, ``on_error``
-    (raise|null), ``max_records_per_batch``."""
-
-    in_ports = ("in",)
-    out_ports = ("out",)
-
-    def validate_config(self) -> None:
-        if self.config.get("on_error", "raise") not in ("raise", "null"):
-            raise OperatorConfigError(
-                "image_phash on_error must be raise|null"
-            )
-        if int(self.config.get("grid", 8)) < 2:
-            raise OperatorConfigError("image_phash grid must be >= 2")
-
-    def apply(self, inputs: PortMap) -> PortMap:
-        c = self.config
-        return {
-            "out": image_phash(
-                self.single_input(inputs),
-                payload_col=c.get("payload_col", "payload"),
-                id_col=c.get("id_col", "media_id"),
-                grid=int(c.get("grid", 8)),
-                on_error=c.get("on_error", "raise"),
-                max_records_per_batch=int(
-                    c.get("max_records_per_batch", 256)
-                ),
-            )
-        }
-
-
 WAV_FEATURE_SCHEMA = (
     "media_id long, sample_rate int, channels int, n_frames long, "
     "sum_amp long, sum_sq long, peak int, error string"
 )
 
 
+def _check_wav_features(on_error, **_) -> None:
+    ensure(on_error in ("raise", "null"), "wav_features on_error must be raise|null")
+
+
+@bind_operator("wav_features", check=_check_wav_features)
 def wav_features(
     df: DataFrame,
     payload_col: str = "payload",
@@ -626,35 +565,6 @@ def wav_features(
     )
 
 
-@register_operator("wav_features")
-class WavFeaturesOperator(Operator):
-    """Config: ``payload_col``, ``id_col``, ``on_error``
-    (raise|null), ``max_records_per_batch``."""
-
-    in_ports = ("in",)
-    out_ports = ("out",)
-
-    def validate_config(self) -> None:
-        if self.config.get("on_error", "raise") not in ("raise", "null"):
-            raise OperatorConfigError(
-                "wav_features on_error must be raise|null"
-            )
-
-    def apply(self, inputs: PortMap) -> PortMap:
-        c = self.config
-        return {
-            "out": wav_features(
-                self.single_input(inputs),
-                payload_col=c.get("payload_col", "payload"),
-                id_col=c.get("id_col", "media_id"),
-                on_error=c.get("on_error", "raise"),
-                max_records_per_batch=int(
-                    c.get("max_records_per_batch", 256)
-                ),
-            )
-        }
-
-
 GIF_FRAMES_SCHEMA = (
     "media_id long, frame_idx int, frame_left int, frame_top int, "
     "width int, height int, sum_r long, sum_g long, sum_b long, "
@@ -662,6 +572,14 @@ GIF_FRAMES_SCHEMA = (
 )
 
 
+def _check_gif_frames(every_n, max_frames, grid, on_error, **_) -> None:
+    ensure(on_error in ("raise", "null"), "gif_frames on_error must be raise|null")
+    ensure(every_n >= 1, "gif_frames every_n must be >= 1")
+    ensure(max_frames is None or max_frames >= 1, "gif_frames max_frames must be >= 1")
+    ensure(grid >= 2, "gif_frames grid must be >= 2")
+
+
+@bind_operator("gif_frames", check=_check_gif_frames)
 def gif_frames(
     df: DataFrame,
     payload_col: str = "payload",
@@ -782,51 +700,15 @@ def gif_frames(
     )
 
 
-@register_operator("gif_frames")
-class GifFramesOperator(Operator):
-    """Config: ``payload_col``, ``id_col``, ``every_n``,
-    ``max_frames``, ``on_error`` (raise|null),
-    ``max_records_per_batch``."""
-
-    in_ports = ("in",)
-    out_ports = ("out",)
-
-    def validate_config(self) -> None:
-        if self.config.get("on_error", "raise") not in ("raise", "null"):
-            raise OperatorConfigError(
-                "gif_frames on_error must be raise|null"
-            )
-        if int(self.config.get("every_n", 1)) < 1:
-            raise OperatorConfigError("gif_frames every_n must be >= 1")
-        mf = self.config.get("max_frames")
-        if mf is not None and int(mf) < 1:
-            raise OperatorConfigError("gif_frames max_frames must be >= 1")
-        if int(self.config.get("grid", 8)) < 2:
-            raise OperatorConfigError("gif_frames grid must be >= 2")
-
-    def apply(self, inputs: PortMap) -> PortMap:
-        c = self.config
-        mf = c.get("max_frames")
-        return {
-            "out": gif_frames(
-                self.single_input(inputs),
-                payload_col=c.get("payload_col", "payload"),
-                id_col=c.get("id_col", "media_id"),
-                every_n=int(c.get("every_n", 1)),
-                max_frames=None if mf is None else int(mf),
-                with_phash=bool(c.get("with_phash", False)),
-                grid=int(c.get("grid", 8)),
-                on_error=c.get("on_error", "raise"),
-                max_records_per_batch=int(
-                    c.get("max_records_per_batch", 256)
-                ),
-            )
-        }
-
-
 AUDIO_FP_SCHEMA = "media_id long, afp string, n_samples long, error string"
 
 
+def _check_audio_fingerprint(bands, on_error, **_) -> None:
+    ensure(on_error in ("raise", "null"), "audio_fingerprint on_error must be raise|null")
+    ensure(2 <= bands <= 1024, "audio_fingerprint bands must be in [2, 1024]")
+
+
+@bind_operator("audio_fingerprint", check=_check_audio_fingerprint)
 def audio_fingerprint(
     df: DataFrame,
     payload_col: str = "payload",
@@ -934,37 +816,3 @@ def audio_fingerprint(
     return ensure_parallelism(df.select(id_col, payload_col)).mapInPandas(
         op, AUDIO_FP_SCHEMA
     )
-
-
-@register_operator("audio_fingerprint")
-class AudioFingerprintOperator(Operator):
-    """Config: ``payload_col``, ``id_col``, ``bands``, ``on_error``
-    (raise|null), ``max_records_per_batch``."""
-
-    in_ports = ("in",)
-    out_ports = ("out",)
-
-    def validate_config(self) -> None:
-        if self.config.get("on_error", "raise") not in ("raise", "null"):
-            raise OperatorConfigError(
-                "audio_fingerprint on_error must be raise|null"
-            )
-        if not 2 <= int(self.config.get("bands", 64)) <= 1024:
-            raise OperatorConfigError(
-                "audio_fingerprint bands must be in [2, 1024]"
-            )
-
-    def apply(self, inputs: PortMap) -> PortMap:
-        c = self.config
-        return {
-            "out": audio_fingerprint(
-                self.single_input(inputs),
-                payload_col=c.get("payload_col", "payload"),
-                id_col=c.get("id_col", "media_id"),
-                bands=int(c.get("bands", 64)),
-                on_error=c.get("on_error", "raise"),
-                max_records_per_batch=int(
-                    c.get("max_records_per_batch", 256)
-                ),
-            )
-        }

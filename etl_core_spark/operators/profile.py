@@ -27,7 +27,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from etl_core_spark.operators.base import Operator, OperatorConfigError, PortMap, register_operator
+from etl_core_spark.operators.base import OperatorConfigError, bind_operator
 
 _NUMERIC = (
     T.ByteType, T.ShortType, T.IntegerType, T.LongType,
@@ -35,6 +35,7 @@ _NUMERIC = (
 )
 
 
+@bind_operator("profile")
 def profile(
     df: DataFrame,
     columns: list[str] | None = None,
@@ -112,24 +113,7 @@ def profile(
     return melted.select("__p.*")
 
 
-@register_operator("profile")
-class ProfileOperator(Operator):
-    in_ports = ("in",)
-    out_ports = ("out",)
-
-    def validate_config(self) -> None:
-        pass  # all config optional
-
-    def apply(self, inputs: PortMap) -> PortMap:
-        return {
-            "out": profile(
-                self.single_input(inputs),
-                list(self.config.get("columns") or []) or None,
-                bool(self.config.get("approx_ndv", True)),
-            )
-        }
-
-
+@bind_operator("histogram")
 def histogram(
     df: DataFrame,
     value_col: str,
@@ -202,31 +186,6 @@ def histogram(
     )
 
 
-@register_operator("histogram")
-class HistogramOperator(Operator):
-    """Config: ``value_col`` (required), ``bins``, ``lo``, ``hi``."""
-
-    in_ports = ("in",)
-    out_ports = ("out",)
-
-    def validate_config(self) -> None:
-        if not self.config.get("value_col"):
-            raise OperatorConfigError("histogram requires 'value_col'")
-
-    def apply(self, inputs: PortMap) -> PortMap:
-        c = self.config
-        lo, hi = c.get("lo"), c.get("hi")
-        return {
-            "out": histogram(
-                self.single_input(inputs),
-                c["value_col"],
-                int(c.get("bins", 20)),
-                None if lo is None else float(lo),
-                None if hi is None else float(hi),
-            )
-        }
-
-
 # Benford first-digit probabilities log10(1 + 1/d), d = 1..9, as
 # repr'd double literals — the SAME strings are rendered into the
 # Spark expression and any SQL oracle, so both engines fold the
@@ -236,6 +195,7 @@ import math as _math
 BENFORD_P = [_math.log10(1.0 + 1.0 / d) for d in range(1, 10)]
 
 
+@bind_operator("benford_deviation")
 def benford_deviation(
     df: DataFrame,
     value_col: str,
@@ -340,29 +300,3 @@ def benford_deviation(
         ),
     )
     return out
-
-
-@register_operator("benford_deviation")
-class BenfordDeviationOperator(Operator):
-    """Config: ``value_col`` (required); ``group_cols``,
-    ``threshold`` (None omits the alarm column), ``quantize``."""
-
-    in_ports = ("in",)
-    out_ports = ("out",)
-
-    def validate_config(self) -> None:
-        if not self.config.get("value_col"):
-            raise OperatorConfigError("benford_deviation requires 'value_col'")
-
-    def apply(self, inputs: PortMap) -> PortMap:
-        c = self.config
-        thr = c.get("threshold", 15.507)
-        return {
-            "out": benford_deviation(
-                self.single_input(inputs),
-                c["value_col"],
-                list(c.get("group_cols") or []),
-                float(thr) if thr is not None else None,
-                int(c.get("quantize", 9)),
-            )
-        }

@@ -20,7 +20,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from etl_core_spark.operators.base import Operator, OperatorConfigError, PortMap, register_operator
+from etl_core_spark.operators.base import OperatorConfigError, bind_operator
 
 _PIVOT_AGGS = {
     "count": lambda c: F.count(c if c != "*" else F.lit(1)),
@@ -31,6 +31,7 @@ _PIVOT_AGGS = {
 }
 
 
+@bind_operator("pivot")
 def pivot(
     df: DataFrame,
     group_by: list[str],
@@ -57,6 +58,7 @@ def pivot(
     return out
 
 
+@bind_operator("unpivot")
 def unpivot(
     df: DataFrame,
     id_cols: list[str],
@@ -70,45 +72,3 @@ def unpivot(
     if missing:
         raise OperatorConfigError(f"unpivot: unknown columns {missing}")
     return df.unpivot(list(id_cols), list(value_cols), var_name, value_name)
-
-
-@register_operator("pivot")
-class PivotOperator(Operator):
-    in_ports = ("in",)
-    out_ports = ("out",)
-
-    def validate_config(self) -> None:
-        for key in ("group_by", "pivot_col", "values"):
-            if not self.config.get(key):
-                raise OperatorConfigError(f"pivot requires {key!r}")
-
-    def apply(self, inputs: PortMap) -> PortMap:
-        c = self.config
-        return {
-            "out": pivot(
-                self.single_input(inputs), list(c["group_by"]), c["pivot_col"],
-                list(c["values"]), c.get("agg", "count"), c.get("agg_col", "*"),
-                c.get("fill", 0),
-            )
-        }
-
-
-@register_operator("unpivot")
-class UnpivotOperator(Operator):
-    in_ports = ("in",)
-    out_ports = ("out",)
-
-    def validate_config(self) -> None:
-        for key in ("id_cols", "value_cols"):
-            if not self.config.get(key):
-                raise OperatorConfigError(f"unpivot requires {key!r}")
-
-    def apply(self, inputs: PortMap) -> PortMap:
-        c = self.config
-        return {
-            "out": unpivot(
-                self.single_input(inputs), list(c["id_cols"]),
-                list(c["value_cols"]), c.get("var_name", "metric"),
-                c.get("value_name", "value"),
-            )
-        }

@@ -18,7 +18,14 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from etl_core_spark.operators.base import Operator, OperatorConfigError, PortMap, register_operator
+from etl_core_spark.operators.base import (
+    Operator,
+    OperatorConfigError,
+    PortMap,
+    bind_operator,
+    ensure,
+    register_operator,
+)
 
 _HASH_SPACE = 16 ** 8  # first 8 md5 hex chars
 
@@ -38,7 +45,8 @@ def hash_bucket(key: Column, salt: str = "") -> Column:
     ).cast("long")
 
 
-def hash_sample(df: DataFrame, key_col: str, rate: float, salt: str = "") -> DataFrame:
+@bind_operator("hash_sample")
+def hash_sample(df: DataFrame, key_col: str, rate: float = 0.1, salt: str = "") -> DataFrame:
     """Keep ≈rate of rows, deterministically by key."""
     if not 0.0 <= rate <= 1.0:
         raise OperatorConfigError("rate must be in [0, 1]")
@@ -69,6 +77,11 @@ def hash_split(
     return out
 
 
+def _check_stratified_hash_sample(rates, **_) -> None:
+    ensure(isinstance(rates, dict), "stratified_sample requires 'rates' dict")
+
+
+@bind_operator("stratified_sample", check=_check_stratified_hash_sample)
 def stratified_hash_sample(
     df: DataFrame,
     key_col: str,
@@ -83,6 +96,7 @@ def stratified_hash_sample(
     Still a narrow codegen'd map (a literal CASE over the stratum
     column and one md5), no shuffle; a NULL stratum uses
     ``default_rate``."""
+    rates = {str(s): float(r) for s, r in rates.items()}
     for s, r in rates.items():
         if not 0.0 <= float(r) <= 1.0:
             raise OperatorConfigError(f"rate for stratum {s!r} must be in [0, 1]")
@@ -96,11 +110,12 @@ def stratified_hash_sample(
     return df.filter(hash_bucket(F.col(key_col), salt) < threshold)
 
 
+@bind_operator("cap_per_group")
 def cap_per_group(
     df: DataFrame,
     group_cols: list[str],
     key_col: str,
-    max_rows: int,
+    max_rows: int = 1000,
     salt: str = "",
     order_col: str | None = None,
     descending: bool = True,
@@ -137,60 +152,6 @@ def cap_per_group(
     )
 
 
-@register_operator("stratified_sample")
-class StratifiedSampleOperator(Operator):
-    in_ports = ("in",)
-    out_ports = ("out",)
-
-    def validate_config(self) -> None:
-        if not self.config.get("key_col"):
-            raise OperatorConfigError("stratified_sample requires 'key_col'")
-        if not self.config.get("strata_col"):
-            raise OperatorConfigError("stratified_sample requires 'strata_col'")
-        rates = self.config.get("rates")
-        if not isinstance(rates, dict) or not rates:
-            raise OperatorConfigError("stratified_sample requires 'rates' dict")
-        self.rates = {str(k): float(v) for k, v in rates.items()}
-
-    def apply(self, inputs: PortMap) -> PortMap:
-        return {
-            "out": stratified_hash_sample(
-                self.single_input(inputs),
-                self.config["key_col"],
-                self.config["strata_col"],
-                self.rates,
-                float(self.config.get("default_rate", 0.0)),
-                self.config.get("salt", ""),
-            )
-        }
-
-
-@register_operator("cap_per_group")
-class CapPerGroupOperator(Operator):
-    in_ports = ("in",)
-    out_ports = ("out",)
-
-    def validate_config(self) -> None:
-        if not self.config.get("group_cols"):
-            raise OperatorConfigError("cap_per_group requires 'group_cols'")
-        if not self.config.get("key_col"):
-            raise OperatorConfigError("cap_per_group requires 'key_col'")
-        self.max_rows = int(self.config.get("max_rows", 1000))
-
-    def apply(self, inputs: PortMap) -> PortMap:
-        return {
-            "out": cap_per_group(
-                self.single_input(inputs),
-                list(self.config["group_cols"]),
-                self.config["key_col"],
-                self.max_rows,
-                self.config.get("salt", ""),
-                self.config.get("order_col"),
-                bool(self.config.get("descending", True)),
-            )
-        }
-
-
 @register_operator("hash_split")
 class HashSplitOperator(Operator):
     """Config: ``key_col``, ``weights`` ({port: fraction}), optional
@@ -216,27 +177,7 @@ class HashSplitOperator(Operator):
         )
 
 
-@register_operator("hash_sample")
-class HashSampleOperator(Operator):
-    in_ports = ("in",)
-    out_ports = ("out",)
-
-    def validate_config(self) -> None:
-        if not self.config.get("key_col"):
-            raise OperatorConfigError("hash_sample requires 'key_col'")
-        self.rate = float(self.config.get("rate", 0.1))
-
-    def apply(self, inputs: PortMap) -> PortMap:
-        return {
-            "out": hash_sample(
-                self.single_input(inputs),
-                self.config["key_col"],
-                self.rate,
-                self.config.get("salt", ""),
-            )
-        }
-
-
+@bind_operator("pack_sequences")
 def pack_sequences(
     df: DataFrame,
     key_col: str,
@@ -300,27 +241,7 @@ def pack_sequences(
     )
 
 
-@register_operator("pack_sequences")
-class PackSequencesOperator(Operator):
-    in_ports = ("in",)
-    out_ports = ("out",)
-
-    def validate_config(self) -> None:
-        for key in ("key_col", "token_count_col", "capacity"):
-            if not self.config.get(key):
-                raise OperatorConfigError(f"pack_sequences requires {key!r}")
-
-    def apply(self, inputs: PortMap) -> PortMap:
-        c = self.config
-        return {
-            "out": pack_sequences(
-                self.single_input(inputs), c["key_col"], c["token_count_col"],
-                int(c["capacity"]), int(c.get("shards", 64)),
-                str(c.get("salt", "")),
-            )
-        }
-
-
+@bind_operator("mix_corpora")
 def mix_corpora(
     df: DataFrame,
     key_col: str,
@@ -405,33 +326,7 @@ def mix_corpora(
     return kept.drop("__tok", "__gtok", "__frac")
 
 
-@register_operator("mix_corpora")
-class MixCorporaOperator(Operator):
-    in_ports = ("in",)
-    out_ports = ("out",)
-
-    def validate_config(self) -> None:
-        c = self.config
-        for key in ("key_col", "group_col", "weights", "target_tokens"):
-            if not c.get(key):
-                raise OperatorConfigError(f"mix_corpora requires {key!r}")
-
-    def apply(self, inputs: PortMap) -> PortMap:
-        c = self.config
-        return {
-            "out": mix_corpora(
-                self.single_input(inputs),
-                c["key_col"],
-                c["group_col"],
-                dict(c["weights"]),
-                int(c["target_tokens"]),
-                c.get("token_col"),
-                c.get("text_col", "text"),
-                c.get("salt", "mix"),
-            )
-        }
-
-
+@bind_operator("quantile_filter")
 def quantile_filter(
     df: DataFrame,
     value_col: str,
@@ -477,30 +372,7 @@ def quantile_filter(
     return df.join(F.broadcast(thr)).where(cond).drop("__thr")
 
 
-@register_operator("quantile_filter")
-class QuantileFilterOperator(Operator):
-    in_ports = ("in",)
-    out_ports = ("out",)
-
-    def validate_config(self) -> None:
-        c = self.config
-        if not c.get("value_col") or c.get("q") is None:
-            raise OperatorConfigError("quantile_filter requires value_col and q")
-
-    def apply(self, inputs: PortMap) -> PortMap:
-        c = self.config
-        return {
-            "out": quantile_filter(
-                self.single_input(inputs),
-                c["value_col"],
-                float(c["q"]),
-                c.get("keep", "top"),
-                bool(c.get("exact", False)),
-                int(c.get("accuracy", 10000)),
-            )
-        }
-
-
+@bind_operator("weighted_sample")
 def weighted_sample(
     df: DataFrame,
     key_col: str,
@@ -525,30 +397,7 @@ def weighted_sample(
     )
 
 
-@register_operator("weighted_sample")
-class WeightedSampleOperator(Operator):
-    in_ports = ("in",)
-    out_ports = ("out",)
-
-    def validate_config(self) -> None:
-        if not self.config.get("key_col") or not self.config.get("weight_col"):
-            raise OperatorConfigError(
-                "weighted_sample requires key_col and weight_col"
-            )
-
-    def apply(self, inputs: PortMap) -> PortMap:
-        c = self.config
-        return {
-            "out": weighted_sample(
-                self.single_input(inputs),
-                c["key_col"],
-                c["weight_col"],
-                float(c.get("scale", 1.0)),
-                c.get("salt", ""),
-            )
-        }
-
-
+@bind_operator("take_tokens_per_group")
 def take_tokens_per_group(
     df: DataFrame,
     group_col: str,
@@ -606,34 +455,7 @@ def take_tokens_per_group(
     )
 
 
-@register_operator("take_tokens_per_group")
-class TakeTokensPerGroupOperator(Operator):
-    in_ports = ("in",)
-    out_ports = ("out",)
-
-    def validate_config(self) -> None:
-        c = self.config
-        for key in ("group_col", "budget_tokens", "key_col"):
-            if not c.get(key):
-                raise OperatorConfigError(f"take_tokens_per_group requires {key!r}")
-
-    def apply(self, inputs: PortMap) -> PortMap:
-        c = self.config
-        return {
-            "out": take_tokens_per_group(
-                self.single_input(inputs),
-                c["group_col"],
-                int(c["budget_tokens"]),
-                c["key_col"],
-                c.get("token_col"),
-                c.get("text_col", "text"),
-                c.get("order_col"),
-                bool(c.get("descending", True)),
-                c.get("salt", ""),
-            )
-        }
-
-
+@bind_operator("shuffle_rows")
 def shuffle_rows(
     df: DataFrame,
     key_col: str,
@@ -698,31 +520,12 @@ def shuffle_rows(
     )
 
 
-@register_operator("shuffle_rows")
-class ShuffleRowsOperator(Operator):
-    """Config: ``key_col`` (required), ``salt`` (epoch seed),
-    ``n_buckets``, ``pos_col``."""
-
-    in_ports = ("in",)
-    out_ports = ("out",)
-
-    def validate_config(self) -> None:
-        if not self.config.get("key_col"):
-            raise OperatorConfigError("shuffle_rows requires 'key_col'")
-
-    def apply(self, inputs: PortMap) -> PortMap:
-        c = self.config
-        return {
-            "out": shuffle_rows(
-                self.single_input(inputs),
-                c["key_col"],
-                c.get("salt", ""),
-                int(c.get("n_buckets", 256)),
-                c.get("pos_col", "shuffle_pos"),
-            )
-        }
+def _check_systematic_sample(step, offset, **_) -> None:
+    ensure(step >= 1, "systematic_sample step must be >= 1")
+    ensure(0 <= offset < step, "systematic_sample offset must be in [0, step)")
 
 
+@bind_operator("systematic_sample", check=_check_systematic_sample)
 def systematic_sample(
     df: DataFrame,
     sort_cols: list[str],
@@ -774,38 +577,13 @@ def systematic_sample(
     return out.select(*cols)
 
 
-@register_operator("systematic_sample")
-class SystematicSampleOperator(Operator):
-    """Config: ``sort_cols`` (required — must totally order rows),
-    ``step`` (required); ``offset``, ``rank_col``."""
-
-    in_ports = ("in",)
-    out_ports = ("out",)
-
-    def validate_config(self) -> None:
-        if not self.config.get("sort_cols"):
-            raise OperatorConfigError("systematic_sample requires sort_cols")
-        if int(self.config.get("step", 0)) < 1:
-            raise OperatorConfigError("systematic_sample step must be >= 1")
-        off = int(self.config.get("offset", 0))
-        if not 0 <= off < int(self.config["step"]):
-            raise OperatorConfigError(
-                "systematic_sample offset must be in [0, step)"
-            )
-
-    def apply(self, inputs: PortMap) -> PortMap:
-        c = self.config
-        return {
-            "out": systematic_sample(
-                self.single_input(inputs),
-                list(c["sort_cols"]),
-                int(c["step"]),
-                int(c.get("offset", 0)),
-                c.get("rank_col"),
-            )
-        }
+def _check_negative_sample(k, buckets, **_) -> None:
+    ensure(k >= 1, "negative_sample k must be >= 1")
+    ensure(buckets >= 2, "negative_sample buckets must be >= 2")
+    ensure(k < buckets, "negative_sample needs k < buckets")
 
 
+@bind_operator("negative_sample", check=_check_negative_sample)
 def negative_sample(
     df: DataFrame,
     id_col: str,
@@ -906,39 +684,3 @@ def negative_sample(
             F.col("__neg").alias("negative"),
         )
     )
-
-
-@register_operator("negative_sample")
-class NegativeSampleOperator(Operator):
-    """Config: ``id_col`` (required); ``k``, ``buckets``, ``salt``."""
-
-    in_ports = ("in",)
-    out_ports = ("out",)
-
-    def validate_config(self) -> None:
-        if not self.config.get("id_col"):
-            raise OperatorConfigError("negative_sample requires 'id_col'")
-        k = int(self.config.get("k", 5))
-        b = int(self.config.get("buckets", 64))
-        if k < 1:
-            raise OperatorConfigError("negative_sample k must be >= 1")
-        if b < 2:
-            raise OperatorConfigError(
-                "negative_sample buckets must be >= 2"
-            )
-        if k >= b:
-            raise OperatorConfigError(
-                "negative_sample needs k < buckets"
-            )
-
-    def apply(self, inputs: PortMap) -> PortMap:
-        c = self.config
-        return {
-            "out": negative_sample(
-                self.single_input(inputs),
-                c["id_col"],
-                int(c.get("k", 5)),
-                int(c.get("buckets", 64)),
-                c.get("salt", ""),
-            )
-        }

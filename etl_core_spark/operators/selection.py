@@ -43,12 +43,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from etl_core_spark.operators.base import (
-    Operator,
-    OperatorConfigError,
-    PortMap,
-    register_operator,
-)
+from etl_core_spark.operators.base import OperatorConfigError, bind_operator, ensure
 
 _HASH_SPACE = 16 ** 8  # hash_bucket's range
 
@@ -109,6 +104,7 @@ def _require_features(*sides: tuple[DataFrame, str, str]) -> None:
             )
 
 
+@bind_operator("dsir_weights", in_ports=("in", "target"))
 def dsir_weights(
     raw: DataFrame,
     target: DataFrame,
@@ -204,6 +200,7 @@ def dsir_weights(
     )
 
 
+@bind_operator("dsir_select", in_ports=("in", "target"))
 def dsir_select(
     raw: DataFrame,
     target: DataFrame,
@@ -245,6 +242,7 @@ def dsir_select(
     )
 
 
+@bind_operator("quality_classifier", in_ports=("in", "positive", "negative"))
 def nb_quality_score(
     df: DataFrame,
     positive: DataFrame,
@@ -385,6 +383,15 @@ def nb_quality_score(
     )
 
 
+def _check_nb_quality_gate(pareto_alpha, **_) -> None:
+    ensure(pareto_alpha > 0, "quality_gate pareto_alpha must be > 0")
+
+
+@bind_operator(
+    "quality_gate",
+    in_ports=("in", "positive", "negative"),
+    check=_check_nb_quality_gate,
+)
 def nb_quality_gate(
     df: DataFrame,
     positive: DataFrame,
@@ -419,137 +426,3 @@ def nb_quality_gate(
     return scored.where(
         F.col("score").isNotNull() & (draw > (F.lit(1.0) - F.col("score")))
     )
-
-
-@register_operator("quality_classifier")
-class QualityClassifierOperator(Operator):
-    """Config: ``text_col``, ``id_col``, ``num_buckets``, ``alpha``,
-    ``quantize``. Ports: ``in`` (docs to score), ``positive``
-    (curated reference), ``negative`` (raw sample)."""
-
-    in_ports = ("in", "positive", "negative")
-    out_ports = ("out",)
-
-    def validate_config(self) -> None:
-        pass
-
-    def apply(self, inputs: PortMap) -> PortMap:
-        if set(inputs) != {"in", "positive", "negative"}:
-            raise OperatorConfigError(
-                "quality_classifier takes ports in/positive/negative, "
-                f"got {sorted(inputs)}"
-            )
-        c = self.config
-        return {
-            "out": nb_quality_score(
-                inputs["in"],
-                inputs["positive"],
-                inputs["negative"],
-                c.get("text_col", "text"),
-                c.get("id_col", "doc_id"),
-                int(c.get("num_buckets", 8192)),
-                float(c.get("alpha", 1.0)),
-                int(c.get("quantize", 6)),
-            )
-        }
-
-
-@register_operator("quality_gate")
-class QualityGateOperator(Operator):
-    """Config: ``text_col``, ``id_col``, ``num_buckets``, ``alpha``,
-    ``pareto_alpha``, ``salt``, ``quantize``. Ports: ``in``,
-    ``positive``, ``negative``."""
-
-    in_ports = ("in", "positive", "negative")
-    out_ports = ("out",)
-
-    def validate_config(self) -> None:
-        if float(self.config.get("pareto_alpha", 9.0)) <= 0:
-            raise OperatorConfigError("quality_gate pareto_alpha must be > 0")
-
-    def apply(self, inputs: PortMap) -> PortMap:
-        if set(inputs) != {"in", "positive", "negative"}:
-            raise OperatorConfigError(
-                "quality_gate takes ports in/positive/negative, "
-                f"got {sorted(inputs)}"
-            )
-        c = self.config
-        return {
-            "out": nb_quality_gate(
-                inputs["in"],
-                inputs["positive"],
-                inputs["negative"],
-                c.get("text_col", "text"),
-                c.get("id_col", "doc_id"),
-                int(c.get("num_buckets", 8192)),
-                float(c.get("alpha", 1.0)),
-                float(c.get("pareto_alpha", 9.0)),
-                c.get("salt", ""),
-                int(c.get("quantize", 6)),
-            )
-        }
-
-
-@register_operator("dsir_weights")
-class DsirWeightsOperator(Operator):
-    """Config: ``text_col``, ``id_col``, ``num_buckets``, ``alpha``,
-    ``quantize``. Ports: ``in`` (raw corpus), ``target`` (trusted
-    in-domain sample)."""
-
-    in_ports = ("in", "target")
-    out_ports = ("out",)
-
-    def validate_config(self) -> None:
-        pass
-
-    def apply(self, inputs: PortMap) -> PortMap:
-        if set(inputs) != {"in", "target"}:
-            raise OperatorConfigError(
-                f"dsir_weights takes ports in/target, got {sorted(inputs)}"
-            )
-        c = self.config
-        return {
-            "out": dsir_weights(
-                inputs["in"],
-                inputs["target"],
-                c.get("text_col", "text"),
-                c.get("id_col", "doc_id"),
-                int(c.get("num_buckets", 8192)),
-                float(c.get("alpha", 1.0)),
-                int(c.get("quantize", 6)),
-            )
-        }
-
-
-@register_operator("dsir_select")
-class DsirSelectOperator(Operator):
-    """Config: ``k`` (required); ``text_col``, ``id_col``,
-    ``num_buckets``, ``alpha``, ``salt``, ``quantize``. Ports:
-    ``in`` (raw corpus), ``target``."""
-
-    in_ports = ("in", "target")
-    out_ports = ("out",)
-
-    def validate_config(self) -> None:
-        if self.config.get("k") is None:
-            raise OperatorConfigError("dsir_select requires 'k'")
-
-    def apply(self, inputs: PortMap) -> PortMap:
-        if set(inputs) != {"in", "target"}:
-            raise OperatorConfigError(
-                f"dsir_select takes ports in/target, got {sorted(inputs)}"
-            )
-        c = self.config
-        return {
-            "out": dsir_select(
-                inputs["in"],
-                inputs["target"],
-                int(c["k"]),
-                c.get("text_col", "text"),
-                c.get("id_col", "doc_id"),
-                int(c.get("num_buckets", 8192)),
-                float(c.get("alpha", 1.0)),
-                c.get("salt", ""),
-                int(c.get("quantize", 6)),
-            )
-        }

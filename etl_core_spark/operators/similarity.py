@@ -22,7 +22,14 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from etl_core_spark.functions import vectors as V
-from etl_core_spark.operators.base import Operator, OperatorConfigError, PortMap, register_operator
+from etl_core_spark.operators.base import (
+    Operator,
+    OperatorConfigError,
+    PortMap,
+    bind_operator,
+    ensure,
+    register_operator,
+)
 from etl_core_spark.sources.base_io import SinkOperator
 
 
@@ -896,6 +903,11 @@ def pq_topk(
     )
 
 
+def _check_cosine_near_dup_pairs(threshold, **_) -> None:
+    ensure(0.0 < threshold <= 1.0, f"cosine_near_dup threshold must be in (0, 1], got {threshold}")
+
+
+@bind_operator("cosine_near_dup", check=_check_cosine_near_dup_pairs)
 def cosine_near_dup_pairs(
     df: DataFrame,
     threshold: float = 0.95,
@@ -946,9 +958,11 @@ def cosine_near_dup_pairs(
     )
 
 
+@bind_operator("random_projection")
 def random_projection(
     df: DataFrame,
-    vec_col: str,
+    vec_col: str = "embedding",
+    *,
     dim: int,
     out_dim: int = 8,
     seed: int = 42,
@@ -991,32 +1005,6 @@ def random_projection(
         for p in planes
     ]
     return df.withColumn(out_col, F.array(*comps))
-
-
-@register_operator("random_projection")
-class RandomProjectionOperator(Operator):
-    """Config: ``dim`` (required), ``out_dim``, ``seed``,
-    ``vec_col``, ``out_col``."""
-
-    in_ports = ("in",)
-    out_ports = ("out",)
-
-    def validate_config(self) -> None:
-        if "dim" not in self.config:
-            raise OperatorConfigError("random_projection requires 'dim'")
-
-    def apply(self, inputs: PortMap) -> PortMap:
-        c = self.config
-        return {
-            "out": random_projection(
-                self.single_input(inputs),
-                vec_col=c.get("vec_col", "embedding"),
-                dim=int(c["dim"]),
-                out_dim=int(c.get("out_dim", 8)),
-                seed=int(c.get("seed", 42)),
-                out_col=c.get("out_col", "proj"),
-            )
-        }
 
 
 def pca_fit(
@@ -1250,6 +1238,11 @@ class SimilaritySearchOperator(Operator):
         return {"out": out}
 
 
+def _check_semdedup(keep, **_) -> None:
+    ensure(keep in ("min_id", "far_from_centroid"), f"unknown semdedup keep policy {keep!r}")
+
+
+@bind_operator("semdedup", check=_check_semdedup)
 def semdedup(
     df: DataFrame,
     threshold: float = 0.95,
@@ -1402,73 +1395,6 @@ def semdedup(
     return df.join(dropped, on=id_col, how="left_anti")
 
 
-@register_operator("semdedup")
-class SemDedupOperator(Operator):
-    """Config: ``threshold``, ``num_centroids``, ``vec_col``,
-    ``id_col``, ``kmeans_iters``, ``keep`` ∈ {min_id,
-    far_from_centroid}, ``assign_method`` ∈ {auto, expr, numpy}."""
-
-    in_ports = ("in",)
-    out_ports = ("out",)
-
-    def validate_config(self) -> None:
-        keep = self.config.get("keep", "min_id")
-        if keep not in ("min_id", "far_from_centroid"):
-            raise OperatorConfigError(f"unknown semdedup keep policy {keep!r}")
-
-    def apply(self, inputs: PortMap) -> PortMap:
-        c = self.config
-        return {
-            "out": semdedup(
-                self.single_input(inputs),
-                threshold=float(c.get("threshold", 0.95)),
-                num_centroids=int(c.get("num_centroids", 8)),
-                vec_col=c.get("vec_col", "embedding"),
-                id_col=c.get("id_col", "vec_id"),
-                kmeans_iters=int(c.get("kmeans_iters", 0)),
-                keep=c.get("keep", "min_id"),
-                assign_method=c.get("assign_method", "auto"),
-            )
-        }
-
-
-@register_operator("cosine_near_dup")
-class CosineNearDupPairsOperator(Operator):
-    """Embedding-space near-duplicate PAIR mining
-    (``cosine_near_dup_pairs``): emits (id_a < id_b, cosine >=
-    threshold). Config: ``threshold``, ``vec_col``, ``id_col``,
-    ``exact`` (full cross product, oracle-checkable — default False =
-    LSH-bucketed, the 100 TB path), ``dim``/``num_planes``/``seed``/
-    ``num_tables`` for the bucketing. The full drop-the-duplicate
-    path is ``dedup`` with ``method=embedding_cosine``."""
-
-    in_ports = ("in",)
-    out_ports = ("out",)
-
-    def validate_config(self) -> None:
-        t = float(self.config.get("threshold", 0.95))
-        if not (0.0 < t <= 1.0):
-            raise OperatorConfigError(
-                f"cosine_near_dup threshold must be in (0, 1], got {t}"
-            )
-
-    def apply(self, inputs: PortMap) -> PortMap:
-        c = self.config
-        return {
-            "out": cosine_near_dup_pairs(
-                self.single_input(inputs),
-                threshold=float(c.get("threshold", 0.95)),
-                vec_col=c.get("vec_col", "embedding"),
-                id_col=c.get("id_col", "vec_id"),
-                dim=int(c.get("dim", 64)),
-                num_planes=int(c.get("num_planes", 6)),
-                seed=int(c.get("seed", 42)),
-                exact=bool(c.get("exact", False)),
-                num_tables=int(c.get("num_tables", 1)),
-            )
-        }
-
-
 @register_operator("ivf_index")
 class IVFIndexSink(SinkOperator):
     """Sink: assign a corpus batch to the persistent IVF index's
@@ -1493,6 +1419,7 @@ class IVFIndexSink(SinkOperator):
         )
 
 
+@bind_operator("knn_graph")
 def knn_graph(
     df: DataFrame,
     k: int = 10,
@@ -1563,31 +1490,11 @@ def knn_graph(
     )
 
 
-@register_operator("knn_graph")
-class KnnGraphOperator(Operator):
-    """Config: ``k``, ``method``, ``vec_col``, ``id_col``; lsh mode:
-    ``dim`` (required), ``num_planes``, ``num_tables``, ``seed``."""
-
-    in_ports = ("in",)
-    out_ports = ("out",)
-
-    def apply(self, inputs: PortMap) -> PortMap:
-        c = self.config
-        return {
-            "out": knn_graph(
-                self.single_input(inputs),
-                int(c.get("k", 10)),
-                c.get("method", "brute_force"),
-                c.get("vec_col", "embedding"),
-                c.get("id_col", "vec_id"),
-                c.get("dim"),
-                int(c.get("num_planes", 6)),
-                int(c.get("num_tables", 1)),
-                int(c.get("seed", 42)),
-            )
-        }
+def _check_kmeans_cluster(k, **_) -> None:
+    ensure(k >= 1, "kmeans_cluster k must be >= 1")
 
 
+@bind_operator("kmeans_cluster", check=_check_kmeans_cluster)
 def kmeans_cluster(
     df: DataFrame,
     k: int = 8,
@@ -1667,32 +1574,12 @@ def kmeans_cluster(
     return out if emit_similarity else out.select(id_col, "cluster_id")
 
 
-@register_operator("kmeans_cluster")
-class KmeansClusterOperator(Operator):
-    """Config: ``k``, ``vec_col``, ``id_col``, ``iterations``,
-    ``emit_similarity``."""
-
-    in_ports = ("in",)
-    out_ports = ("out",)
-
-    def validate_config(self) -> None:
-        if int(self.config.get("k", 8)) < 1:
-            raise OperatorConfigError("kmeans_cluster k must be >= 1")
-
-    def apply(self, inputs: PortMap) -> PortMap:
-        c = self.config
-        return {
-            "out": kmeans_cluster(
-                self.single_input(inputs),
-                int(c.get("k", 8)),
-                c.get("vec_col", "embedding"),
-                c.get("id_col", "vec_id"),
-                int(c.get("iterations", 0)),
-                bool(c.get("emit_similarity", True)),
-            )
-        }
+def _check_mmr_rerank(k, fetch_n, lambda_, **_) -> None:
+    ensure(0.0 <= lambda_ <= 1.0, "mmr_rerank lambda_ must be in [0, 1]")
+    ensure(1 <= k <= fetch_n, "mmr_rerank needs 1 <= k <= fetch_n")
 
 
+@bind_operator("mmr_rerank", in_ports=("in", "queries"), check=_check_mmr_rerank)
 def mmr_rerank(
     corpus: DataFrame,
     queries: DataFrame,
@@ -1833,41 +1720,3 @@ def mmr_rerank(
         F.col("__wscore").alias("mmr_score"),
         F.col("rank").cast("long").alias("rank"),
     )
-
-
-@register_operator("mmr_rerank")
-class MmrRerankOperator(Operator):
-    """Config: ``k``, ``fetch_n``, ``lambda_``, ``vec_col``,
-    ``id_col``, ``query_id_col``, ``broadcast_corpus``. Ports:
-    ``in`` (corpus) and ``queries``."""
-
-    in_ports = ("in", "queries")
-    out_ports = ("out",)
-
-    def validate_config(self) -> None:
-        lam = float(self.config.get("lambda_", 0.5))
-        if not 0.0 <= lam <= 1.0:
-            raise OperatorConfigError("mmr_rerank lambda_ must be in [0, 1]")
-        k = int(self.config.get("k", 5))
-        if k < 1 or int(self.config.get("fetch_n", 50)) < k:
-            raise OperatorConfigError("mmr_rerank needs 1 <= k <= fetch_n")
-
-    def apply(self, inputs: PortMap) -> PortMap:
-        if set(inputs) != {"in", "queries"}:
-            raise OperatorConfigError(
-                f"mmr_rerank takes ports in/queries, got {sorted(inputs)}"
-            )
-        c = self.config
-        return {
-            "out": mmr_rerank(
-                inputs["in"],
-                inputs["queries"],
-                int(c.get("k", 5)),
-                int(c.get("fetch_n", 50)),
-                float(c.get("lambda_", 0.5)),
-                c.get("vec_col", "embedding"),
-                c.get("id_col", "vec_id"),
-                c.get("query_id_col", "query_id"),
-                c.get("broadcast_corpus"),
-            )
-        }

@@ -40,7 +40,14 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from etl_core_spark.operators.base import Operator, OperatorConfigError, PortMap, register_operator
+from etl_core_spark.operators.base import (
+    Operator,
+    OperatorConfigError,
+    PortMap,
+    bind_operator,
+    ensure,
+    register_operator,
+)
 
 _SKETCH_TYPE = "HLL_8"
 
@@ -210,6 +217,7 @@ class ApproxQuantilesOperator(Operator):
         }
 
 
+@bind_operator("approx_topk")
 def approx_topk(
     df: DataFrame,
     col: str,
@@ -285,29 +293,11 @@ def approx_topk(
     )
 
 
-@register_operator("approx_topk")
-class ApproxTopKOperator(Operator):
-    """Config: ``col`` (required), ``k``, ``capacity``."""
-
-    in_ports = ("in",)
-    out_ports = ("out",)
-
-    def validate_config(self) -> None:
-        if not self.config.get("col"):
-            raise OperatorConfigError("approx_topk requires 'col'")
-
-    def apply(self, inputs: PortMap) -> PortMap:
-        c = self.config
-        return {
-            "out": approx_topk(
-                self.single_input(inputs),
-                c["col"],
-                int(c.get("k", 50)),
-                int(c.get("capacity", 4096)),
-            )
-        }
+def _check_bloom_membership(mode, **_) -> None:
+    ensure(mode in ("flag", "drop", "keep"), "bloom_membership mode must be flag/drop/keep")
 
 
+@bind_operator("bloom_membership", in_ports=("in", "keys"), check=_check_bloom_membership)
 def bloom_membership(
     big: DataFrame,
     keys: DataFrame,
@@ -397,42 +387,3 @@ def bloom_membership(
     if mode == "drop":
         return flagged.where(~F.col(out_col)).drop(out_col)
     return flagged.where(F.col(out_col)).drop(out_col)
-
-
-@register_operator("bloom_membership")
-class BloomMembershipOperator(Operator):
-    """Config: ``key_col`` (required); ``keys_col`` (defaults to
-    ``key_col``), ``m_bits``, ``k``, ``mode`` (flag/drop/keep),
-    ``out_col``, ``salt``. Ports: ``in`` (the big side) and ``keys``
-    (the membership set)."""
-
-    in_ports = ("in", "keys")
-    out_ports = ("out",)
-
-    def validate_config(self) -> None:
-        if not self.config.get("key_col"):
-            raise OperatorConfigError("bloom_membership requires 'key_col'")
-        if self.config.get("mode", "flag") not in ("flag", "drop", "keep"):
-            raise OperatorConfigError(
-                "bloom_membership mode must be flag/drop/keep"
-            )
-
-    def apply(self, inputs: PortMap) -> PortMap:
-        if set(inputs) != {"in", "keys"}:
-            raise OperatorConfigError(
-                f"bloom_membership takes ports in/keys, got {sorted(inputs)}"
-            )
-        c = self.config
-        return {
-            "out": bloom_membership(
-                inputs["in"],
-                inputs["keys"],
-                c["key_col"],
-                c.get("keys_col"),
-                int(c.get("m_bits", 1 << 20)),
-                int(c.get("k", 4)),
-                c.get("mode", "flag"),
-                c.get("out_col", "bloom_hit"),
-                c.get("salt", "bloom"),
-            )
-        }

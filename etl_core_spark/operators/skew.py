@@ -20,14 +20,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from etl_core_spark.operators.base import (
-    Operator,
-    OperatorConfigError,
-    PortMap,
-    register_operator,
-)
+from etl_core_spark.operators.base import OperatorConfigError, bind_operator
 
 
+@bind_operator("salted_join", in_ports=("left", "right"))
 def salted_join(
     left: DataFrame,
     right: DataFrame,
@@ -98,26 +94,3 @@ def salted_join(
         "__salt", F.explode(F.sequence(F.lit(0), F.lit(r - 1)))
     )
     return l2.join(r2, on=list(on) + ["__salt"], how=how).drop("__salt")
-
-
-@register_operator("salted_join")
-class SaltedJoinOperator(Operator):
-    """Config: ``on`` (required list), ``how`` ∈ {inner, left},
-    ``salt_factor``, ``collapse_duplicates``."""
-
-    in_ports = ("left", "right")
-    out_ports = ("out",)
-
-    def validate_config(self) -> None:
-        if not self.config.get("on"):
-            raise OperatorConfigError("salted_join requires 'on'")
-
-    def apply(self, inputs: PortMap) -> PortMap:
-        c = self.config
-        return {
-            "out": salted_join(
-                inputs["left"], inputs["right"], list(c["on"]),
-                c.get("how", "inner"), int(c.get("salt_factor", 8)),
-                bool(c.get("collapse_duplicates", False)),
-            )
-        }

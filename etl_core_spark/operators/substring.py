@@ -63,12 +63,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from etl_core_spark.functions import text as X
-from etl_core_spark.operators.base import (
-    Operator,
-    OperatorConfigError,
-    PortMap,
-    register_operator,
-)
+from etl_core_spark.operators.base import OperatorConfigError, bind_operator, ensure
 
 
 def _gram_hits(
@@ -114,7 +109,7 @@ def _dup_grams(
         ),
     )
     g = g.where(F.col("__nd") >= int(min_docs))
-    if max_doc_freq is not None:
+    if max_doc_freq:
         g = g.where(F.col("__nd") <= int(max_doc_freq))
     return g
 
@@ -142,6 +137,11 @@ def _merge_islands(hits: DataFrame, id_col: str, k: int) -> DataFrame:
     )
 
 
+def _check_span_tokens(span_tokens, **_) -> None:
+    ensure(span_tokens >= 2, "span_tokens must be >= 2")
+
+
+@bind_operator("substring_dup_spans", check=_check_span_tokens)
 def substring_dup_spans(
     df: DataFrame,
     text_col: str = "text",
@@ -185,6 +185,7 @@ def substring_dup_spans(
     )
 
 
+@bind_operator("substring_dedup", check=_check_span_tokens)
 def substring_dedup(
     df: DataFrame,
     text_col: str = "text",
@@ -258,56 +259,3 @@ def substring_dedup(
             6,
         ).alias("dup_span_frac"),
     )
-
-
-@register_operator("substring_dup_spans")
-class SubstringDupSpansOperator(Operator):
-    """Config: ``text_col``, ``id_col``, ``span_tokens``,
-    ``min_docs``, ``max_doc_freq``."""
-
-    in_ports = ("in",)
-    out_ports = ("out",)
-
-    def validate_config(self) -> None:
-        if int(self.config.get("span_tokens", 50)) < 2:
-            raise OperatorConfigError("span_tokens must be >= 2")
-
-    def apply(self, inputs: PortMap) -> PortMap:
-        c = self.config
-        return {
-            "out": substring_dup_spans(
-                self.single_input(inputs),
-                c.get("text_col", "text"),
-                c.get("id_col", "doc_id"),
-                int(c.get("span_tokens", 50)),
-                int(c.get("min_docs", 2)),
-                int(c["max_doc_freq"]) if c.get("max_doc_freq") else None,
-            )
-        }
-
-
-@register_operator("substring_dedup")
-class SubstringDedupOperator(Operator):
-    """Config: ``text_col``, ``id_col``, ``span_tokens``,
-    ``min_docs``, ``keep_one``, ``max_doc_freq``."""
-
-    in_ports = ("in",)
-    out_ports = ("out",)
-
-    def validate_config(self) -> None:
-        if int(self.config.get("span_tokens", 50)) < 2:
-            raise OperatorConfigError("span_tokens must be >= 2")
-
-    def apply(self, inputs: PortMap) -> PortMap:
-        c = self.config
-        return {
-            "out": substring_dedup(
-                self.single_input(inputs),
-                c.get("text_col", "text"),
-                c.get("id_col", "doc_id"),
-                int(c.get("span_tokens", 50)),
-                int(c.get("min_docs", 2)),
-                bool(c.get("keep_one", True)),
-                int(c["max_doc_freq"]) if c.get("max_doc_freq") else None,
-            )
-        }

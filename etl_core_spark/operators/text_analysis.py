@@ -12,7 +12,14 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from etl_core_spark.functions import text as X
-from etl_core_spark.operators.base import Operator, OperatorConfigError, PortMap, register_operator
+from etl_core_spark.operators.base import (
+    Operator,
+    OperatorConfigError,
+    PortMap,
+    bind_operator,
+    ensure,
+    register_operator,
+)
 
 AVAILABLE_METRICS = (
     "n_chars",
@@ -36,6 +43,7 @@ AVAILABLE_METRICS = (
 )
 
 
+@bind_operator("text_analysis")
 def annotate(df: DataFrame, text_col: str = "text", metrics: tuple[str, ...] = AVAILABLE_METRICS) -> DataFrame:
     from etl_core_spark.session import ensure_parallelism
 
@@ -63,7 +71,7 @@ def annotate(df: DataFrame, text_col: str = "text", metrics: tuple[str, ...] = A
         "gopher_rules_pass": lambda: X.gopher_rules_pass(col),
     }
     out = df
-    for m in metrics:
+    for m in metrics or AVAILABLE_METRICS:
         if m not in exprs:
             raise OperatorConfigError(f"unknown text metric {m!r}")
         out = out.withColumn(m, exprs[m]())
@@ -160,19 +168,7 @@ class CleanTextOperator(Operator):
         return {"out": out}
 
 
-@register_operator("text_analysis")
-class TextAnalysisOperator(Operator):
-    in_ports = ("in",)
-    out_ports = ("out",)
-
-    def validate_config(self) -> None:
-        self.text_col = self.config.get("text_col", "text")
-        self.metrics = tuple(self.config.get("metrics") or AVAILABLE_METRICS)
-
-    def apply(self, inputs: PortMap) -> PortMap:
-        return {"out": annotate(self.single_input(inputs), self.text_col, self.metrics)}
-
-
+@bind_operator("chunk_documents")
 def chunk_documents(
     df: DataFrame,
     text_col: str,
@@ -234,6 +230,11 @@ def chunk_documents(
     )
 
 
+def _check_decontaminate(ngram_n, **_) -> None:
+    ensure(ngram_n >= 1, "decontaminate requires ngram_n >= 1")
+
+
+@bind_operator("decontaminate", in_ports=("docs", "benchmark"), check=_check_decontaminate)
 def decontaminate(
     docs: DataFrame,
     benchmark: DataFrame,
@@ -296,52 +297,14 @@ def decontaminate(
     )
 
 
-@register_operator("decontaminate")
-class DecontaminateOperator(Operator):
-    """Ports: ``docs`` (training corpus) + ``benchmark`` (eval
-    corpus); out: the docs relation annotated with contamination
-    counts and flag."""
-
-    in_ports = ("docs", "benchmark")
-    out_ports = ("out",)
-
-    def validate_config(self) -> None:
-        self.ngram_n = int(self.config.get("ngram_n", 8))
-        if self.ngram_n < 1:
-            raise OperatorConfigError("decontaminate requires ngram_n >= 1")
-
-    def apply(self, inputs: PortMap) -> PortMap:
-        c = self.config
-        return {
-            "out": decontaminate(
-                inputs["docs"], inputs["benchmark"],
-                c.get("text_col", "text"), c.get("id_col", "doc_id"),
-                c.get("bench_text_col"), self.ngram_n,
-                int(c.get("max_matches", 0)), bool(c.get("hash_keys", False)),
-            )
-        }
+def _check_line_dedup(max_doc_frac, max_doc_freq, **_) -> None:
+    ensure(
+        (max_doc_frac is None) != (max_doc_freq is None),
+        "line_dedup requires exactly one of max_doc_frac / max_doc_freq",
+    )
 
 
-@register_operator("chunk_documents")
-class ChunkDocumentsOperator(Operator):
-    in_ports = ("in",)
-    out_ports = ("out",)
-
-    def validate_config(self) -> None:
-        for key in ("text_col", "id_col"):
-            if not self.config.get(key):
-                raise OperatorConfigError(f"chunk_documents requires {key!r}")
-
-    def apply(self, inputs: PortMap) -> PortMap:
-        c = self.config
-        return {
-            "out": chunk_documents(
-                self.single_input(inputs), c["text_col"], c["id_col"],
-                int(c.get("chunk_tokens", 256)), int(c.get("overlap", 32)),
-            )
-        }
-
-
+@bind_operator("line_dedup", check=_check_line_dedup)
 def line_dedup(
     df: DataFrame,
     text_col: str = "text",
@@ -497,35 +460,6 @@ def line_dedup(
     )
 
 
-@register_operator("line_dedup")
-class LineDedupOperator(Operator):
-    in_ports = ("in",)
-    out_ports = ("out",)
-
-    def validate_config(self) -> None:
-        c = self.config
-        if (c.get("max_doc_frac") is None) == (c.get("max_doc_freq") is None):
-            raise OperatorConfigError(
-                "line_dedup requires exactly one of max_doc_frac / max_doc_freq"
-            )
-
-    def apply(self, inputs: PortMap) -> PortMap:
-        c = self.config
-        return {
-            "out": line_dedup(
-                self.single_input(inputs),
-                c.get("text_col", "text"),
-                c.get("id_col", "doc_id"),
-                c.get("delimiter", "\\n"),
-                c.get("join_sep", "\n"),
-                c.get("max_doc_frac"),
-                c.get("max_doc_freq"),
-                int(c.get("min_line_chars", 1)),
-                bool(c.get("normalize", True)),
-            )
-        }
-
-
 def _bigram_table(df: DataFrame, text_col: str, id_col: str, lowercase: bool) -> DataFrame:
     """(id, __w1, __w2) bigram occurrences from a narrow zip_with over
     the token array — no window shuffle to pair neighbors."""
@@ -551,6 +485,7 @@ def _bigram_table(df: DataFrame, text_col: str, id_col: str, lowercase: bool) ->
     )
 
 
+@bind_operator("lm_score", in_ports=("in", "model"))
 def lm_score(
     df: DataFrame,
     text_col: str = "text",
@@ -649,33 +584,12 @@ def lm_score(
     )
 
 
-@register_operator("lm_score")
-class LmScoreOperator(Operator):
-    """Optional second in-port ``model`` trains the counts on a
-    reference corpus instead of the scored input (the CCNet shape)."""
-
-    in_ports = ("in", "model")
-    out_ports = ("out",)
-
-    def apply(self, inputs: PortMap) -> PortMap:
-        c = self.config
-        extra = set(inputs) - {"in", "model"}
-        if "in" not in inputs or extra:
-            raise OperatorConfigError(
-                f"lm_score takes ports 'in' (+optional 'model'), got {sorted(inputs)}"
-            )
-        return {
-            "out": lm_score(
-                inputs["in"],
-                c.get("text_col", "text"),
-                c.get("id_col", "doc_id"),
-                inputs.get("model"),
-                float(c.get("discount", 0.75)),
-                bool(c.get("lowercase", True)),
-            )
-        }
+def _check_pii_annotate(kinds, **_) -> None:
+    unknown = set(kinds or ()) - set(X.PII_PATTERNS)
+    ensure(not unknown, f"unknown pii kinds {sorted(unknown)}; have {sorted(X.PII_PATTERNS)}")
 
 
+@bind_operator("pii_scan", check=_check_pii_annotate)
 def pii_annotate(
     df: DataFrame,
     text_col: str = "text",
@@ -690,7 +604,7 @@ def pii_annotate(
     and redacting it. ``redact=True`` additionally emits the
     placeholder-substituted text. Pure codegen'd regexp narrow map;
     zero shuffle, zero Python."""
-    wanted = tuple(X.PII_PATTERNS) if kinds is None else tuple(kinds)
+    wanted = tuple(kinds or X.PII_PATTERNS)
     col = F.col(text_col)
     out = df
     total = None
@@ -706,34 +620,7 @@ def pii_annotate(
     return out
 
 
-@register_operator("pii_scan")
-class PiiScanOperator(Operator):
-    in_ports = ("in",)
-    out_ports = ("out",)
-
-    def validate_config(self) -> None:
-        kinds = self.config.get("kinds")
-        if kinds is not None:
-            unknown = set(kinds) - set(X.PII_PATTERNS)
-            if unknown:
-                raise OperatorConfigError(
-                    f"unknown pii kinds {sorted(unknown)}; "
-                    f"have {sorted(X.PII_PATTERNS)}"
-                )
-
-    def apply(self, inputs: PortMap) -> PortMap:
-        c = self.config
-        return {
-            "out": pii_annotate(
-                self.single_input(inputs),
-                c.get("text_col", "text"),
-                tuple(c["kinds"]) if c.get("kinds") else None,
-                bool(c.get("redact", False)),
-                c.get("redacted_col"),
-            )
-        }
-
-
+@bind_operator("url_parts")
 def extract_url_parts(
     df: DataFrame, url_col: str, prefix: str = "url_"
 ) -> DataFrame:
@@ -753,24 +640,7 @@ def extract_url_parts(
     )
 
 
-@register_operator("url_parts")
-class UrlPartsOperator(Operator):
-    in_ports = ("in",)
-    out_ports = ("out",)
-
-    def validate_config(self) -> None:
-        if not self.config.get("url_col"):
-            raise OperatorConfigError("url_parts requires 'url_col'")
-
-    def apply(self, inputs: PortMap) -> PortMap:
-        c = self.config
-        return {
-            "out": extract_url_parts(
-                self.single_input(inputs), c["url_col"], c.get("prefix", "url_")
-            )
-        }
-
-
+@bind_operator("strip_duplicate_spans")
 def strip_duplicate_spans(
     df: DataFrame,
     text_col: str = "text",
@@ -863,24 +733,7 @@ def strip_duplicate_spans(
     )
 
 
-@register_operator("strip_duplicate_spans")
-class StripDuplicateSpansOperator(Operator):
-    in_ports = ("in",)
-    out_ports = ("out",)
-
-    def apply(self, inputs: PortMap) -> PortMap:
-        c = self.config
-        return {
-            "out": strip_duplicate_spans(
-                self.single_input(inputs),
-                c.get("text_col", "text"),
-                c.get("id_col", "doc_id"),
-                int(c.get("span_tokens", 50)),
-                int(c.get("min_count", 2)),
-            )
-        }
-
-
+@bind_operator("assemble_docs")
 def assemble_docs(
     df: DataFrame,
     key_col: str,
@@ -913,29 +766,7 @@ def assemble_docs(
     )
 
 
-@register_operator("assemble_docs")
-class AssembleDocsOperator(Operator):
-    in_ports = ("in",)
-    out_ports = ("out",)
-
-    def validate_config(self) -> None:
-        for key in ("key_col", "part_col", "order_col"):
-            if not self.config.get(key):
-                raise OperatorConfigError(f"assemble_docs requires {key!r}")
-
-    def apply(self, inputs: PortMap) -> PortMap:
-        c = self.config
-        return {
-            "out": assemble_docs(
-                self.single_input(inputs),
-                c["key_col"],
-                c["part_col"],
-                c["order_col"],
-                c.get("sep", "\n"),
-            )
-        }
-
-
+@bind_operator("corpus_overlap")
 def corpus_overlap(
     df: DataFrame,
     group_col: str = "source",
@@ -1018,25 +849,7 @@ def corpus_overlap(
     )
 
 
-@register_operator("corpus_overlap")
-class CorpusOverlapOperator(Operator):
-    """Config: ``group_col``, ``text_col``, ``shingle_n``."""
-
-    in_ports = ("in",)
-    out_ports = ("out",)
-
-    def apply(self, inputs: PortMap) -> PortMap:
-        c = self.config
-        return {
-            "out": corpus_overlap(
-                self.single_input(inputs),
-                c.get("group_col", "source"),
-                c.get("text_col", "text"),
-                int(c.get("shingle_n", 3)),
-            )
-        }
-
-
+@bind_operator("collocations")
 def collocations(
     df: DataFrame,
     text_col: str = "text",
@@ -1100,25 +913,7 @@ def collocations(
     )
 
 
-@register_operator("collocations")
-class CollocationsOperator(Operator):
-    """Config: ``text_col``, ``min_count``, ``top_k``."""
-
-    in_ports = ("in",)
-    out_ports = ("out",)
-
-    def apply(self, inputs: PortMap) -> PortMap:
-        c = self.config
-        return {
-            "out": collocations(
-                self.single_input(inputs),
-                c.get("text_col", "text"),
-                int(c.get("min_count", 5)),
-                int(c.get("top_k", 50)),
-            )
-        }
-
-
+@bind_operator("bm25")
 def bm25_score(
     df: DataFrame,
     query: list[str] | str,
@@ -1233,35 +1028,7 @@ def bm25_score(
     return out
 
 
-@register_operator("bm25")
-class Bm25Operator(Operator):
-    """Config: ``query`` (list or whitespace string, required);
-    ``text_col``, ``id_col``, ``k1``, ``b``, ``top_k``, ``lowercase``."""
-
-    in_ports = ("in",)
-    out_ports = ("out",)
-
-    def validate_config(self) -> None:
-        if not self.config.get("query"):
-            raise OperatorConfigError("bm25 requires 'query'")
-
-    def apply(self, inputs: PortMap) -> PortMap:
-        c = self.config
-        top_k = c.get("top_k")
-        return {
-            "out": bm25_score(
-                self.single_input(inputs),
-                c["query"],
-                c.get("text_col", "text"),
-                c.get("id_col", "doc_id"),
-                float(c.get("k1", 1.2)),
-                float(c.get("b", 0.75)),
-                int(top_k) if top_k is not None else None,
-                bool(c.get("lowercase", True)),
-            )
-        }
-
-
+@bind_operator("entropy_metrics")
 def entropy_metrics(
     df: DataFrame,
     text_col: str = "text",
@@ -1341,30 +1108,7 @@ def entropy_metrics(
     )
 
 
-@register_operator("entropy_metrics")
-class EntropyMetricsOperator(Operator):
-    """Config: ``text_col``, ``id_col``, ``lowercase``,
-    ``quantize``."""
-
-    in_ports = ("in",)
-    out_ports = ("out",)
-
-    def validate_config(self) -> None:
-        pass
-
-    def apply(self, inputs: PortMap) -> PortMap:
-        c = self.config
-        return {
-            "out": entropy_metrics(
-                self.single_input(inputs),
-                c.get("text_col", "text"),
-                c.get("id_col", "doc_id"),
-                bool(c.get("lowercase", True)),
-                int(c.get("quantize", 6)),
-            )
-        }
-
-
+@bind_operator("corpus_divergence")
 def corpus_divergence(
     df: DataFrame,
     group_col: str = "source",
@@ -1470,31 +1214,11 @@ def corpus_divergence(
     )
 
 
-@register_operator("corpus_divergence")
-class CorpusDivergenceOperator(Operator):
-    """Config: ``group_col``, ``text_col``, ``lowercase``,
-    ``quantize``."""
-
-    in_ports = ("in",)
-    out_ports = ("out",)
-
-    def validate_config(self) -> None:
-        pass
-
-    def apply(self, inputs: PortMap) -> PortMap:
-        c = self.config
-        return {
-            "out": corpus_divergence(
-                self.single_input(inputs),
-                c.get("group_col", "source"),
-                c.get("text_col", "text"),
-                bool(c.get("lowercase", True)),
-                int(c.get("quantize", 6)),
-            )
-        }
+def _check_feature_hash(dim, **_) -> None:
+    ensure(dim >= 2, "feature_hash dim must be >= 2")
 
 
-
+@bind_operator("feature_hash", check=_check_feature_hash)
 def feature_hash(
     df: DataFrame,
     id_col: str,
@@ -1562,32 +1286,3 @@ def feature_hash(
             F.col("__w").cast("long").alias("weight"),
         )
     )
-
-
-@register_operator("feature_hash")
-class FeatureHashOperator(Operator):
-    """Config: ``id_col``, ``text_col`` (required); ``dim``,
-    ``signed``, ``lowercase``."""
-
-    in_ports = ("in",)
-    out_ports = ("out",)
-
-    def validate_config(self) -> None:
-        for key in ("id_col", "text_col"):
-            if not self.config.get(key):
-                raise OperatorConfigError(f"feature_hash requires {key!r}")
-        if int(self.config.get("dim", 1024)) < 2:
-            raise OperatorConfigError("feature_hash dim must be >= 2")
-
-    def apply(self, inputs: PortMap) -> PortMap:
-        c = self.config
-        return {
-            "out": feature_hash(
-                self.single_input(inputs),
-                c["id_col"],
-                c["text_col"],
-                int(c.get("dim", 1024)),
-                bool(c.get("signed", True)),
-                bool(c.get("lowercase", True)),
-            )
-        }

@@ -18,9 +18,17 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from etl_core_spark.operators.base import Operator, OperatorConfigError, PortMap, register_operator
+from etl_core_spark.operators.base import (
+    Operator,
+    OperatorConfigError,
+    PortMap,
+    bind_operator,
+    ensure,
+    register_operator,
+)
 
 
+@bind_operator("zscore_outliers")
 def zscore_outliers(
     df: DataFrame,
     value_col: str,
@@ -86,6 +94,7 @@ def zscore_outliers(
     )
 
 
+@bind_operator("densify_buckets")
 def densify_buckets(
     df: DataFrame,
     key_cols: list[str],
@@ -169,6 +178,7 @@ def _maybe_broadcast(df: DataFrame, force: bool | None, cap_bytes: int = 8 << 20
     return maybe_broadcast(df, force, cap_bytes)
 
 
+@bind_operator("funnel")
 def funnel(
     df: DataFrame,
     user_col: str,
@@ -230,72 +240,6 @@ def funnel(
     return reached.select(
         F.col("__u").alias(user_col), stage.cast("int").alias("stage")
     )
-
-
-@register_operator("funnel")
-class FunnelOperator(Operator):
-    in_ports = ("in",)
-    out_ports = ("out",)
-
-    def validate_config(self) -> None:
-        for key in ("user_col", "ts_col", "type_col", "steps"):
-            if not self.config.get(key):
-                raise OperatorConfigError(f"funnel requires {key!r}")
-
-    def apply(self, inputs: PortMap) -> PortMap:
-        c = self.config
-        return {
-            "out": funnel(
-                self.single_input(inputs), c["user_col"], c["ts_col"],
-                c["type_col"], list(c["steps"]),
-                c.get("broadcast_stages"),
-            )
-        }
-
-
-@register_operator("zscore_outliers")
-class ZscoreOutliersOperator(Operator):
-    in_ports = ("in",)
-    out_ports = ("out",)
-
-    def validate_config(self) -> None:
-        if not self.config.get("value_col"):
-            raise OperatorConfigError("zscore_outliers requires 'value_col'")
-        self.threshold = float(self.config.get("threshold", 3.0))
-
-    def apply(self, inputs: PortMap) -> PortMap:
-        return {
-            "out": zscore_outliers(
-                self.single_input(inputs),
-                self.config["value_col"],
-                list(self.config.get("group_cols") or []),
-                self.threshold,
-                self.config.get("broadcast_stats"),
-            )
-        }
-
-
-@register_operator("densify_buckets")
-class DensifyBucketsOperator(Operator):
-    in_ports = ("in",)
-    out_ports = ("out",)
-
-    def validate_config(self) -> None:
-        for key in ("key_cols", "bucket_col", "step"):
-            if not self.config.get(key):
-                raise OperatorConfigError(f"densify_buckets requires {key!r}")
-
-    def apply(self, inputs: PortMap) -> PortMap:
-        return {
-            "out": densify_buckets(
-                self.single_input(inputs),
-                list(self.config["key_cols"]),
-                self.config["bucket_col"],
-                self.config["step"],
-                self.config.get("agg_cols"),
-                float(self.config.get("fill", 0.0)),
-            )
-        }
 
 
 _ROLLING_AGGS = ("sum", "count", "mean", "min", "max")
@@ -384,7 +328,7 @@ class RollingAggregateOperator(Operator):
                 raise OperatorConfigError(f"rolling_aggregate requires {key!r}")
         # is-None check, not truthiness: window_seconds=0 is a legal
         # frame (current row + equal-timestamp peers only) — the
-        # bucket_width pattern from RangeJoinOperator
+        # bucket_width pattern of range_join
         if self.config.get("window_seconds") is None:
             raise OperatorConfigError(
                 "rolling_aggregate requires 'window_seconds'"
@@ -414,6 +358,7 @@ class RollingAggregateOperator(Operator):
         }
 
 
+@bind_operator("mad_outliers")
 def mad_outliers(
     df: DataFrame,
     value_col: str,
@@ -514,31 +459,7 @@ def mad_outliers(
     )
 
 
-@register_operator("mad_outliers")
-class MadOutliersOperator(Operator):
-    """Config: ``value_col`` (required), ``group_cols``,
-    ``threshold``, ``broadcast_stats``."""
-
-    in_ports = ("in",)
-    out_ports = ("out",)
-
-    def validate_config(self) -> None:
-        if not self.config.get("value_col"):
-            raise OperatorConfigError("mad_outliers requires 'value_col'")
-
-    def apply(self, inputs: PortMap) -> PortMap:
-        c = self.config
-        return {
-            "out": mad_outliers(
-                self.single_input(inputs),
-                c["value_col"],
-                list(c.get("group_cols") or []),
-                float(c.get("threshold", 3.5)),
-                c.get("broadcast_stats"),
-            )
-        }
-
-
+@bind_operator("retention_cohorts")
 def retention_cohorts(
     df: DataFrame,
     user_col: str,
@@ -588,31 +509,7 @@ def retention_cohorts(
     )
 
 
-@register_operator("retention_cohorts")
-class RetentionCohortsOperator(Operator):
-    """Config: ``user_col``, ``time_col`` (required),
-    ``granularity`` (day/week/month)."""
-
-    in_ports = ("in",)
-    out_ports = ("out",)
-
-    def validate_config(self) -> None:
-        for key in ("user_col", "time_col"):
-            if not self.config.get(key):
-                raise OperatorConfigError(f"retention_cohorts requires {key!r}")
-
-    def apply(self, inputs: PortMap) -> PortMap:
-        c = self.config
-        return {
-            "out": retention_cohorts(
-                self.single_input(inputs),
-                c["user_col"],
-                c["time_col"],
-                c.get("granularity", "week"),
-            )
-        }
-
-
+@bind_operator("markov_transitions")
 def markov_transitions(
     df: DataFrame,
     user_col: str,
@@ -674,32 +571,7 @@ def markov_transitions(
     )
 
 
-@register_operator("markov_transitions")
-class MarkovTransitionsOperator(Operator):
-    """Config: ``user_col``, ``time_col``, ``event_col`` (required),
-    ``order_cols`` (deterministic tiebreak, strongly recommended)."""
-
-    in_ports = ("in",)
-    out_ports = ("out",)
-
-    def validate_config(self) -> None:
-        for key in ("user_col", "time_col", "event_col"):
-            if not self.config.get(key):
-                raise OperatorConfigError(f"markov_transitions requires {key!r}")
-
-    def apply(self, inputs: PortMap) -> PortMap:
-        c = self.config
-        return {
-            "out": markov_transitions(
-                self.single_input(inputs),
-                c["user_col"],
-                c["time_col"],
-                c["event_col"],
-                list(c.get("order_cols") or []),
-            )
-        }
-
-
+@bind_operator("event_paths")
 def event_paths(
     df: DataFrame,
     user_col: str,
@@ -770,34 +642,7 @@ def event_paths(
     )
 
 
-@register_operator("event_paths")
-class EventPathsOperator(Operator):
-    """Config: ``user_col``, ``time_col``, ``event_col`` (required);
-    ``order_cols``, ``max_len``, ``top_k``."""
-
-    in_ports = ("in",)
-    out_ports = ("out",)
-
-    def validate_config(self) -> None:
-        for key in ("user_col", "time_col", "event_col"):
-            if not self.config.get(key):
-                raise OperatorConfigError(f"event_paths requires {key!r}")
-
-    def apply(self, inputs: PortMap) -> PortMap:
-        c = self.config
-        return {
-            "out": event_paths(
-                self.single_input(inputs),
-                c["user_col"],
-                c["time_col"],
-                c["event_col"],
-                list(c.get("order_cols") or []),
-                int(c.get("max_len", 8)),
-                int(c.get("top_k", 50)),
-            )
-        }
-
-
+@bind_operator("interpolate")
 def interpolate(
     df: DataFrame,
     key_cols: list[str],
@@ -918,33 +763,6 @@ def interpolate(
     )
 
 
-@register_operator("interpolate")
-class InterpolateOperator(Operator):
-    """Config: ``key_cols``, ``time_col``, ``value_col``, ``step``
-    (required); ``method`` (linear|ffill)."""
-
-    in_ports = ("in",)
-    out_ports = ("out",)
-
-    def validate_config(self) -> None:
-        for key in ("key_cols", "time_col", "value_col", "step"):
-            if not self.config.get(key):
-                raise OperatorConfigError(f"interpolate requires {key!r}")
-
-    def apply(self, inputs: PortMap) -> PortMap:
-        c = self.config
-        return {
-            "out": interpolate(
-                self.single_input(inputs),
-                list(c["key_cols"]),
-                c["time_col"],
-                c["value_col"],
-                c["step"],
-                c.get("method", "linear"),
-            )
-        }
-
-
 def _sequential_fold(
     df: DataFrame,
     key_cols: list[str],
@@ -1012,6 +830,11 @@ def _sequential_fold(
     )
 
 
+def _check_ewma(alpha, **_) -> None:
+    ensure(0 < alpha <= 1, "ewma alpha must be in (0, 1]")
+
+
+@bind_operator("ewma", check=_check_ewma)
 def ewma(
     df: DataFrame,
     key_cols: list[str],
@@ -1072,37 +895,11 @@ def ewma(
     )
 
 
-@register_operator("ewma")
-class EwmaOperator(Operator):
-    """Config: ``key_cols`` (list, required), ``order_cols`` (list,
-    required — must totally order rows within a key), ``value_col``
-    (required); ``alpha``, ``out_col``, ``quantize``."""
-
-    in_ports = ("in",)
-    out_ports = ("out",)
-
-    def validate_config(self) -> None:
-        for key in ("key_cols", "order_cols", "value_col"):
-            if not self.config.get(key):
-                raise OperatorConfigError(f"ewma requires {key!r}")
-        if not 0 < float(self.config.get("alpha", 0.3)) <= 1:
-            raise OperatorConfigError("ewma alpha must be in (0, 1]")
-
-    def apply(self, inputs: PortMap) -> PortMap:
-        c = self.config
-        return {
-            "out": ewma(
-                self.single_input(inputs),
-                list(c["key_cols"]),
-                list(c["order_cols"]),
-                c["value_col"],
-                float(c.get("alpha", 0.3)),
-                c.get("out_col", "ewma"),
-                int(c.get("quantize", 9)),
-            )
-        }
+def _check_winsorize(lower, upper, **_) -> None:
+    ensure(0.0 <= lower < upper <= 1.0, "winsorize needs 0 <= lower < upper <= 1")
 
 
+@bind_operator("winsorize", check=_check_winsorize)
 def winsorize(
     df: DataFrame,
     value_col: str,
@@ -1167,40 +964,12 @@ def winsorize(
     return joined.withColumn(oc, out).drop("__lo", "__hi")
 
 
-@register_operator("winsorize")
-class WinsorizeOperator(Operator):
-    """Config: ``value_col`` (required); ``group_cols``, ``lower``,
-    ``upper``, ``out_col`` (default ``<value_col>_w``),
-    ``quantize``."""
-
-    in_ports = ("in",)
-    out_ports = ("out",)
-
-    def validate_config(self) -> None:
-        if not self.config.get("value_col"):
-            raise OperatorConfigError("winsorize requires 'value_col'")
-        lo = float(self.config.get("lower", 0.01))
-        hi = float(self.config.get("upper", 0.99))
-        if not 0.0 <= lo < hi <= 1.0:
-            raise OperatorConfigError(
-                "winsorize needs 0 <= lower < upper <= 1"
-            )
-
-    def apply(self, inputs: PortMap) -> PortMap:
-        c = self.config
-        return {
-            "out": winsorize(
-                self.single_input(inputs),
-                c["value_col"],
-                list(c.get("group_cols") or []),
-                float(c.get("lower", 0.01)),
-                float(c.get("upper", 0.99)),
-                c.get("out_col"),
-                int(c.get("quantize", 6)),
-            )
-        }
+def _check_holt_linear(alpha, beta, **_) -> None:
+    ensure(0 < alpha <= 1, "holt_linear alpha must be in (0, 1]")
+    ensure(0 <= beta <= 1, "holt_linear beta must be in [0, 1]")
 
 
+@bind_operator("holt_linear", check=_check_holt_linear)
 def holt_linear(
     df: DataFrame,
     key_cols: list[str],
@@ -1273,41 +1042,14 @@ def holt_linear(
     )
 
 
-@register_operator("holt_linear")
-class HoltLinearOperator(Operator):
-    """Config: ``key_cols``, ``order_cols``, ``value_col``
-    (required); ``alpha``, ``beta``, ``level_col``, ``trend_col``,
-    ``quantize``."""
-
-    in_ports = ("in",)
-    out_ports = ("out",)
-
-    def validate_config(self) -> None:
-        for key in ("key_cols", "order_cols", "value_col"):
-            if not self.config.get(key):
-                raise OperatorConfigError(f"holt_linear requires {key!r}")
-        if not 0 < float(self.config.get("alpha", 0.3)) <= 1:
-            raise OperatorConfigError("holt_linear alpha must be in (0, 1]")
-        if not 0 <= float(self.config.get("beta", 0.2)) <= 1:
-            raise OperatorConfigError("holt_linear beta must be in [0, 1]")
-
-    def apply(self, inputs: PortMap) -> PortMap:
-        c = self.config
-        return {
-            "out": holt_linear(
-                self.single_input(inputs),
-                list(c["key_cols"]),
-                list(c["order_cols"]),
-                c["value_col"],
-                float(c.get("alpha", 0.3)),
-                float(c.get("beta", 0.2)),
-                c.get("level_col", "level"),
-                c.get("trend_col", "trend"),
-                int(c.get("quantize", 9)),
-            )
-        }
+def _check_holt_winters(period, alpha, beta, gamma, **_) -> None:
+    ensure(period >= 2, "holt_winters period must be >= 2")
+    ensure(0 < alpha <= 1, "holt_winters alpha must be in (0, 1]")
+    ensure(0 <= beta <= 1, "holt_winters beta must be in [0, 1]")
+    ensure(0 <= gamma <= 1, "holt_winters gamma must be in [0, 1]")
 
 
+@bind_operator("holt_winters", check=_check_holt_winters)
 def holt_winters(
     df: DataFrame,
     key_cols: list[str],
@@ -1405,50 +1147,11 @@ def holt_winters(
     )
 
 
-@register_operator("holt_winters")
-class HoltWintersOperator(Operator):
-    """Config: ``key_cols``, ``order_cols``, ``value_col``, ``period``
-    (required); ``alpha``, ``beta``, ``gamma``, ``level_col``,
-    ``trend_col``, ``seasonal_col``, ``quantize``."""
-
-    in_ports = ("in",)
-    out_ports = ("out",)
-
-    def validate_config(self) -> None:
-        for key in ("key_cols", "order_cols", "value_col"):
-            if not self.config.get(key):
-                raise OperatorConfigError(f"holt_winters requires {key!r}")
-        if "period" not in self.config:
-            raise OperatorConfigError("holt_winters requires 'period'")
-        if int(self.config["period"]) < 2:
-            raise OperatorConfigError("holt_winters period must be >= 2")
-        if not 0 < float(self.config.get("alpha", 0.3)) <= 1:
-            raise OperatorConfigError("holt_winters alpha must be in (0, 1]")
-        for k in ("beta", "gamma"):
-            v = float(self.config.get(k, 0.1 if k == "beta" else 0.2))
-            if not 0 <= v <= 1:
-                raise OperatorConfigError(f"holt_winters {k} must be in [0, 1]")
-
-    def apply(self, inputs: PortMap) -> PortMap:
-        c = self.config
-        return {
-            "out": holt_winters(
-                self.single_input(inputs),
-                list(c["key_cols"]),
-                list(c["order_cols"]),
-                c["value_col"],
-                int(c["period"]),
-                float(c.get("alpha", 0.3)),
-                float(c.get("beta", 0.1)),
-                float(c.get("gamma", 0.2)),
-                c.get("level_col", "level"),
-                c.get("trend_col", "trend"),
-                c.get("seasonal_col", "seasonal"),
-                int(c.get("quantize", 9)),
-            )
-        }
+def _check_cusum(slack, **_) -> None:
+    ensure(slack >= 0, "cusum slack must be >= 0")
 
 
+@bind_operator("cusum", check=_check_cusum)
 def cusum(
     df: DataFrame,
     key_cols: list[str],
@@ -1517,40 +1220,11 @@ def cusum(
     )
 
 
-@register_operator("cusum")
-class CusumOperator(Operator):
-    """Config: ``key_cols``, ``order_cols``, ``value_col``,
-    ``target`` (required); ``slack``, ``threshold``, ``quantize``."""
-
-    in_ports = ("in",)
-    out_ports = ("out",)
-
-    def validate_config(self) -> None:
-        for key in ("key_cols", "order_cols", "value_col"):
-            if not self.config.get(key):
-                raise OperatorConfigError(f"cusum requires {key!r}")
-        if "target" not in self.config:
-            raise OperatorConfigError("cusum requires 'target'")
-        if float(self.config.get("slack", 0.0)) < 0:
-            raise OperatorConfigError("cusum slack must be >= 0")
-
-    def apply(self, inputs: PortMap) -> PortMap:
-        c = self.config
-        thr = c.get("threshold")
-        return {
-            "out": cusum(
-                self.single_input(inputs),
-                list(c["key_cols"]),
-                list(c["order_cols"]),
-                c["value_col"],
-                float(c["target"]),
-                float(c.get("slack", 0.0)),
-                float(thr) if thr is not None else None,
-                int(c.get("quantize", 9)),
-            )
-        }
+def _check_theil_sen(time_divisor, **_) -> None:
+    ensure(time_divisor > 0, "theil_sen time_divisor must be > 0")
 
 
+@bind_operator("theil_sen", check=_check_theil_sen)
 def theil_sen(
     df: DataFrame,
     key_cols: list[str],
@@ -1658,40 +1332,12 @@ def theil_sen(
     )
 
 
-@register_operator("theil_sen")
-class TheilSenOperator(Operator):
-    """Config: ``key_cols``, ``time_col``, ``value_col`` (required);
-    ``time_divisor``, ``slope_col``, ``intercept_col``,
-    ``max_points`` (None skips the guard probe), ``quantize``."""
-
-    in_ports = ("in",)
-    out_ports = ("out",)
-
-    def validate_config(self) -> None:
-        for key in ("key_cols", "time_col", "value_col"):
-            if not self.config.get(key):
-                raise OperatorConfigError(f"theil_sen requires {key!r}")
-        if float(self.config.get("time_divisor", 1.0)) <= 0:
-            raise OperatorConfigError("theil_sen time_divisor must be > 0")
-
-    def apply(self, inputs: PortMap) -> PortMap:
-        c = self.config
-        mp = c.get("max_points", 10000)
-        return {
-            "out": theil_sen(
-                self.single_input(inputs),
-                list(c["key_cols"]),
-                c["time_col"],
-                c["value_col"],
-                float(c.get("time_divisor", 1.0)),
-                c.get("slope_col", "slope"),
-                c.get("intercept_col", "intercept"),
-                int(mp) if mp is not None else None,
-                int(c.get("quantize", 9)),
-            )
-        }
+def _check_ols_trend(value_scale, time_divisor, **_) -> None:
+    ensure(value_scale > 0, "ols_trend value_scale must be > 0")
+    ensure(time_divisor > 0, "ols_trend time_divisor must be > 0")
 
 
+@bind_operator("ols_trend", check=_check_ols_trend)
 def ols_trend(
     df: DataFrame,
     key_cols: list[str],
@@ -1796,40 +1442,7 @@ def ols_trend(
     )
 
 
-@register_operator("ols_trend")
-class OlsTrendOperator(Operator):
-    """Config: ``key_cols``, ``time_col``, ``value_col`` (required);
-    ``x_offset`` (center times to keep the decimal moments inside
-    128 bits), ``value_scale``, ``time_divisor``, ``quantize``."""
-
-    in_ports = ("in",)
-    out_ports = ("out",)
-
-    def validate_config(self) -> None:
-        for key in ("key_cols", "time_col", "value_col"):
-            if not self.config.get(key):
-                raise OperatorConfigError(f"ols_trend requires {key!r}")
-        if int(self.config.get("value_scale", 100)) <= 0:
-            raise OperatorConfigError("ols_trend value_scale must be > 0")
-        if float(self.config.get("time_divisor", 1.0)) <= 0:
-            raise OperatorConfigError("ols_trend time_divisor must be > 0")
-
-    def apply(self, inputs: PortMap) -> PortMap:
-        c = self.config
-        return {
-            "out": ols_trend(
-                self.single_input(inputs),
-                list(c["key_cols"]),
-                c["time_col"],
-                c["value_col"],
-                int(c.get("x_offset", 0)),
-                int(c.get("value_scale", 100)),
-                float(c.get("time_divisor", 1.0)),
-                int(c.get("quantize", 9)),
-            )
-        }
-
-
+@bind_operator("kaplan_meier")
 def kaplan_meier(
     df: DataFrame,
     key_cols: list[str],
@@ -1918,32 +1531,11 @@ def kaplan_meier(
     )
 
 
-@register_operator("kaplan_meier")
-class KaplanMeierOperator(Operator):
-    """Config: ``key_cols``, ``duration_col``, ``event_col``
-    (required); ``quantize``."""
-
-    in_ports = ("in",)
-    out_ports = ("out",)
-
-    def validate_config(self) -> None:
-        for key in ("key_cols", "duration_col", "event_col"):
-            if not self.config.get(key):
-                raise OperatorConfigError(f"kaplan_meier requires {key!r}")
-
-    def apply(self, inputs: PortMap) -> PortMap:
-        c = self.config
-        return {
-            "out": kaplan_meier(
-                self.single_input(inputs),
-                list(c["key_cols"]),
-                c["duration_col"],
-                c["event_col"],
-                int(c.get("quantize", 9)),
-            )
-        }
+def _check_seasonal_decompose(period, **_) -> None:
+    ensure(period >= 2, "seasonal_decompose period must be >= 2")
 
 
+@bind_operator("seasonal_decompose", check=_check_seasonal_decompose)
 def seasonal_decompose(
     df: DataFrame,
     key_cols: list[str],
@@ -2098,40 +1690,12 @@ def seasonal_decompose(
     )
 
 
-@register_operator("seasonal_decompose")
-class SeasonalDecomposeOperator(Operator):
-    """Config: ``key_cols``, ``order_cols``, ``value_col``,
-    ``period`` (required); ``value_scale``, ``quantize``."""
-
-    in_ports = ("in",)
-    out_ports = ("out",)
-
-    def validate_config(self) -> None:
-        for key in ("key_cols", "order_cols", "value_col"):
-            if not self.config.get(key):
-                raise OperatorConfigError(
-                    f"seasonal_decompose requires {key!r}"
-                )
-        if int(self.config.get("period", 0)) < 2:
-            raise OperatorConfigError(
-                "seasonal_decompose period must be >= 2"
-            )
-
-    def apply(self, inputs: PortMap) -> PortMap:
-        c = self.config
-        return {
-            "out": seasonal_decompose(
-                self.single_input(inputs),
-                list(c["key_cols"]),
-                list(c["order_cols"]),
-                c["value_col"],
-                int(c["period"]),
-                int(c.get("value_scale", 100)),
-                int(c.get("quantize", 9)),
-            )
-        }
+def _check_acf(max_lag, value_scale, **_) -> None:
+    ensure(max_lag >= 1, "acf max_lag must be >= 1")
+    ensure(value_scale > 0, "acf value_scale must be > 0")
 
 
+@bind_operator("acf", check=_check_acf)
 def acf(
     df: DataFrame,
     key_cols: list[str],
@@ -2270,38 +1834,12 @@ def acf(
     )
 
 
-@register_operator("acf")
-class AcfOperator(Operator):
-    """Config: ``key_cols``, ``order_cols``, ``value_col``
-    (required); ``max_lag``, ``value_scale``, ``quantize``."""
-
-    in_ports = ("in",)
-    out_ports = ("out",)
-
-    def validate_config(self) -> None:
-        for key in ("key_cols", "order_cols", "value_col"):
-            if not self.config.get(key):
-                raise OperatorConfigError(f"acf requires {key!r}")
-        if int(self.config.get("max_lag", 5)) < 1:
-            raise OperatorConfigError("acf max_lag must be >= 1")
-        if int(self.config.get("value_scale", 100)) <= 0:
-            raise OperatorConfigError("acf value_scale must be > 0")
-
-    def apply(self, inputs: PortMap) -> PortMap:
-        c = self.config
-        return {
-            "out": acf(
-                self.single_input(inputs),
-                list(c["key_cols"]),
-                list(c["order_cols"]),
-                c["value_col"],
-                int(c.get("max_lag", 5)),
-                int(c.get("value_scale", 100)),
-                int(c.get("quantize", 9)),
-            )
-        }
+def _check_ccf(max_lag, value_scale, **_) -> None:
+    ensure(max_lag >= 0, "ccf max_lag must be >= 0")
+    ensure(value_scale > 0, "ccf value_scale must be > 0")
 
 
+@bind_operator("ccf", check=_check_ccf)
 def ccf(
     df: DataFrame,
     key_cols: list[str],
@@ -2481,36 +2019,3 @@ def ccf(
             F.floor(r * F.lit(q)) / F.lit(q),
         ).alias("ccf"),
     )
-
-
-@register_operator("ccf")
-class CcfOperator(Operator):
-    """Config: ``key_cols``, ``order_cols``, ``x_col``, ``y_col``
-    (required); ``max_lag``, ``value_scale``, ``quantize``."""
-
-    in_ports = ("in",)
-    out_ports = ("out",)
-
-    def validate_config(self) -> None:
-        for key in ("key_cols", "order_cols", "x_col", "y_col"):
-            if not self.config.get(key):
-                raise OperatorConfigError(f"ccf requires {key!r}")
-        if int(self.config.get("max_lag", 5)) < 0:
-            raise OperatorConfigError("ccf max_lag must be >= 0")
-        if int(self.config.get("value_scale", 100)) <= 0:
-            raise OperatorConfigError("ccf value_scale must be > 0")
-
-    def apply(self, inputs: PortMap) -> PortMap:
-        c = self.config
-        return {
-            "out": ccf(
-                self.single_input(inputs),
-                list(c["key_cols"]),
-                list(c["order_cols"]),
-                c["x_col"],
-                c["y_col"],
-                int(c.get("max_lag", 5)),
-                int(c.get("value_scale", 100)),
-                int(c.get("quantize", 9)),
-            )
-        }

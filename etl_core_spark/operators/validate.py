@@ -18,7 +18,14 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from etl_core_spark.operators.base import Operator, OperatorConfigError, PortMap, register_operator
+from etl_core_spark.operators.base import (
+    Operator,
+    OperatorConfigError,
+    PortMap,
+    bind_operator,
+    ensure,
+    register_operator,
+)
 from etl_core_spark.schema import DataType, FieldDef, Schema
 
 
@@ -119,6 +126,12 @@ class ValidateOperator(Operator):
         return {"valid": df.filter(ok), "invalid": df.filter(~ok)}
 
 
+def _check_k_anonymize(k, mode, **_) -> None:
+    ensure(k >= 1, "k_anonymize requires k >= 1")
+    ensure(mode in ("drop", "flag"), "k_anonymize mode must be drop/flag")
+
+
+@bind_operator("k_anonymize", check=_check_k_anonymize)
 def k_anonymize(
     df: DataFrame,
     quasi_cols: list[str],
@@ -182,35 +195,11 @@ def k_anonymize(
     return joined.where(ok).drop("__cls_n")
 
 
-@register_operator("k_anonymize")
-class KAnonymizeOperator(Operator):
-    """Config: ``quasi_cols`` (required); ``k`` (default 5), ``mode``
-    (drop/flag), ``out_col``."""
-
-    in_ports = ("in",)
-    out_ports = ("out",)
-
-    def validate_config(self) -> None:
-        if not self.config.get("quasi_cols"):
-            raise OperatorConfigError("k_anonymize requires 'quasi_cols'")
-        if int(self.config.get("k", 5)) < 1:
-            raise OperatorConfigError("k_anonymize requires k >= 1")
-        if self.config.get("mode", "drop") not in ("drop", "flag"):
-            raise OperatorConfigError("k_anonymize mode must be drop/flag")
-
-    def apply(self, inputs: PortMap) -> PortMap:
-        c = self.config
-        return {
-            "out": k_anonymize(
-                self.single_input(inputs),
-                list(c["quasi_cols"]),
-                int(c.get("k", 5)),
-                c.get("mode", "drop"),
-                c.get("out_col", "k_anonymous"),
-            )
-        }
+def _check_l_diversity(mode, **_) -> None:
+    ensure(mode in ("drop", "flag"), "l_diversity mode must be drop/flag")
 
 
+@bind_operator("l_diversity", check=_check_l_diversity)
 def l_diversity(
     df: DataFrame,
     quasi_cols: list[str],
@@ -273,33 +262,3 @@ def l_diversity(
     if mode == "flag":
         return joined.withColumn(out_col, ok).drop("__ndv")
     return joined.where(ok).drop("__ndv")
-
-
-@register_operator("l_diversity")
-class LDiversityOperator(Operator):
-    """Config: ``quasi_cols``, ``sensitive_col`` (required); ``l``
-    (default 2), ``mode`` (drop/flag), ``out_col``."""
-
-    in_ports = ("in",)
-    out_ports = ("out",)
-
-    def validate_config(self) -> None:
-        if not self.config.get("quasi_cols"):
-            raise OperatorConfigError("l_diversity requires 'quasi_cols'")
-        if not self.config.get("sensitive_col"):
-            raise OperatorConfigError("l_diversity requires 'sensitive_col'")
-        if self.config.get("mode", "drop") not in ("drop", "flag"):
-            raise OperatorConfigError("l_diversity mode must be drop/flag")
-
-    def apply(self, inputs: PortMap) -> PortMap:
-        c = self.config
-        return {
-            "out": l_diversity(
-                self.single_input(inputs),
-                list(c["quasi_cols"]),
-                c["sensitive_col"],
-                int(c.get("l", 2)),
-                c.get("mode", "drop"),
-                c.get("out_col", "l_diverse"),
-            )
-        }

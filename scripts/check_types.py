@@ -11,9 +11,10 @@ Usage: python scripts/check_types.py [sf_dir] [query ...]
 
 from __future__ import annotations
 
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 # DuckDB type -> acceptable Spark simpleStrings (EXACT matches — a
 # prefix test would wave 'interval day to second' through as 'int').

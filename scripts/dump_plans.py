@@ -12,14 +12,15 @@ from __future__ import annotations
 import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 
 def main() -> int:
     import __spark_entry__ as entrymod
     from etl_core_spark.session import get_spark
 
-    outdir = os.path.join("/root/repo/plans", sys.argv[1])
+    outdir = os.path.join(REPO, "plans", sys.argv[1])
     suffix = sys.argv[2]
     only = set(sys.argv[3:])
     os.makedirs(outdir, exist_ok=True)

@@ -330,3 +330,34 @@ def test_api_execution_reports_component_metrics(api, spark):
     # and the persisted record serves the same numbers back
     _, execs = http("GET", f"{base}/execution?job_id={created['job_id']}")
     assert execs[-1]["metrics"]["flt"]["lines_dismissed"] == 2
+
+
+def test_api_misnamed_in_port_is_400_not_404(api):
+    """A job that routes into an operator port it does not have is a
+    config error of a job that exists: 400 naming the expected and the
+    received port — not the store's "job not found" 404."""
+    server, tmp_path = api
+    base = f"http://127.0.0.1:{server.port}"
+    left = tmp_path / "left.csv"
+    left.write_text("id,lo,hi\n1,0,5\n")
+    right = tmp_path / "right.csv"
+    right.write_text("rid,rlo,rhi\n7,3,9\n")
+    config = {
+        "name": "misnamed_port",
+        "components": [
+            {"name": "l", "comp_type": "read_csv", "filepath": str(left),
+             "routes": {"out": [{"to": "j", "in_port": "left"}]}},
+            {"name": "r", "comp_type": "read_csv", "filepath": str(right),
+             "routes": {"out": [{"to": "j", "in_port": "rigth"}]}},
+            {"name": "j", "comp_type": "interval_join", "left_lo": "lo",
+             "left_hi": "hi", "right_lo": "rlo", "right_hi": "rhi",
+             "bucket_width": 5, "routes": {"out": [{"to": "w", "in_port": "in"}]}},
+            {"name": "w", "comp_type": "write_csv", "filepath": str(tmp_path / "out")},
+        ],
+    }
+    status, created = http("POST", f"{base}/jobs", config)
+    assert status == 201
+    status, body = http("POST", f"{base}/execution/{created['job_id']}")
+    assert status == 400, body
+    assert "right" in body["error"] and "rigth" in body["error"]
+    assert http("POST", f"{base}/execution/no_such_job")[0] == 404
