@@ -1278,7 +1278,6 @@ def connected_components(
     id_a: str = "id_a",
     id_b: str = "id_b",
     max_iters: int = 50,
-    checkpoint_every: int = 5,
     driver_max_edges: int = 1_000_000,
 ) -> DataFrame:
     """Connected components over a near-dup pair list →
@@ -1307,11 +1306,9 @@ def connected_components(
       ``localCheckpoint``-ed EVERY round — one round's plan
       references the previous relation ~8x, so without per-round
       truncation the logical plan (and Catalyst analysis time) grows
-      exponentially. ``checkpoint_every`` is kept for interface
-      stability but no longer spaces checkpoints out. On a real
-      cluster prefer ``setCheckpointDir`` + ``checkpoint()`` for
-      executor-loss resilience. Raises after ``max_iters`` rounds
-      rather than returning unconverged labels.
+      exponentially. On a real cluster prefer ``setCheckpointDir`` +
+      ``checkpoint()`` for executor-loss resilience. Raises after
+      ``max_iters`` rounds rather than returning unconverged labels.
     """
     from etl_core_spark.session import checkpoint, persist_intermediate, release
 

@@ -5,10 +5,12 @@ Parity with the reference's schema router
 reference derives JSON Schema from each component's pydantic model
 and serves three views per component — ``form`` (GUI-hidden fields
 stripped), ``full`` (everything), ``hidden`` (hidden-only) — plus the
-job-document schema and the component-type list. This engine's
-operators validate config imperatively (no pydantic), so the field
-specs live here as one declarative table keyed by registry name; the
-same ``hidden`` flag drives the three views.
+job-document schema and the component-type list. There is no
+pydantic here: the fields of an operator bound by ``bind_operator``
+are derived from its function's signature at import, with
+descriptions and enums from ``FIELD_NOTES``; a class operator's are
+hand-written in ``FIELD_SPECS``, keyed by registry name. The
+``hidden`` flag drives the three views.
 
 Draft: https://json-schema.org/draft/2020-12/schema (the subset the
 reference's GUI consumes: type/properties/required/default/enum/
@@ -17,14 +19,23 @@ description/items).
 
 from __future__ import annotations
 
-from typing import Any
+import types
+from typing import Any, Union, get_args, get_origin, get_type_hints
 
-from etl_core_spark.operators.base import OperatorConfigError, operator_names
+from pyspark.sql import Column
+
+import etl_core_spark.operators  # noqa: F401 - registers the bound operators
+from etl_core_spark.operators.base import (
+    BoundOperator,
+    OperatorConfigError,
+    get_operator,
+    operator_names,
+)
 
 
 def f(
     name: str,
-    jtype: str,
+    jtype: str | list[str],
     *,
     required: bool = False,
     default: Any = None,
@@ -44,8 +55,6 @@ def f(
         spec["items"] = items
     return spec
 
-
-_STR_ARRAY = {"type": "array", "items": {"type": "string"}}
 
 # port-schema declaration accepted by every source/sink (Schema.from_dict)
 _SCHEMA_FIELD = f(
@@ -162,6 +171,16 @@ FIELD_SPECS: dict[str, list[dict[str, Any]]] = {
         _WRITE_MODE,
         f("partition_by", "array", items={"type": "string"}),
         f("compression", "string", enum=["snappy", "zstd", "gzip", "none"]),
+        f("num_files", "integer", desc="exact output file count (overrides target_file_mb)"),
+        f("target_file_mb", "integer",
+          desc="compaction: file count = ceil(plan byte estimate / target)"),
+        f("sort_by", "array", items={"type": "string"},
+          desc="range-partition + sort within partitions (tight min/max on the leading column)"),
+        f("zorder_by", "array", items={"type": "string"},
+          desc="Morton-interleaved multi-column clustering; exclusive with sort_by"),
+        f("zorder_method", "string", default="range", enum=["range", "quantile"],
+          desc="range = min-max grid (deterministic); quantile = approx-CDF "
+               "buckets for skewed dimensions"),
     ],
     "upsert_parquet": [
         _FILEPATH,
@@ -251,37 +270,6 @@ FIELD_SPECS: dict[str, list[dict[str, Any]]] = {
         _SCHEMA_FIELD | {"required": True},
         f("strict", "boolean", default=True, desc="extra columns are errors"),
         f("mode", "string", default="route", enum=["route", "raise"]),
-    ],
-    "as_of_join": [
-        f("on", "string", required=True, desc="equi-key"),
-        f("left_ts", "string", required=True),
-        f("right_ts", "string", required=True),
-        f("value_cols", "array", required=True, items={"type": "string"}),
-        f("strict", "boolean", default=False, desc="strictly-before match"),
-    ],
-    "salted_join": [
-        f("on", "array", required=True, items={"type": "string"},
-          desc="equi-join keys"),
-        f("how", "string", default="inner", enum=["inner", "left"]),
-        f("salt_factor", "integer", default=8,
-          desc="reducers a hot probe key spreads over; build side "
-               "replicates this many times"),
-        f("collapse_duplicates", "boolean", default=False,
-          desc="pre-aggregate IDENTICAL probe rows to one row + count "
-               "(map-side combine) and re-expand after the join — the "
-               "deterministic spread for hot keys made of identical "
-               "tuples, which the row-hash salt cannot scatter"),
-    ],
-    "range_join": [
-        f("point_col", "string", required=True),
-        f("lo_col", "string", required=True),
-        f("hi_col", "string", required=True),
-        f("bucket_width", "number", required=True,
-          desc="candidate bucket width; pick near the median interval width"),
-        f("how", "string", default="inner", enum=["inner", "left"]),
-        f("broadcast_intervals", "boolean",
-          desc="force/forbid broadcasting the exploded interval side "
-               "(absent = stats-gated auto)"),
     ],
     # -- LLM-pipeline operators ---------------------------------------
     "dedup": [
@@ -381,14 +369,6 @@ FIELD_SPECS: dict[str, list[dict[str, Any]]] = {
         f("refine_factor", "integer", default=4,
           desc="pq: candidates per query = refine_factor*k, exact-reranked"),
     ],
-    "random_projection": [
-        f("dim", "integer", required=True, desc="input embedding width"),
-        f("out_dim", "integer", default=8,
-          desc="projected width (Johnson-Lindenstrauss; keep <=~16)"),
-        f("seed", "integer", default=42),
-        f("vec_col", "string", default="embedding"),
-        f("out_col", "string", default="proj"),
-    ],
     "pca": [
         f("dim", "integer", required=True, desc="input embedding width"),
         f("k", "integer", default=4, desc="principal components kept"),
@@ -441,37 +421,6 @@ FIELD_SPECS: dict[str, list[dict[str, Any]]] = {
           desc="relative output file name per row (no traversal, unique)"),
         f("content_column", "string", default="content"),
     ],
-    "semdedup": [
-        f("threshold", "number", default=0.95,
-          desc="within-cluster cosine above this = semantic duplicate"),
-        f("num_centroids", "integer", default=8,
-          desc="k-means cells; size ~ corpus/expected_cell at scale"),
-        f("kmeans_iters", "integer", default=0,
-          desc="deterministic Lloyd refinement rounds"),
-        f("keep", "string", default="min_id",
-          enum=["min_id", "far_from_centroid"],
-          desc="survivor policy; far_from_centroid = the SemDeDup "
-               "paper's keep-the-atypical rule"),
-        f("assign_method", "string", default="auto",
-          enum=["auto", "expr", "numpy"],
-          desc="centroid assignment kernel: expr = bit-stable JVM fold; "
-               "numpy = BLAS matmul per Arrow batch (faster at large k); "
-               "auto switches to numpy above 32 centroids"),
-        f("vec_col", "string", default="embedding"),
-        f("id_col", "string", default="vec_id"),
-    ],
-    "cosine_near_dup": [
-        f("threshold", "number", default=0.95),
-        f("vec_col", "string", default="embedding"),
-        f("id_col", "string", default="vec_id"),
-        f("exact", "boolean", default=False,
-          desc="full cross product (oracle-checkable) instead of LSH buckets"),
-        f("dim", "integer", default=64),
-        f("num_planes", "integer", default=6),
-        f("seed", "integer", default=42),
-        f("num_tables", "integer", default=1,
-          desc="independent LSH tables unioned for recall"),
-    ],
     "clean_text": [
         f("text_col", "string", default="text"),
         f("output_col", "string", default="text_clean"),
@@ -481,605 +430,10 @@ FIELD_SPECS: dict[str, list[dict[str, Any]]] = {
                  "redact_ips,redact_phones,normalize_whitespace,lowercase)",
         ),
     ],
-    "text_analysis": [
-        f("text_col", "string", default="text"),
-        f(
-            "metrics", "array", items={"type": "string"},
-            desc="subset of (n_chars,n_tokens,n_tokens_bpe,punct_ratio,"
-                 "stopword_ratio,mean_token_length,quality_score,lang_pred,"
-                 "lang_pred_ngram,fingerprint,dup_line_frac,"
-                 "dup_line_char_frac,top_bigram_char_frac,alpha_token_frac,"
-                 "bullet_line_frac,ellipsis_line_frac,symbol_token_ratio,"
-                 "gopher_rules_pass)",
-        ),
-    ],
-    "multimodal_features": [
-        f("feature_dim", "integer", default=8),
-        f("payload_col", "string", default="payload"),
-        f("id_col", "string", default="media_id"),
-        f("max_records_per_batch", "integer", default=256, desc="Arrow batch rows (bound blob memory)"),
-    ],
-    "png_features": [
-        f("payload_col", "string", default="payload"),
-        f("id_col", "string", default="media_id"),
-        f("on_error", "string", default="raise", enum=["raise", "null"],
-          desc="null records the failure message per row instead of failing"),
-        f("max_records_per_batch", "integer", default=256,
-          desc="Arrow batch rows (bound blob memory)"),
-    ],
-    "image_phash": [
-        f("payload_col", "string", default="payload"),
-        f("id_col", "string", default="media_id"),
-        f("grid", "integer", default=8,
-          desc="cell lattice size; hash is grid^2 bits"),
-        f("on_error", "string", default="raise", enum=["raise", "null"]),
-        f("max_records_per_batch", "integer", default=256),
-    ],
-    "wav_features": [
-        f("payload_col", "string", default="payload"),
-        f("id_col", "string", default="media_id"),
-        f("on_error", "string", default="raise", enum=["raise", "null"],
-          desc="null records the failure message per row; only "
-               "16-bit PCM RIFF/WAVE is decodable (loud otherwise)"),
-        f("max_records_per_batch", "integer", default=256),
-    ],
-    "gif_frames": [
-        f("payload_col", "string", default="payload"),
-        f("id_col", "string", default="media_id"),
-        f("every_n", "integer", default=1,
-          desc="sample every n-th animation frame"),
-        f("max_frames", "integer",
-          desc="cap sampled frames per clip (default unlimited)"),
-        f("with_phash", "boolean", default=False,
-          desc="also emit each sampled frame's aHash fingerprint "
-               "(the image_phash kernel on the frame rectangle)"),
-        f("grid", "integer", default=8,
-          desc="phash cell lattice; frames smaller than grid carry "
-               "NULL phash"),
-        f("on_error", "string", default="raise", enum=["raise", "null"]),
-        f("max_records_per_batch", "integer", default=256),
-    ],
-    "audio_fingerprint": [
-        f("payload_col", "string", default="payload"),
-        f("id_col", "string", default="media_id"),
-        f("bands", "integer", default=64,
-          desc="energy windows = fingerprint bits (2..1024); bit w "
-               "is 1 iff bands*E_w > E_total over the decoded PCM"),
-        f("on_error", "string", default="raise", enum=["raise", "null"]),
-        f("max_records_per_batch", "integer", default=256),
-    ],
-    "hamming_near_dup_pairs": [
-        f("fp_col", "string", required=True,
-          desc="precomputed bit-string fingerprint column "
-               "(image_phash output, an external simhash, ...)"),
-        f("id_col", "string", required=True),
-        f("max_hamming", "integer", default=6,
-          desc="pair budget; fingerprints split into max_hamming+1 "
-               "pigeonhole bands (banded equi-join, never all-pairs)"),
-        f("bits", "integer", default=64,
-          desc="fingerprint length in bits (1..1024); NULL rows drop, "
-               "malformed fingerprints raise at execution"),
-        f("max_band_freq", "integer",
-          desc="drop hotter-than-cap band keys (mass-identical "
-               "content), as in minhash_candidates"),
-    ],
     "hash_split": [
         f("key_col", "string", required=True, desc="deterministic md5-bucket key"),
         f("weights", "object", required=True, desc="split name -> weight, e.g. {train: 0.8, val: 0.1, test: 0.1}"),
         f("salt", "string", default=""),
-    ],
-    "strip_duplicate_spans": [
-        f("text_col", "string", default="text"),
-        f("id_col", "string", default="doc_id"),
-        f("span_tokens", "integer", default=50,
-          desc="minimum duplicated-span length in tokens (Lee et al. use 50)"),
-        f("min_count", "integer", default=2,
-          desc="corpus occurrence threshold for a span to count as duplicated"),
-    ],
-    "kmeans_cluster": [
-        f("k", "integer", default=8, desc="number of clusters"),
-        f("vec_col", "string", default="embedding"),
-        f("id_col", "string", default="vec_id"),
-        f("iterations", "integer", default=0,
-          desc="deterministic Lloyd rounds (0 = seeded assignment, "
-               "the SQL-certifiable shape)"),
-        f("emit_similarity", "boolean", default=True,
-          desc="include cosine to the assigned centroid"),
-    ],
-    "containment_pairs": [
-        f("text_col", "string", default="text"),
-        f("id_col", "string", default="doc_id"),
-        f("threshold", "number", default=0.8,
-          desc="|A∩B|/|A| floor — asymmetric (Broder containment)"),
-        f("shingle_n", "integer", default=3),
-        f("max_shingle_freq", "integer", default=100,
-          desc="drop shingles in more docs than this before the join "
-               "(fan-out cap; containment then only undercounts)"),
-    ],
-    "substring_dup_spans": [
-        f("text_col", "string", default="text"),
-        f("id_col", "string", default="doc_id"),
-        f("span_tokens", "integer", default=50,
-          desc="k-gram length (Lee et al. use 50 tokens)"),
-        f("min_docs", "integer", default=2,
-          desc="distinct-document threshold for a gram to count as "
-               "cross-document duplicated"),
-        f("max_doc_freq", "integer",
-          desc="optionally EXCLUDE grams in more than this many docs "
-               "(stopword/boilerplate trade; default no cap)"),
-    ],
-    "substring_dedup": [
-        f("text_col", "string", default="text"),
-        f("id_col", "string", default="doc_id"),
-        f("span_tokens", "integer", default=50,
-          desc="k-gram length (Lee et al. use 50 tokens)"),
-        f("min_docs", "integer", default=2),
-        f("keep_one", "boolean", default=True,
-          desc="preserve each duplicated gram's canonical (smallest "
-               "doc, start) occurrence — the paper's remove-all-but-one"),
-        f("max_doc_freq", "integer",
-          desc="optionally EXCLUDE grams in more than this many docs"),
-    ],
-    "assemble_docs": [
-        f("key_col", "string", required=True),
-        f("part_col", "string", required=True),
-        f("order_col", "string", required=True),
-        f("sep", "string", default="\n"),
-    ],
-    "quantile_filter": [
-        f("value_col", "string", required=True),
-        f("q", "number", required=True, desc="quantile threshold in [0,1]"),
-        f("keep", "string", default="top", enum=["top", "bottom"]),
-        f("exact", "boolean", default=False,
-          desc="exact interpolated percentile (sort-shaped) vs GK sketch"),
-        f("accuracy", "integer", default=10000,
-          desc="approx_percentile accuracy (exact=false)"),
-    ],
-    "shuffle_rows": [
-        f("key_col", "string", required=True,
-          desc="unique row key the permutation hashes"),
-        f("salt", "string", default="",
-          desc="epoch seed — new salt = new deterministic permutation"),
-        f("n_buckets", "integer", default=256,
-          desc="parallel rank groups; offsets collect is one row per bucket"),
-        f("pos_col", "string", default="shuffle_pos"),
-    ],
-    "hash_sample": [
-        f("key_col", "string", required=True),
-        f("rate", "number", default=0.1),
-        f("salt", "string", default=""),
-    ],
-    "weighted_sample": [
-        f("key_col", "string", required=True),
-        f("weight_col", "string", required=True,
-          desc="per-row keep probability = min(1, weight * scale); NULL/negative drops"),
-        f("scale", "number", default=1.0),
-        f("salt", "string", default=""),
-    ],
-    "take_tokens_per_group": [
-        f("group_col", "string", required=True),
-        f("budget_tokens", "integer", required=True),
-        f("key_col", "string", required=True),
-        f("token_col", "string",
-          desc="pre-computed token counts (default whitespace token_count(text))"),
-        f("text_col", "string", default="text"),
-        f("order_col", "string",
-          desc="best-first prefix by this metric (default: hash order)"),
-        f("descending", "boolean", default=True),
-        f("salt", "string", default=""),
-    ],
-    "line_dedup": [
-        f("text_col", "string", default="text"),
-        f("id_col", "string", default="doc_id"),
-        f("delimiter", "string", default="\\n",
-          desc="line-split regex (Java regex)"),
-        f("join_sep", "string", default="\n",
-          desc="literal separator for the rewritten text"),
-        f("max_doc_frac", "number",
-          desc="drop lines in > this FRACTION of docs (broadcast narrow "
-               "rewrite; exactly one of the two thresholds)"),
-        f("max_doc_freq", "integer",
-          desc="drop lines in > this many docs ABSOLUTE (anti-join path)"),
-        f("min_line_chars", "integer", default=1),
-        f("normalize", "boolean", default=True,
-          desc="compare lines lowercased+trimmed (output keeps original bytes)"),
-    ],
-    "lm_score": [
-        f("text_col", "string", default="text"),
-        f("id_col", "string", default="doc_id"),
-        f("discount", "number", default=0.75,
-          desc="absolute-discount D in [0,1) (Ney et al. interpolated smoothing)"),
-        f("lowercase", "boolean", default=True),
-    ],
-    "pii_scan": [
-        f("text_col", "string", default="text"),
-        f("kinds", "array", items={"type": "string"},
-          desc="subset of email/credit_card/ssn/ipv4/phone (default all)"),
-        f("redact", "boolean", default=False,
-          desc="additionally emit placeholder-substituted text"),
-        f("redacted_col", "string",
-          desc="output column for redacted text (default <text_col>_redacted)"),
-    ],
-    "corpus_overlap": [
-        f("group_col", "string", default="source",
-          desc="corpus slice key (source, lang, crawl snapshot)"),
-        f("text_col", "string", default="text"),
-        f("shingle_n", "integer", default=3),
-    ],
-    "collocations": [
-        f("text_col", "string", default="text"),
-        f("min_count", "integer", default=5,
-          desc="minimum bigram corpus count"),
-        f("top_k", "integer", default=50, desc="pairs returned, by lift"),
-    ],
-    "histogram": [
-        f("value_col", "string", required=True),
-        f("bins", "integer", default=20),
-        f("lo", "number", desc="lower bound; omitted = data min"),
-        f("hi", "number", desc="upper bound; omitted = data max"),
-    ],
-    "diff_datasets": [
-        f("key_cols", "array", required=True, items={"type": "string"}),
-        f("compare_cols", "array", items={"type": "string"},
-          desc="columns compared null-safely; default: shared non-keys"),
-        f("status_col", "string", default="diff_status"),
-    ],
-    "scd2_merge": [
-        f("key_cols", "array", required=True, items={"type": "string"}),
-        f("tracked_cols", "array", required=True, items={"type": "string"},
-          desc="attributes whose change opens a new version"),
-        f("effective_col", "string", default="effective_at"),
-        f("from_col", "string", default="valid_from"),
-        f("to_col", "string", default="valid_to"),
-    ],
-    "bloom_membership": [
-        f("key_col", "string", required=True),
-        f("keys_col", "string", desc="key column on the keys port "
-          "(defaults to key_col)"),
-        f("m_bits", "integer", default=1 << 20,
-          desc="filter positions; size >= ~10*n*k for ~1% FP"),
-        f("k", "integer", default=4, desc="hash functions"),
-        f("mode", "string", default="flag", enum=["flag", "drop", "keep"]),
-        f("out_col", "string", default="bloom_hit"),
-        f("salt", "string", default="bloom"),
-    ],
-    "zorder_key": [
-        f("cols", "array", required=True, items={"type": "string"},
-          desc="1-4 layout columns whose bucket bits interleave"),
-        f("method", "string", default="range",
-          enum=["range", "quantile"],
-          desc="range = min-max grid (deterministic); quantile = "
-               "approx-CDF buckets for skewed dimensions"),
-        f("out_col", "string", default="zvalue"),
-        f("partitions", "integer",
-          desc="when set: range-partition + sort on the z-value "
-               "(the clustered-write layout)"),
-    ],
-    "cdc_apply": [
-        f("key_cols", "array", required=True, items={"type": "string"}),
-        f("seq_col", "string", default="seq",
-          desc="per-key change order (LSN / binlog offset / commit ts)"),
-        f("op_col", "string", default="op"),
-        f("value_cols", "array", items={"type": "string"},
-          desc="full-row-image columns taken from the change; "
-               "defaults to non-key snapshot columns present in both"),
-        f("delete_ops", "array", items={"type": "string"},
-          desc="op codes meaning delete (default ['D']); every other "
-               "op upserts"),
-    ],
-    "mmr_rerank": [
-        f("k", "integer", default=5, desc="picks per query"),
-        f("fetch_n", "integer", default=50,
-          desc="ANN shortlist size the greedy pass runs over"),
-        f("lambda_", "number", default=0.5,
-          desc="relevance weight: 1 = pure relevance, 0 = pure "
-               "diversity"),
-        f("vec_col", "string", default="embedding"),
-        f("id_col", "string", default="vec_id"),
-        f("query_id_col", "string", default="query_id"),
-        f("broadcast_corpus", "boolean",
-          desc="force/deny broadcasting the corpus in stage 1"),
-    ],
-    "l_diversity": [
-        f("quasi_cols", "array", required=True, items={"type": "string"}),
-        f("sensitive_col", "string", required=True,
-          desc="a class is safe only with >= l DISTINCT values here"),
-        f("l", "integer", default=2),
-        f("mode", "string", default="drop", enum=["drop", "flag"]),
-        f("out_col", "string", default="l_diverse"),
-    ],
-    "k_anonymize": [
-        f("quasi_cols", "array", required=True, items={"type": "string"},
-          desc="quasi-identifier columns; a row is kept when >= k "
-               "rows share its full combination"),
-        f("k", "integer", default=5),
-        f("mode", "string", default="drop", enum=["drop", "flag"]),
-        f("out_col", "string", default="k_anonymous"),
-    ],
-    "k_core": [
-        f("k", "integer", required=True, desc="minimum degree"),
-        f("src", "string", default="src"),
-        f("dst", "string", default="dst"),
-        f("max_rounds", "integer", default=20,
-          desc="peel-round budget; the peel is monotone, so a "
-               "truncated run is still a pure function of the graph"),
-    ],
-    "winsorize": [
-        f("value_col", "string", required=True),
-        f("group_cols", "array", items={"type": "string"}),
-        f("lower", "number", default=0.01),
-        f("upper", "number", default=0.99),
-        f("out_col", "string", desc="default <value_col>_w"),
-        f("quantize", "integer", default=6),
-    ],
-    "mad_outliers": [
-        f("value_col", "string", required=True),
-        f("group_cols", "array", items={"type": "string"}),
-        f("threshold", "number", default=3.5,
-          desc="|modified z-score| beyond which a row is an outlier"),
-        f("broadcast_stats", "boolean",
-          desc="force/forbid broadcasting the per-group stats"),
-    ],
-    "retention_cohorts": [
-        f("user_col", "string", required=True),
-        f("time_col", "string", required=True),
-        f("granularity", "string", default="week",
-          enum=["day", "week", "month"]),
-    ],
-    "markov_transitions": [
-        f("user_col", "string", required=True),
-        f("time_col", "string", required=True),
-        f("event_col", "string", required=True),
-        f("order_cols", "array", items={"type": "string"},
-          desc="extra sort keys for a total, deterministic order"),
-    ],
-    "event_paths": [
-        f("user_col", "string", required=True),
-        f("time_col", "string", required=True),
-        f("event_col", "string", required=True),
-        f("order_cols", "array", items={"type": "string"},
-          desc="extra sort keys for a total, deterministic order"),
-        f("max_len", "integer", default=8,
-          desc="journey cap: first N events per entity"),
-        f("top_k", "integer", default=50),
-    ],
-    "approx_topk": [
-        f("col", "string", required=True),
-        f("k", "integer", default=50),
-        f("capacity", "integer", default=4096,
-          desc="Misra-Gries counters per partition; exact top-k when "
-               "the k-th frequency exceeds n/capacity"),
-    ],
-    "bm25": [
-        f("query", ["array", "string"], items={"type": "string"},
-          required=True,
-          desc="query terms (or one whitespace-separated string)"),
-        f("text_col", "string", default="text"),
-        f("id_col", "string", default="doc_id"),
-        f("k1", "number", default=1.2),
-        f("b", "number", default=0.75),
-        f("top_k", "integer",
-          desc="retrieval mode: return only the best-k documents"),
-        f("lowercase", "boolean", default=True),
-    ],
-    "feature_hash": [
-        f("id_col", "string", required=True),
-        f("text_col", "string", required=True),
-        f("dim", "integer", default=1024,
-          desc="hashed feature dimension; token -> md5(token) mod dim"),
-        f("signed", "boolean", default=True,
-          desc="±1 sign from an independent md5 bit so collisions "
-               "cancel in expectation (Weinberger et al. 2009)"),
-        f("lowercase", "boolean", default=True),
-    ],
-    "pagerank": [
-        f("src", "string", required=True),
-        f("dst", "string", required=True),
-        f("damping", "number", default=0.85),
-        f("iterations", "integer", default=10,
-          desc="fixed power-iteration count (reproducible by design)"),
-        f("undirected", "boolean", default=False,
-          desc="symmetrize edges first (dangling mass becomes zero)"),
-        f("quantize", "integer", default=9,
-          desc="floor-quantize final ranks at this many decimals"),
-        f("weight_col", "string",
-          desc="weighted mode: mass splits proportionally to this "
-               "edge weight; parallel edges combine by sum"),
-    ],
-    "knn_graph": [
-        f("k", "integer", default=10),
-        f("method", "string", default="brute_force",
-          enum=["brute_force", "brute_force_numpy", "lsh"]),
-        f("vec_col", "string", default="embedding"),
-        f("id_col", "string", default="vec_id"),
-        f("dim", "integer", desc="required for method=lsh"),
-        f("num_planes", "integer", default=6),
-        f("num_tables", "integer", default=1),
-        f("seed", "integer", default=42),
-    ],
-    "dsir_weights": [
-        f("text_col", "string", default="text"),
-        f("id_col", "string", default="doc_id"),
-        f("num_buckets", "integer", default=8192,
-          desc="hashed n-gram feature buckets (paper default order)"),
-        f("alpha", "number", default=1.0,
-          desc="additive smoothing over buckets"),
-        f("quantize", "integer", default=6),
-    ],
-    "dsir_select": [
-        f("k", "integer", required=True,
-          desc="documents to select by Gumbel top-k"),
-        f("text_col", "string", default="text"),
-        f("id_col", "string", default="doc_id"),
-        f("num_buckets", "integer", default=8192),
-        f("alpha", "number", default=1.0),
-        f("salt", "string", default="",
-          desc="varies the deterministic Gumbel draw"),
-        f("quantize", "integer", default=6),
-    ],
-    "cusum": [
-        f("key_cols", "array", required=True, items={"type": "string"}),
-        f("order_cols", "array", required=True, items={"type": "string"}),
-        f("value_col", "string", required=True),
-        f("target", "number", required=True,
-          desc="in-control mean (config-supplied: a data-derived mean "
-               "would tie alarms to a float sum's reduction order)"),
-        f("slack", "number", default=0.0,
-          desc="k allowance, half the shift to detect"),
-        f("threshold", "number",
-          desc="alarm when s+ or s- exceeds this (h); omitted = no "
-               "alarm column values"),
-        f("quantize", "integer", default=9),
-    ],
-    "holt_linear": [
-        f("key_cols", "array", required=True, items={"type": "string"}),
-        f("order_cols", "array", required=True, items={"type": "string"},
-          desc="must totally order rows within a key"),
-        f("value_col", "string", required=True),
-        f("alpha", "number", default=0.3, desc="level smoothing, (0,1]"),
-        f("beta", "number", default=0.2, desc="trend smoothing, [0,1]"),
-        f("level_col", "string", default="level"),
-        f("trend_col", "string", default="trend"),
-        f("quantize", "integer", default=9),
-    ],
-    "holt_winters": [
-        f("key_cols", "array", required=True, items={"type": "string"}),
-        f("order_cols", "array", required=True, items={"type": "string"},
-          desc="must totally order rows within a key"),
-        f("value_col", "string", required=True),
-        f("period", "integer", required=True,
-          desc="seasonal cycle length m >= 2"),
-        f("alpha", "number", default=0.3, desc="level smoothing, (0,1]"),
-        f("beta", "number", default=0.1, desc="trend smoothing, [0,1]"),
-        f("gamma", "number", default=0.2, desc="seasonal smoothing, [0,1]"),
-        f("level_col", "string", default="level"),
-        f("trend_col", "string", default="trend"),
-        f("seasonal_col", "string", default="seasonal"),
-        f("quantize", "integer", default=9),
-    ],
-    "theil_sen": [
-        f("key_cols", "array", required=True, items={"type": "string"}),
-        f("time_col", "string", required=True,
-          desc="numeric time axis (convert timestamps upstream)"),
-        f("value_col", "string", required=True),
-        f("time_divisor", "number", default=1.0,
-          desc="slope unit rescale, e.g. 86400e6 for per-day over "
-               "microsecond times"),
-        f("slope_col", "string", default="slope"),
-        f("intercept_col", "string", default="intercept"),
-        f("max_points", "integer", default=10000,
-          desc="per-key observation cap (pairs are quadratic); "
-               "null skips the guard probe"),
-        f("quantize", "integer", default=9),
-    ],
-    "benford_deviation": [
-        f("value_col", "string", required=True),
-        f("group_cols", "array", items={"type": "string"}),
-        f("threshold", "number", default=15.507,
-          desc="chi-square alarm level (default: 0.95 critical value "
-               "at 8 dof); null omits the alarm column"),
-        f("quantize", "integer", default=9),
-    ],
-    "seasonal_decompose": [
-        f("key_cols", "array", required=True, items={"type": "string"}),
-        f("order_cols", "array", required=True, items={"type": "string"},
-          desc="must totally order rows within a key"),
-        f("value_col", "string", required=True),
-        f("period", "integer", required=True,
-          desc="cycle length m >= 2 (2xm centered MA when even)"),
-        f("value_scale", "integer", default=100,
-          desc="fixed-point units — the window sums stay integer"),
-        f("quantize", "integer", default=9),
-    ],
-    "welch_ttest": [
-        f("value_col", "string", required=True),
-        f("group_cols", "array", items={"type": "string"}),
-        f("value_scale", "integer", default=100,
-          desc="fixed-point units per value — moments accumulate "
-               "exactly in DECIMAL(38,0)"),
-        f("t_crit", "number", default=1.959963984540054,
-          desc="|t| bar for the significant flag; null omits it "
-               "(p-values need the incomplete beta — libm-specific)"),
-        f("quantize", "integer", default=9),
-    ],
-    "chi2_independence": [
-        f("col_a", "string", required=True),
-        f("col_b", "string", required=True),
-        f("categories_a", "array", required=True,
-          items={"type": "string"},
-          desc="config category list (the psi_drift fixed-edges "
-               "rule); values outside it are excluded"),
-        f("categories_b", "array", required=True,
-          items={"type": "string"}),
-        f("group_cols", "array", items={"type": "string"}),
-        f("quantize", "integer", default=9),
-    ],
-    "kaplan_meier": [
-        f("key_cols", "array", required=True, items={"type": "string"}),
-        f("duration_col", "string", required=True,
-          desc="numeric time-to-event"),
-        f("event_col", "string", required=True,
-          desc="boolean: true = event observed, false/NULL = "
-               "right-censored"),
-        f("quantize", "integer", default=9),
-    ],
-    "mannwhitney_u": [
-        f("value_col", "string", required=True),
-        f("group_cols", "array", items={"type": "string"}),
-        f("z_crit", "number", default=1.959963984540054,
-          desc="two-sided critical value; null omits the significant "
-               "column (no p-values: erf is libm-specific)"),
-        f("quantize", "integer", default=9),
-    ],
-    "ols_trend": [
-        f("key_cols", "array", required=True, items={"type": "string"}),
-        f("time_col", "string", required=True,
-          desc="numeric time axis (convert timestamps upstream)"),
-        f("value_col", "string", required=True),
-        f("x_offset", "integer", default=0,
-          desc="subtract from times so decimal moments stay inside "
-               "128 bits (center epochs!)"),
-        f("value_scale", "integer", default=100,
-          desc="fixed-point units per value (100 = cents)"),
-        f("time_divisor", "number", default=1.0,
-          desc="slope unit rescale, e.g. 86400e6 for per-day over "
-               "microsecond times"),
-        f("quantize", "integer", default=9),
-    ],
-    "prop_ztest": [
-        f("variant_col", "string", required=True),
-        f("success_col", "string", required=True,
-          desc="boolean; NULL counts as failure"),
-        f("control", "string", required=True),
-        f("treatment", "string", required=True),
-        f("group_cols", "array", items={"type": "string"}),
-        f("z_crit", "number", default=1.959963984540054,
-          desc="two-sided critical value for the significant flag; "
-               "null omits it (p-values deliberately absent: erf is "
-               "libm-specific)"),
-        f("quantize", "integer", default=9),
-    ],
-    "systematic_sample": [
-        f("sort_cols", "array", required=True, items={"type": "string"},
-          desc="must totally order rows (append the id column)"),
-        f("step", "integer", required=True,
-          desc="keep every step-th record of the global order"),
-        f("offset", "integer", default=0, desc="0-based, in [0, step)"),
-        f("rank_col", "string",
-          desc="emit the 1-based global rank under this name"),
-    ],
-    "psi_drift": [
-        f("value_col", "string", required=True),
-        f("edges", "array", required=True, items={"type": "number"},
-          desc="strictly increasing bucket edges (config-supplied "
-               "from a calibration window — the cusum rule)"),
-        f("group_cols", "array", items={"type": "string"}),
-        f("epsilon", "number", default=1e-4,
-          desc="Laplace smoothing so empty buckets never hit ln(0)"),
-        f("threshold", "number", default=0.2,
-          desc="drift alert level (the published 0.2 band); null "
-               "omits the drift column"),
-        f("quantize", "integer", default=6),
     ],
     "record_linkage": [
         f("id_col", "string", required=True),
@@ -1109,84 +463,6 @@ FIELD_SPECS: dict[str, list[dict[str, Any]]] = {
                "oversized blocks (documented recall trade)"),
         f("quantize", "integer", default=6),
     ],
-    "ewma": [
-        f("key_cols", "array", required=True, items={"type": "string"}),
-        f("order_cols", "array", required=True, items={"type": "string"},
-          desc="must totally order rows within a key (add a row id "
-               "to break timestamp ties)"),
-        f("value_col", "string", required=True),
-        f("alpha", "number", default=0.3,
-          desc="smoothing factor in (0, 1]: s = a*x + (1-a)*s"),
-        f("out_col", "string", default="ewma"),
-        f("quantize", "integer", default=9),
-    ],
-    "ks_drift": [
-        f("value_col", "string", required=True),
-        f("group_cols", "array", items={"type": "string"},
-          desc="per-group KS (e.g. per feature/segment)"),
-        f("quantize", "integer", default=6),
-    ],
-    "corpus_divergence": [
-        f("group_col", "string", default="source"),
-        f("text_col", "string", default="text"),
-        f("lowercase", "boolean", default=True),
-        f("quantize", "integer", default=6),
-    ],
-    "temporal_join": [
-        f("on", "array", required=True, items={"type": "string"},
-          desc="version keys"),
-        f("ts_col", "string", required=True,
-          desc="fact event-time column"),
-        f("valid_from_col", "string", default="valid_from"),
-        f("valid_to_col", "string", default="valid_to"),
-        f("how", "string", default="inner", enum=["inner", "left"]),
-    ],
-    "entropy_metrics": [
-        f("text_col", "string", default="text"),
-        f("id_col", "string", default="doc_id"),
-        f("lowercase", "boolean", default=True),
-        f("quantize", "integer", default=6),
-    ],
-    "bpe_tokenize": [
-        f("text_col", "string", default="text"),
-        f("id_col", "string", default="doc_id"),
-        f("num_merges", "integer", default=200,
-          desc="BPE merges to learn (vocab = chars + this)"),
-        f("max_train_words", "integer", default=100000,
-          desc="bounded word-frequency table for training"),
-        f("lowercase", "boolean", default=True),
-        f("emit_tokens", "boolean", default=False,
-          desc="also emit the space-joined subword string"),
-        f("merges", "array", items={"type": "array"},
-          desc="pinned merge table [[left, right], ...] — skips "
-               "training (the frozen-tokenizer shape)"),
-    ],
-    "quality_classifier": [
-        f("text_col", "string", default="text"),
-        f("id_col", "string", default="doc_id"),
-        f("num_buckets", "integer", default=8192),
-        f("alpha", "number", default=1.0),
-        f("quantize", "integer", default=6),
-    ],
-    "quality_gate": [
-        f("text_col", "string", default="text"),
-        f("id_col", "string", default="doc_id"),
-        f("num_buckets", "integer", default=8192),
-        f("alpha", "number", default=1.0),
-        f("pareto_alpha", "number", default=9.0,
-          desc="GPT-3 soft-gate shape: keep iff pareto_draw > 1-score"),
-        f("salt", "string", default=""),
-        f("quantize", "integer", default=6),
-    ],
-    "bfs_distances": [
-        f("src", "string", required=True),
-        f("dst", "string", required=True),
-        f("seed_col", "string", default="node",
-          desc="id column in the seeds input port"),
-        f("max_hops", "integer", default=6),
-        f("directed", "boolean", default=False,
-          desc="follow edges src->dst only"),
-    ],
     "connected_components": [
         f("src", "string", required=True),
         f("dst", "string", required=True),
@@ -1194,137 +470,6 @@ FIELD_SPECS: dict[str, list[dict[str, Any]]] = {
           desc="union-find on the driver below this edge count; "
                "0 forces the distributed large-star/small-star path"),
         f("max_iters", "integer", default=50),
-    ],
-    "personalized_pagerank": [
-        f("src", "string", required=True),
-        f("dst", "string", required=True),
-        f("seed_col", "string", default="node",
-          desc="id column in the seeds input port"),
-        f("damping", "number", default=0.85),
-        f("iterations", "integer", default=10),
-        f("quantize", "integer", default=9),
-        f("directed", "boolean", default=False,
-          desc="TrustRank proper: trust flows only along link "
-               "direction; dangling mass teleports to the seeds"),
-    ],
-    "modularity": [
-        f("src", "string", required=True),
-        f("dst", "string", required=True),
-        f("node_col", "string", default="node",
-          desc="id column in the assignment input port"),
-        f("community_col", "string", default="community"),
-        f("quantize", "integer", default=9),
-    ],
-    "dbscan": [
-        f("x_col", "string", required=True),
-        f("y_col", "string", required=True),
-        f("eps", "number", required=True, desc="neighborhood radius"),
-        f("min_pts", "integer", required=True,
-          desc="core threshold, self included"),
-        f("id_col", "string", default="id"),
-        f("max_cell_size", "integer", default=5000,
-          desc="loud guard against degenerate grid cells"),
-    ],
-    "louvain": [
-        f("src", "string", required=True),
-        f("dst", "string", required=True),
-        f("iterations", "integer", default=4,
-          desc="parity-alternating half-sweeps; use an even count"),
-    ],
-    "louvain_multilevel": [
-        f("src", "string", required=True),
-        f("dst", "string", required=True),
-        f("iterations", "integer", default=4,
-          desc="half-sweeps PER LEVEL; use an even count"),
-        f("levels", "integer", default=2,
-          desc="coarsening depth; every level's fine projection is "
-               "scored with the exact-integer modularity score and "
-               "the best wins (ties to the finest), so more levels "
-               "never lose modularity"),
-    ],
-    "triangle_count": [
-        f("src", "string", required=True),
-        f("dst", "string", required=True),
-    ],
-    "link_predict": [
-        f("src", "string", required=True),
-        f("dst", "string", required=True),
-        f("method", "string", default="resource_allocation",
-          enum=["common_neighbors", "resource_allocation",
-                "adamic_adar"]),
-        f("max_degree", "integer", default=10000,
-          desc="common neighbors above this degree are excluded "
-               "from scoring (the hub fan-out cap)"),
-        f("min_common", "integer", default=1),
-        f("exclude_adjacent", "boolean", default=True,
-          desc="anti-join existing edges away (prediction mode)"),
-        f("weight_scale", "integer", default=12,
-          desc="resource_allocation weight = 10^scale div degree"),
-        f("quantize", "integer", default=9),
-    ],
-    "label_propagation": [
-        f("src", "string", required=True),
-        f("dst", "string", required=True),
-        f("iterations", "integer", default=5,
-          desc="fixed synchronous rounds; ties go to the smallest "
-               "label (deterministic)"),
-    ],
-    "interpolate": [
-        f("key_cols", "array", items={"type": "string"}, required=True),
-        f("time_col", "string", required=True),
-        f("value_col", "string", required=True),
-        f("step", "string", required=True,
-          desc="grid stride: INTERVAL string for timestamps, "
-               "integer for numeric time"),
-        f("method", "string", default="linear", enum=["linear", "ffill"]),
-    ],
-    "negative_sample": [
-        f("id_col", "string", required=True),
-        f("k", "integer", default=5,
-          desc="negatives per anchor (up to k when buckets are "
-               "sparse)"),
-        f("buckets", "integer", default=64,
-          desc="md5 bucket count; the per-bucket rank window is "
-               "bounded by n/buckets — raise with the corpus"),
-        f("salt", "string", default=""),
-    ],
-    "assoc_rules": [
-        f("basket_col", "string", required=True),
-        f("item_col", "string", required=True),
-        f("min_support_count", "integer", default=2,
-          desc="A-priori prune floor: items AND pairs below this "
-               "absolute count drop"),
-        f("max_basket_size", "integer", default=10000,
-          desc="loud guard on post-prune basket fan-out; runs ONE "
-               "eager existence probe (a Spark job over the pruned "
-               "relation) at graph-build time; null skips the probe "
-               "for known-bounded baskets"),
-        f("quantize", "integer", default=9),
-    ],
-    "acf": [
-        f("key_cols", "array", items={"type": "string"}, required=True),
-        f("order_cols", "array", items={"type": "string"}, required=True,
-          desc="must be a TOTAL order within each key (add a unique "
-               "id as tiebreak)"),
-        f("value_col", "string", required=True),
-        f("max_lag", "integer", default=5),
-        f("value_scale", "integer", default=100,
-          desc="y = floor(v*scale + 0.5) integer units for the "
-               "exact decimal moments; n^3*y^2 must fit 38 digits "
-               "(~1e8 points/key at scale 100) — overflow raises at "
-               "execution instead of emitting NULL"),
-        f("quantize", "integer", default=9),
-    ],
-    "ccf": [
-        f("key_cols", "array", items={"type": "string"}, required=True),
-        f("order_cols", "array", items={"type": "string"}, required=True),
-        f("x_col", "string", required=True),
-        f("y_col", "string", required=True),
-        f("max_lag", "integer", default=5,
-          desc="emits row lags -max_lag..+max_lag; positive = x "
-               "leads y"),
-        f("value_scale", "integer", default=100),
-        f("quantize", "integer", default=9),
     ],
     "rolling_aggregate": [
         f("time_col", "string", required=True),
@@ -1340,119 +485,6 @@ FIELD_SPECS: dict[str, list[dict[str, Any]]] = {
         f("out_prefix", "string", default="rolling_"),
         f("allow_global_window", "boolean", default=False),
     ],
-    "url_parts": [
-        f("url_col", "string", required=True),
-        f("prefix", "string", default="url_",
-          desc="output column prefix: scheme/host/domain/path/query"),
-    ],
-    "mix_corpora": [
-        f("key_col", "string", required=True),
-        f("group_col", "string", required=True),
-        f("weights", "object", required=True,
-          desc="group -> mixture weight (whitelist; normalized config-side)"),
-        f("target_tokens", "integer", required=True),
-        f("token_col", "string",
-          desc="pre-computed token counts (default whitespace token_count(text))"),
-        f("text_col", "string", default="text"),
-        f("salt", "string", default="mix"),
-    ],
-    "decontaminate": [
-        f("text_col", "string", default="text"),
-        f("id_col", "string", default="doc_id"),
-        f("bench_text_col", "string",
-          desc="benchmark-side text column (defaults to text_col)"),
-        f("ngram_n", "integer", default=8,
-          desc="token n-gram size for overlap detection"),
-        f("max_matches", "integer", default=0,
-          desc="flag docs with MORE than this many benchmark n-grams"),
-        f("hash_keys", "boolean", default=False,
-          desc="join on xxhash64(ngram) (narrower shuffle, ~2^-64 phantom risk)"),
-    ],
-    "near_dup_clusters": [
-        f("id_a", "string", default="id_a"),
-        f("id_b", "string", default="id_b"),
-        f("max_iters", "integer", default=50, desc="label-propagation round cap"),
-        f("driver_max_edges", "integer", default=1000000,
-          desc="edge count under which CC runs as driver-side union-find (0 = always distributed)"),
-    ],
-    "json_expand": [
-        f("json_col", "string", required=True),
-        f("fields", "array", required=True, items={"type": "object"},
-          desc="[{name, data_type}] top-level JSON keys to expand as typed columns"),
-        f("drop_source", "boolean", default=False),
-    ],
-    "zscore_outliers": [
-        f("value_col", "string", required=True),
-        f("group_cols", "array", items={"type": "string"}),
-        f("threshold", "number", default=3.0, desc="|zscore| above this flags an outlier"),
-    ],
-    "densify_buckets": [
-        f("key_cols", "array", required=True, items={"type": "string"}),
-        f("bucket_col", "string", required=True),
-        f("step", "string", required=True, desc="bucket stride, e.g. 'INTERVAL 1 HOUR'"),
-        f("agg_cols", "object", desc="output name -> 'sum:col' | 'count:*'"),
-        f("fill", "number", default=0.0),
-    ],
-    "stratified_sample": [
-        f("key_col", "string", required=True, desc="deterministic md5-bucket key"),
-        f("strata_col", "string", required=True, desc="stratum column (lang, source, ...)"),
-        f("rates", "object", required=True, desc="stratum value -> keep fraction"),
-        f("default_rate", "number", default=0.0, desc="rate for strata not in 'rates' (incl. NULL)"),
-        f("salt", "string", default=""),
-    ],
-    "cap_per_group": [
-        f("group_cols", "array", required=True, items={"type": "string"}),
-        f("key_col", "string", required=True, desc="hash-order selection key / tie-break within each group"),
-        f("max_rows", "integer", default=1000),
-        f("salt", "string", default=""),
-        f("order_col", "string", desc="rank by this metric instead of hash order (top-N per group)"),
-        f("descending", "boolean", default=True),
-    ],
-    "chunk_documents": [
-        f("text_col", "string", required=True),
-        f("id_col", "string", required=True),
-        f("chunk_tokens", "integer", default=256),
-        f("overlap", "integer", default=32, desc="tokens shared by consecutive chunks"),
-    ],
-    "pack_sequences": [
-        f("key_col", "string", required=True),
-        f("token_count_col", "string", required=True),
-        f("capacity", "integer", required=True, desc="token budget per training sequence"),
-        f("shards", "integer", default=64, desc="independent packing shards (parallelism of the layout sort)"),
-        f("salt", "string", default=""),
-    ],
-    "pivot": [
-        f("group_by", "array", required=True, items={"type": "string"}),
-        f("pivot_col", "string", required=True),
-        f("values", "array", required=True, items={"type": "string"},
-          desc="declared pivot values (no inference scan; bounded schema)"),
-        f("agg", "string", default="count", enum=["count", "sum", "min", "max", "mean"]),
-        f("agg_col", "string", default="*"),
-        f("fill", "number", default=0),
-    ],
-    "unpivot": [
-        f("id_cols", "array", required=True, items={"type": "string"}),
-        f("value_cols", "array", required=True, items={"type": "string"}),
-        f("var_name", "string", default="metric"),
-        f("value_name", "string", default="value"),
-    ],
-    "interval_join": [
-        f("left_lo", "string", required=True),
-        f("left_hi", "string", required=True),
-        f("right_lo", "string", required=True),
-        f("right_hi", "string", required=True),
-        f("bucket_width", "number", required=True, desc="bucketization width; pick near the median interval width"),
-        f("suffix", "string", default="_r", desc="suffix for right columns colliding with left names"),
-    ],
-    "funnel": [
-        f("user_col", "string", required=True),
-        f("ts_col", "string", required=True),
-        f("type_col", "string", required=True),
-        f("steps", "array", required=True, items={"type": "string"},
-          desc="ordered step types; each must occur strictly after the previous"),
-        f("broadcast_stages", "boolean",
-          desc="force/suppress the stage-table broadcast; default: stats-gated"),
-    ],
     "hll_distinct": [
         f("value_col", "string", required=True),
         f("group_cols", "array", items={"type": "string"}),
@@ -1464,17 +496,594 @@ FIELD_SPECS: dict[str, list[dict[str, Any]]] = {
         f("group_cols", "array", items={"type": "string"}),
         f("accuracy", "integer", default=10000, desc="rank error <= 1/accuracy"),
     ],
-    "profile": [
-        f("columns", "array", items={"type": "string"}, desc="default: every column"),
-        f("approx_ndv", "boolean", default=True,
-          desc="HLL NDV in the single stats pass; false = exact count distinct (separate Expand pass)"),
-    ],
 }
 
 # jdbc operators are factory-registered per dialect
 for _d in ("postgresql", "mariadb", "sqlserver"):
     FIELD_SPECS[f"read_{_d}"] = list(_JDBC_READ)
     FIELD_SPECS[f"write_{_d}"] = list(_JDBC_WRITE)
+
+# A bound operator's fields come from its function's signature
+# (``bound_field_specs`` below); this table adds what a signature
+# cannot say: a parameter's description and its enum.
+FIELD_NOTES: dict[str, dict[str, dict[str, Any]]] = {
+    "as_of_join": {
+        "on": {"description": "equi-key"},
+        "strict": {"description": "strictly-before match"},
+    },
+    "salted_join": {
+        "on": {"description": "equi-join keys"},
+        "how": {"enum": ["inner", "left"]},
+        "salt_factor": {"description": "reducers a hot probe key spreads over; build side "
+                                       "replicates this many times"},
+        "collapse_duplicates": {"description": "pre-aggregate IDENTICAL probe rows to one row + "
+                                               "count (map-side combine) and re-expand after "
+                                               "the join — the deterministic spread for hot "
+                                               "keys made of identical tuples, which the "
+                                               "row-hash salt cannot scatter"},
+    },
+    "range_join": {
+        "bucket_width": {"description": "candidate bucket width; pick near the median interval "
+                                        "width"},
+        "how": {"enum": ["inner", "left"]},
+        "broadcast_intervals": {"description": "force/forbid broadcasting the exploded interval "
+                                               "side (absent = stats-gated auto)"},
+    },
+    "random_projection": {
+        "dim": {"description": "input embedding width"},
+        "out_dim": {"description": "projected width (Johnson-Lindenstrauss; keep <=~16)"},
+    },
+    "semdedup": {
+        "threshold": {"description": "within-cluster cosine above this = semantic duplicate"},
+        "num_centroids": {"description": "k-means cells; size ~ corpus/expected_cell at scale"},
+        "kmeans_iters": {"description": "deterministic Lloyd refinement rounds"},
+        "keep": {"description": "survivor policy; far_from_centroid = the SemDeDup paper's "
+                                "keep-the-atypical rule",
+                 "enum": ["min_id", "far_from_centroid"]},
+        "assign_method": {"description": "centroid assignment kernel: expr = bit-stable JVM "
+                                         "fold; numpy = BLAS matmul per Arrow batch (faster at "
+                                         "large k); auto switches to numpy above 32 centroids",
+                          "enum": ["auto", "expr", "numpy"]},
+    },
+    "cosine_near_dup": {
+        "exact": {"description": "full cross product (oracle-checkable) instead of LSH buckets"},
+        "num_tables": {"description": "independent LSH tables unioned for recall"},
+    },
+    "text_analysis": {
+        "metrics": {"description": "subset of (n_chars,n_tokens,n_tokens_bpe,punct_ratio,"
+                                   "stopword_ratio,mean_token_length,quality_score,lang_pred,"
+                                   "lang_pred_ngram,fingerprint,dup_line_frac,"
+                                   "dup_line_char_frac,top_bigram_char_frac,alpha_token_frac,"
+                                   "bullet_line_frac,ellipsis_line_frac,symbol_token_ratio,"
+                                   "gopher_rules_pass)"},
+    },
+    "multimodal_features": {
+        "max_records_per_batch": {"description": "Arrow batch rows (bound blob memory)"},
+    },
+    "png_features": {
+        "on_error": {"description": "null records the failure message per row instead of failing",
+                     "enum": ["raise", "null"]},
+        "max_records_per_batch": {"description": "Arrow batch rows (bound blob memory)"},
+    },
+    "image_phash": {
+        "grid": {"description": "cell lattice size; hash is grid^2 bits"},
+        "on_error": {"enum": ["raise", "null"]},
+    },
+    "wav_features": {
+        "on_error": {"description": "null records the failure message per row; only 16-bit PCM "
+                                    "RIFF/WAVE is decodable (loud otherwise)",
+                     "enum": ["raise", "null"]},
+    },
+    "gif_frames": {
+        "every_n": {"description": "sample every n-th animation frame"},
+        "max_frames": {"description": "cap sampled frames per clip (default unlimited)"},
+        "with_phash": {"description": "also emit each sampled frame's aHash fingerprint (the "
+                                      "image_phash kernel on the frame rectangle)"},
+        "grid": {"description": "phash cell lattice; frames smaller than grid carry NULL phash"},
+        "on_error": {"enum": ["raise", "null"]},
+    },
+    "audio_fingerprint": {
+        "bands": {"description": "energy windows = fingerprint bits (2..1024); bit w is 1 iff "
+                                 "bands*E_w > E_total over the decoded PCM"},
+        "on_error": {"enum": ["raise", "null"]},
+    },
+    "hamming_near_dup_pairs": {
+        "fp_col": {"description": "precomputed bit-string fingerprint column (image_phash "
+                                  "output, an external simhash, ...)"},
+        "max_hamming": {"description": "pair budget; fingerprints split into max_hamming+1 "
+                                       "pigeonhole bands (banded equi-join, never all-pairs)"},
+        "bits": {"description": "fingerprint length in bits (1..1024); NULL rows drop, "
+                                "malformed fingerprints raise at execution"},
+        "max_band_freq": {"description": "drop hotter-than-cap band keys (mass-identical "
+                                         "content), as in minhash_candidates"},
+    },
+    "strip_duplicate_spans": {
+        "span_tokens": {"description": "minimum duplicated-span length in tokens (Lee et al. "
+                                       "use 50)"},
+        "min_count": {"description": "corpus occurrence threshold for a span to count as "
+                                     "duplicated"},
+    },
+    "kmeans_cluster": {
+        "k": {"description": "number of clusters"},
+        "iterations": {"description": "deterministic Lloyd rounds (0 = seeded assignment, the "
+                                      "SQL-certifiable shape)"},
+        "emit_similarity": {"description": "include cosine to the assigned centroid"},
+    },
+    "containment_pairs": {
+        "threshold": {"description": "|A∩B|/|A| floor — asymmetric (Broder containment)"},
+        "max_shingle_freq": {"description": "drop shingles in more docs than this before the "
+                                            "join (fan-out cap; containment then only "
+                                            "undercounts)"},
+    },
+    "substring_dup_spans": {
+        "span_tokens": {"description": "k-gram length (Lee et al. use 50 tokens)"},
+        "min_docs": {"description": "distinct-document threshold for a gram to count as "
+                                    "cross-document duplicated"},
+        "max_doc_freq": {"description": "optionally EXCLUDE grams in more than this many docs "
+                                        "(stopword/boilerplate trade; default no cap)"},
+    },
+    "substring_dedup": {
+        "span_tokens": {"description": "k-gram length (Lee et al. use 50 tokens)"},
+        "keep_one": {"description": "preserve each duplicated gram's canonical (smallest doc, "
+                                    "start) occurrence — the paper's remove-all-but-one"},
+        "max_doc_freq": {"description": "optionally EXCLUDE grams in more than this many docs"},
+    },
+    "quantile_filter": {
+        "q": {"description": "quantile threshold in [0,1]"},
+        "keep": {"enum": ["top", "bottom"]},
+        "exact": {"description": "exact interpolated percentile (sort-shaped) vs GK sketch"},
+        "accuracy": {"description": "approx_percentile accuracy (exact=false)"},
+    },
+    "shuffle_rows": {
+        "key_col": {"description": "unique row key the permutation hashes"},
+        "salt": {"description": "epoch seed — new salt = new deterministic permutation"},
+        "n_buckets": {"description": "parallel rank groups; offsets collect is one row per "
+                                     "bucket"},
+    },
+    "weighted_sample": {
+        "weight_col": {"description": "per-row keep probability = min(1, weight * scale); "
+                                      "NULL/negative drops"},
+    },
+    "take_tokens_per_group": {
+        "token_col": {"description": "pre-computed token counts (default whitespace "
+                                     "token_count(text))"},
+        "order_col": {"description": "best-first prefix by this metric (default: hash order)"},
+    },
+    "line_dedup": {
+        "delimiter": {"description": "line-split regex (Java regex)"},
+        "join_sep": {"description": "literal separator for the rewritten text"},
+        "max_doc_frac": {"description": "drop lines in > this FRACTION of docs (broadcast "
+                                        "narrow rewrite; exactly one of the two thresholds)"},
+        "max_doc_freq": {"description": "drop lines in > this many docs ABSOLUTE (anti-join "
+                                        "path)"},
+        "normalize": {"description": "compare lines lowercased+trimmed (output keeps original "
+                                     "bytes)"},
+    },
+    "lm_score": {
+        "discount": {"description": "absolute-discount D in [0,1) (Ney et al. interpolated "
+                                    "smoothing)"},
+    },
+    "pii_scan": {
+        "kinds": {"description": "subset of email/credit_card/ssn/ipv4/phone (default all)"},
+        "redact": {"description": "additionally emit placeholder-substituted text"},
+        "redacted_col": {"description": "output column for redacted text (default "
+                                        "<text_col>_redacted)"},
+    },
+    "corpus_overlap": {
+        "group_col": {"description": "corpus slice key (source, lang, crawl snapshot)"},
+    },
+    "collocations": {
+        "min_count": {"description": "minimum bigram corpus count"},
+        "top_k": {"description": "pairs returned, by lift"},
+    },
+    "histogram": {
+        "lo": {"description": "lower bound; omitted = data min"},
+        "hi": {"description": "upper bound; omitted = data max"},
+    },
+    "diff_datasets": {
+        "compare_cols": {"description": "columns compared null-safely; default: shared non-keys"},
+    },
+    "scd2_merge": {
+        "tracked_cols": {"description": "attributes whose change opens a new version"},
+    },
+    "bloom_membership": {
+        "keys_col": {"description": "key column on the keys port (defaults to key_col)"},
+        "m_bits": {"description": "filter positions; size >= ~10*n*k for ~1% FP"},
+        "k": {"description": "hash functions"},
+        "mode": {"enum": ["flag", "drop", "keep"]},
+    },
+    "zorder_key": {
+        "cols": {"description": "1-4 layout columns whose bucket bits interleave"},
+        "method": {"description": "range = min-max grid (deterministic); quantile = approx-CDF "
+                                  "buckets for skewed dimensions",
+                   "enum": ["range", "quantile"]},
+        "partitions": {"description": "when set: range-partition + sort on the z-value (the "
+                                      "clustered-write layout)"},
+    },
+    "cdc_apply": {
+        "seq_col": {"description": "per-key change order (LSN / binlog offset / commit ts)"},
+        "value_cols": {"description": "full-row-image columns taken from the change; defaults "
+                                      "to non-key snapshot columns present in both"},
+        "delete_ops": {"description": "op codes meaning delete (default ['D']); every other op "
+                                      "upserts"},
+    },
+    "mmr_rerank": {
+        "k": {"description": "picks per query"},
+        "fetch_n": {"description": "ANN shortlist size the greedy pass runs over"},
+        "lambda_": {"description": "relevance weight: 1 = pure relevance, 0 = pure diversity"},
+        "broadcast_corpus": {"description": "force/deny broadcasting the corpus in stage 1"},
+    },
+    "l_diversity": {
+        "sensitive_col": {"description": "a class is safe only with >= l DISTINCT values here"},
+        "mode": {"enum": ["drop", "flag"]},
+    },
+    "k_anonymize": {
+        "quasi_cols": {"description": "quasi-identifier columns; a row is kept when >= k rows "
+                                      "share its full combination"},
+        "mode": {"enum": ["drop", "flag"]},
+    },
+    "k_core": {
+        "k": {"description": "minimum degree"},
+        "max_rounds": {"description": "peel-round budget; the peel is monotone, so a truncated "
+                                      "run is still a pure function of the graph"},
+    },
+    "winsorize": {
+        "out_col": {"description": "default <value_col>_w"},
+    },
+    "mad_outliers": {
+        "threshold": {"description": "|modified z-score| beyond which a row is an outlier"},
+        "broadcast_stats": {"description": "force/forbid broadcasting the per-group stats"},
+    },
+    "retention_cohorts": {
+        "granularity": {"enum": ["day", "week", "month"]},
+    },
+    "markov_transitions": {
+        "order_cols": {"description": "extra sort keys for a total, deterministic order"},
+    },
+    "event_paths": {
+        "order_cols": {"description": "extra sort keys for a total, deterministic order"},
+        "max_len": {"description": "journey cap: first N events per entity"},
+    },
+    "approx_topk": {
+        "capacity": {"description": "Misra-Gries counters per partition; exact top-k when the "
+                                    "k-th frequency exceeds n/capacity"},
+    },
+    "bm25": {
+        "query": {"description": "query terms (or one whitespace-separated string)"},
+        "top_k": {"description": "retrieval mode: return only the best-k documents"},
+    },
+    "feature_hash": {
+        "dim": {"description": "hashed feature dimension; token -> md5(token) mod dim"},
+        "signed": {"description": "±1 sign from an independent md5 bit so collisions cancel in "
+                                  "expectation (Weinberger et al. 2009)"},
+    },
+    "pagerank": {
+        "iterations": {"description": "fixed power-iteration count (reproducible by design)"},
+        "undirected": {"description": "symmetrize edges first (dangling mass becomes zero)"},
+        "quantize": {"description": "floor-quantize final ranks at this many decimals"},
+        "weight_col": {"description": "weighted mode: mass splits proportionally to this edge "
+                                      "weight; parallel edges combine by sum"},
+    },
+    "knn_graph": {
+        "method": {"enum": ["brute_force", "brute_force_numpy", "lsh"]},
+        "dim": {"description": "required for method=lsh"},
+    },
+    "dsir_weights": {
+        "num_buckets": {"description": "hashed n-gram feature buckets (paper default order)"},
+        "alpha": {"description": "additive smoothing over buckets"},
+    },
+    "dsir_select": {
+        "k": {"description": "documents to select by Gumbel top-k"},
+        "salt": {"description": "varies the deterministic Gumbel draw"},
+    },
+    "cusum": {
+        "target": {"description": "in-control mean (config-supplied: a data-derived mean would "
+                                  "tie alarms to a float sum's reduction order)"},
+        "slack": {"description": "k allowance, half the shift to detect"},
+        "threshold": {"description": "alarm when s+ or s- exceeds this (h); omitted = no alarm "
+                                     "column values"},
+    },
+    "holt_linear": {
+        "order_cols": {"description": "must totally order rows within a key"},
+        "alpha": {"description": "level smoothing, (0,1]"},
+        "beta": {"description": "trend smoothing, [0,1]"},
+    },
+    "holt_winters": {
+        "order_cols": {"description": "must totally order rows within a key"},
+        "period": {"description": "seasonal cycle length m >= 2"},
+        "alpha": {"description": "level smoothing, (0,1]"},
+        "beta": {"description": "trend smoothing, [0,1]"},
+        "gamma": {"description": "seasonal smoothing, [0,1]"},
+    },
+    "theil_sen": {
+        "time_col": {"description": "numeric time axis (convert timestamps upstream)"},
+        "time_divisor": {"description": "slope unit rescale, e.g. 86400e6 for per-day over "
+                                        "microsecond times"},
+        "max_points": {"description": "per-key observation cap (pairs are quadratic); null "
+                                      "skips the guard probe"},
+    },
+    "benford_deviation": {
+        "threshold": {"description": "chi-square alarm level (default: 0.95 critical value at 8 "
+                                     "dof); null omits the alarm column"},
+    },
+    "seasonal_decompose": {
+        "order_cols": {"description": "must totally order rows within a key"},
+        "period": {"description": "cycle length m >= 2 (2xm centered MA when even)"},
+        "value_scale": {"description": "fixed-point units — the window sums stay integer"},
+    },
+    "welch_ttest": {
+        "value_scale": {"description": "fixed-point units per value — moments accumulate "
+                                       "exactly in DECIMAL(38,0)"},
+        "t_crit": {"description": "|t| bar for the significant flag; null omits it (p-values "
+                                  "need the incomplete beta — libm-specific)"},
+    },
+    "chi2_independence": {
+        "categories_a": {"description": "config category list (the psi_drift fixed-edges rule); "
+                                        "values outside it are excluded"},
+    },
+    "kaplan_meier": {
+        "duration_col": {"description": "numeric time-to-event"},
+        "event_col": {"description": "boolean: true = event observed, false/NULL = "
+                                     "right-censored"},
+    },
+    "mannwhitney_u": {
+        "z_crit": {"description": "two-sided critical value; null omits the significant column "
+                                  "(no p-values: erf is libm-specific)"},
+    },
+    "ols_trend": {
+        "time_col": {"description": "numeric time axis (convert timestamps upstream)"},
+        "x_offset": {"description": "subtract from times so decimal moments stay inside 128 "
+                                    "bits (center epochs!)"},
+        "value_scale": {"description": "fixed-point units per value (100 = cents)"},
+        "time_divisor": {"description": "slope unit rescale, e.g. 86400e6 for per-day over "
+                                        "microsecond times"},
+    },
+    "prop_ztest": {
+        "success_col": {"description": "boolean; NULL counts as failure"},
+        "z_crit": {"description": "two-sided critical value for the significant flag; null "
+                                  "omits it (p-values deliberately absent: erf is libm-specific)"},
+    },
+    "systematic_sample": {
+        "sort_cols": {"description": "must totally order rows (append the id column)"},
+        "step": {"description": "keep every step-th record of the global order"},
+        "offset": {"description": "0-based, in [0, step)"},
+        "rank_col": {"description": "emit the 1-based global rank under this name"},
+    },
+    "psi_drift": {
+        "edges": {"description": "strictly increasing bucket edges (config-supplied from a "
+                                 "calibration window — the cusum rule)"},
+        "epsilon": {"description": "Laplace smoothing so empty buckets never hit ln(0)"},
+        "threshold": {"description": "drift alert level (the published 0.2 band); null omits "
+                                     "the drift column"},
+    },
+    "ewma": {
+        "order_cols": {"description": "must totally order rows within a key (add a row id to "
+                                      "break timestamp ties)"},
+        "alpha": {"description": "smoothing factor in (0, 1]: s = a*x + (1-a)*s"},
+    },
+    "ks_drift": {
+        "group_cols": {"description": "per-group KS (e.g. per feature/segment)"},
+    },
+    "temporal_join": {
+        "on": {"description": "version keys"},
+        "ts_col": {"description": "fact event-time column"},
+        "how": {"enum": ["inner", "left"]},
+    },
+    "bpe_tokenize": {
+        "num_merges": {"description": "BPE merges to learn (vocab = chars + this)"},
+        "max_train_words": {"description": "bounded word-frequency table for training"},
+        "emit_tokens": {"description": "also emit the space-joined subword string"},
+        "merges": {"description": "pinned merge table [[left, right], ...] — skips training "
+                                  "(the frozen-tokenizer shape)"},
+    },
+    "quality_gate": {
+        "pareto_alpha": {"description": "GPT-3 soft-gate shape: keep iff pareto_draw > 1-score"},
+    },
+    "bfs_distances": {
+        "seed_col": {"description": "id column in the seeds input port"},
+        "directed": {"description": "follow edges src->dst only"},
+    },
+    "personalized_pagerank": {
+        "seed_col": {"description": "id column in the seeds input port"},
+        "directed": {"description": "TrustRank proper: trust flows only along link direction; "
+                                    "dangling mass teleports to the seeds"},
+    },
+    "modularity": {
+        "node_col": {"description": "id column in the assignment input port"},
+    },
+    "dbscan": {
+        "eps": {"description": "neighborhood radius"},
+        "min_pts": {"description": "core threshold, self included"},
+        "max_cell_size": {"description": "loud guard against degenerate grid cells"},
+    },
+    "louvain": {
+        "iterations": {"description": "parity-alternating half-sweeps; use an even count"},
+    },
+    "louvain_multilevel": {
+        "iterations": {"description": "half-sweeps PER LEVEL; use an even count"},
+        "levels": {"description": "coarsening depth; every level's fine projection is scored "
+                                  "with the exact-integer modularity score and the best wins "
+                                  "(ties to the finest), so more levels never lose modularity"},
+    },
+    "link_predict": {
+        "method": {"enum": ["common_neighbors", "resource_allocation", "adamic_adar"]},
+        "max_degree": {"description": "common neighbors above this degree are excluded from "
+                                      "scoring (the hub fan-out cap)"},
+        "exclude_adjacent": {"description": "anti-join existing edges away (prediction mode)"},
+        "weight_scale": {"description": "resource_allocation weight = 10^scale div degree"},
+    },
+    "label_propagation": {
+        "iterations": {"description": "fixed synchronous rounds; ties go to the smallest label "
+                                      "(deterministic)"},
+    },
+    "interpolate": {
+        "step": {"description": "grid stride: INTERVAL string for timestamps, integer for "
+                                "numeric time"},
+        "method": {"enum": ["linear", "ffill"]},
+    },
+    "negative_sample": {
+        "k": {"description": "negatives per anchor (up to k when buckets are sparse)"},
+        "buckets": {"description": "md5 bucket count; the per-bucket rank window is bounded by "
+                                   "n/buckets — raise with the corpus"},
+    },
+    "assoc_rules": {
+        "min_support_count": {"description": "A-priori prune floor: items AND pairs below this "
+                                             "absolute count drop"},
+        "max_basket_size": {"description": "loud guard on post-prune basket fan-out; runs ONE "
+                                           "eager existence probe (a Spark job over the pruned "
+                                           "relation) at graph-build time; null skips the probe "
+                                           "for known-bounded baskets"},
+    },
+    "acf": {
+        "order_cols": {"description": "must be a TOTAL order within each key (add a unique id "
+                                      "as tiebreak)"},
+        "value_scale": {"description": "y = floor(v*scale + 0.5) integer units for the exact "
+                                       "decimal moments; n^3*y^2 must fit 38 digits (~1e8 "
+                                       "points/key at scale 100) — overflow raises at execution "
+                                       "instead of emitting NULL"},
+    },
+    "ccf": {
+        "max_lag": {"description": "emits row lags -max_lag..+max_lag; positive = x leads y"},
+    },
+    "url_parts": {
+        "prefix": {"description": "output column prefix: scheme/host/domain/path/query"},
+    },
+    "mix_corpora": {
+        "weights": {"description": "group -> mixture weight (whitelist; normalized config-side)"},
+        "token_col": {"description": "pre-computed token counts (default whitespace "
+                                     "token_count(text))"},
+    },
+    "decontaminate": {
+        "bench_text_col": {"description": "benchmark-side text column (defaults to text_col)"},
+        "ngram_n": {"description": "token n-gram size for overlap detection"},
+        "max_matches": {"description": "flag docs with MORE than this many benchmark n-grams"},
+        "hash_keys": {"description": "join on xxhash64(ngram) (narrower shuffle, ~2^-64 phantom "
+                                     "risk)"},
+    },
+    "near_dup_clusters": {
+        "max_iters": {"description": "label-propagation round cap"},
+        "driver_max_edges": {"description": "edge count under which CC runs as driver-side "
+                                            "union-find (0 = always distributed)"},
+    },
+    "json_expand": {
+        "fields": {"description": "[{name, data_type}] top-level JSON keys to expand as typed "
+                                  "columns"},
+    },
+    "zscore_outliers": {
+        "threshold": {"description": "|zscore| above this flags an outlier"},
+    },
+    "densify_buckets": {
+        "step": {"description": "bucket stride, e.g. 'INTERVAL 1 HOUR'"},
+        "agg_cols": {"description": "output name -> 'sum:col' | 'count:*'"},
+    },
+    "stratified_sample": {
+        "key_col": {"description": "deterministic md5-bucket key"},
+        "strata_col": {"description": "stratum column (lang, source, ...)"},
+        "rates": {"description": "stratum value -> keep fraction"},
+        "default_rate": {"description": "rate for strata not in 'rates' (incl. NULL)"},
+    },
+    "cap_per_group": {
+        "key_col": {"description": "hash-order selection key / tie-break within each group"},
+        "order_col": {"description": "rank by this metric instead of hash order (top-N per "
+                                     "group)"},
+    },
+    "chunk_documents": {
+        "overlap": {"description": "tokens shared by consecutive chunks"},
+    },
+    "pack_sequences": {
+        "capacity": {"description": "token budget per training sequence"},
+        "shards": {"description": "independent packing shards (parallelism of the layout sort)"},
+    },
+    "pivot": {
+        "values": {"description": "declared pivot values (no inference scan; bounded schema)"},
+        "agg": {"enum": ["count", "sum", "min", "max", "mean"]},
+    },
+    "interval_join": {
+        "bucket_width": {"description": "bucketization width; pick near the median interval "
+                                        "width"},
+        "suffix": {"description": "suffix for right columns colliding with left names"},
+    },
+    "funnel": {
+        "steps": {"description": "ordered step types; each must occur strictly after the "
+                                 "previous"},
+        "broadcast_stages": {"description": "force/suppress the stage-table broadcast; default: "
+                                            "stats-gated"},
+    },
+    "profile": {
+        "columns": {"description": "default: every column"},
+        "approx_ndv": {"description": "HLL NDV in the single stats pass; false = exact count "
+                                      "distinct (separate Expand pass)"},
+    },
+}
+
+_JSON_TYPES = {
+    int: "integer", float: "number", bool: "boolean", str: "string",
+    list: "array", tuple: "array", dict: "object",
+}
+
+
+def _json_type(hint: Any, where: str) -> tuple[str | list[str], dict[str, Any] | None]:
+    """(JSON type, ``items`` or None) of a parameter annotation. ``X |
+    None`` is ``X``; any other union lists its members' types in order,
+    without ``Column`` and without ``int`` beside ``float``."""
+    members = get_args(hint) if get_origin(hint) in (Union, types.UnionType) else (hint,)
+    members = [m for m in members if m not in (Column, type(None))]
+    members = [m for m in members if not (m is int and float in members)]
+    bases = [get_origin(m) or m for m in members]
+    if not bases or not all(b in _JSON_TYPES for b in bases):
+        raise TypeError(f"{where}: annotation {hint!r} maps to no JSON type")
+    jtypes = [_JSON_TYPES[b] for b in bases]
+    items = None
+    for member, base in zip(members, bases):
+        if base in (list, tuple) and get_args(member):
+            items = {"type": _json_type(get_args(member)[0], where)[0]}
+    return (jtypes[0] if len(jtypes) == 1 else jtypes), items
+
+
+def _signature_fields(
+    cls: type[BoundOperator], notes: dict[str, dict[str, Any]]
+) -> list[dict[str, Any]]:
+    name = cls.registry_name
+    unknown = set(notes) - {param for param, *_ in cls.params}
+    if unknown:
+        raise TypeError(f"field notes of {name} name no parameters {sorted(unknown)}")
+    hints = get_type_hints(cls.function)
+    fields = []
+    for param, default, _, _ in cls.params:
+        note = notes.get(param, {})
+        if not set(note) <= {"description", "enum"}:
+            raise TypeError(f"field note {name}.{param} may hold only description and enum")
+        jtype, items = _json_type(hints.get(param), f"{name}.{param}")
+        required = param in cls.required
+        if isinstance(default, tuple):
+            default = list(default)
+        fields.append(f(
+            param, jtype, required=required, default=None if required else default,
+            desc=note.get("description", ""), enum=note.get("enum"), items=items,
+        ))
+    return fields
+
+
+def bound_field_specs(
+    notes: dict[str, dict[str, dict[str, Any]]],
+) -> dict[str, list[dict[str, Any]]]:
+    """The field specs of every bound operator, from its function's
+    signature: its config parameters in order, typed by annotation,
+    required as the binding requires them, and defaulted as the
+    signature defaults them (a required key shows no default).
+    ``notes[operator][parameter]`` adds a description and an enum; a
+    note naming anything else raises ``TypeError``."""
+    bound = [n for n in operator_names() if issubclass(get_operator(n), BoundOperator)]
+    unknown = set(notes) - set(bound)
+    if unknown:
+        raise TypeError(f"field notes name no bound operators {sorted(unknown)}")
+    return {n: _signature_fields(get_operator(n), notes.get(n, {})) for n in bound}
+
+
+for _name, _fields in bound_field_specs(FIELD_NOTES).items():
+    if _name in FIELD_SPECS:
+        raise TypeError(f"{_name} is a bound operator: its fields come from its signature")
+    FIELD_SPECS[_name] = _fields
 
 VIEWS = ("form", "full", "hidden")
 

@@ -10,7 +10,8 @@ import math
 import os
 import sys
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 
 def normalize(rows, colnames):
@@ -40,6 +41,9 @@ def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.001"
     only = set(sys.argv[2:])
 
+    sf_dir = os.path.abspath(sf_dir)
+    # Spark's Python workers import etl_core_spark from the working directory
+    os.chdir(ROOT)
     spark = get_spark(app_name="check_oracles")
     con = duckdb.connect()
     for name in (

@@ -14,7 +14,8 @@ from __future__ import annotations
 import os
 import sys
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 # DuckDB type -> acceptable Spark simpleStrings (EXACT matches — a
 # prefix test would wave 'interval day to second' through as 'int').
@@ -47,6 +48,9 @@ def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.001"
     only = set(sys.argv[2:])
 
+    sf_dir = os.path.abspath(sf_dir)
+    # Spark's Python workers import etl_core_spark from the working directory
+    os.chdir(ROOT)
     spark = get_spark(app_name="check_types")
     con = duckdb.connect()
     for name in (

@@ -26,6 +26,9 @@ def main() -> int:
     os.makedirs(outdir, exist_ok=True)
 
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    sf_dir = os.path.abspath(sf_dir)
+    # Spark's Python workers import etl_core_spark from the working directory
+    os.chdir(REPO)
     spark = get_spark(app_name="dump_plans")
 
     n = 0

@@ -26,7 +26,8 @@ from __future__ import annotations
 import os
 import sys
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 
 def build_scaled_documents(spark, src_dir: str, k: int):
@@ -96,6 +97,9 @@ def main() -> None:
 
     from etl_core_spark.session import get_spark
 
+    src, out = os.path.abspath(src), os.path.abspath(out)
+    # Spark's Python workers import etl_core_spark from the working directory
+    os.chdir(ROOT)
     spark = get_spark(app_name="gen_scaled")
     scaled = build_scaled_documents(spark, src, k)
     path = os.path.join(out, "documents.parquet")

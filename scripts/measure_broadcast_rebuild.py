@@ -30,7 +30,8 @@ import os
 import sys
 import time
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 
 def main() -> int:
@@ -46,6 +47,8 @@ def main() -> int:
     from etl_core_spark.operators.graph import pagerank
     from etl_core_spark.session import get_spark, release_intermediates
 
+    # Spark's Python workers import etl_core_spark from the working directory
+    os.chdir(ROOT)
     spark = get_spark(app_name=f"bc_rebuild_{mode}")
     spark.range(1_000_000).selectExpr("sum(id)").collect()  # warm-up
 

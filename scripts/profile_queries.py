@@ -16,7 +16,8 @@ import os
 import sys
 import time
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 EVLOG_DIR = "/tmp/spark-events"
 
@@ -27,6 +28,9 @@ def main() -> int:
     from etl_core_spark.session import get_spark, release_intermediates
 
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    sf_dir = os.path.abspath(sf_dir)
+    # Spark's Python workers import etl_core_spark from the working directory
+    os.chdir(ROOT)
     spark = get_spark(
         app_name="profile_queries",
         extra_conf={

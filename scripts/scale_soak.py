@@ -20,12 +20,13 @@ import os
 import sys
 import time
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 SF_DIR = "/root/testdata/sf0.1"
 # NOTE: the scaled copies are cached by PATH, not by K — point this
 # env var at a fresh directory when changing the factor
-SCALED = os.environ.get("SPARK_GRAFT_SCALED_DIR", "/tmp/spark_graft_scaled")
+SCALED = os.path.abspath(os.environ.get("SPARK_GRAFT_SCALED_DIR", "/tmp/spark_graft_scaled"))
 
 
 def families(docs, spark):
@@ -586,6 +587,8 @@ def main() -> None:
     from etl_core_spark.session import get_spark
     from etl_core_spark.tables import load_table
 
+    # Spark's Python workers import etl_core_spark from the working directory
+    os.chdir(ROOT)
     spark = get_spark(app_name="scale_soak")
     spark.range(1_000_000).selectExpr("sum(id)").collect()  # warm-up
 

@@ -482,9 +482,9 @@ def test_cc_separate_components(spark):
 
 
 def test_cc_long_chain_exercises_checkpoint_path(spark):
-    # diameter 19 > checkpoint_every -> several localCheckpoint cuts
+    # distributed path: every round localCheckpoints its edge frontier
     edges = [(i, i + 1) for i in range(20)]
-    got = _cc(spark, edges, checkpoint_every=3, driver_max_edges=0)
+    got = _cc(spark, edges, driver_max_edges=0)
     assert got == {i: 0 for i in range(21)}
 
 
@@ -522,8 +522,7 @@ def test_cc_deep_chain_converges_in_log_rounds(spark):
     cap of 50). Large-star/small-star converges in O(log n): the same
     chain must finish within 8 rounds."""
     edges = [(i, i + 1) for i in range(60)]
-    got = _cc(spark, edges, max_iters=8, checkpoint_every=4,
-              driver_max_edges=0)
+    got = _cc(spark, edges, max_iters=8, driver_max_edges=0)
     assert got == {i: 0 for i in range(61)}
 
 
