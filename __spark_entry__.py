@@ -4410,7 +4410,10 @@ def q_multimodal_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = get_operator("multimodal_features")(feature_dim=8).apply(
         {"in": media}
     )["out"]
-    return out.select("media_id", "n_bytes", "sha256")
+    return out.select(
+        "media_id", "n_bytes", "sha256",
+        *[out.feature[i].alias(f"feature_{i}") for i in range(8)],
+    )
 
 
 def q_png_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -5024,7 +5027,9 @@ SELECT src AS id, MIN(dst) AS cluster_id FROM reach GROUP BY src
 
 
 # payload_bytes=256 over a 64-char hex seed -> exactly 4 repeats;
-# the UDF hashes the raw payload BYTES, DuckDB the identical ASCII text
+# the UDF hashes the raw payload BYTES, DuckDB the identical ASCII text.
+# feature[i] is digest byte i / 255 as a float: byte i is hex digits
+# 2i+1..2i+2 of DuckDB's sha256
 _SQL_MULTIMODAL = """
 WITH m AS (
   SELECT CAST(i AS BIGINT) AS media_id,
@@ -5033,7 +5038,12 @@ WITH m AS (
 )
 SELECT media_id,
        CAST(length(payload) AS BIGINT) AS n_bytes,
-       sha256(payload) AS sha256
+       sha256(payload) AS sha256,
+""" + ",\n".join(
+    f"       CAST(CAST('0x' || substr(sha256(payload), {2 * i + 1}, 2) AS INTEGER)"
+    f" / 255.0 AS FLOAT) AS feature_{i}"
+    for i in range(8)
+) + """
 FROM m
 """
 

@@ -39,6 +39,8 @@ from pyspark.sql import Column
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from etl_core_spark.functions.literals import isin
+
 TRUE_STRINGS = ("true", "t", "1", "yes", "y")
 FALSE_STRINGS = ("false", "f", "0", "no", "n")
 NULL_STRINGS = ("", "na", "nan", "null", "none")
@@ -87,7 +89,7 @@ def _normalized_string(col: Column) -> Column:
 
 
 def _null_marker(col: Column) -> Column:
-    return _normalized_string(col).isin(*NULL_STRINGS)
+    return isin(_normalized_string(col), NULL_STRINGS)
 
 
 def _integral_double_to_long(d: Column) -> Column:
@@ -130,11 +132,11 @@ def _convert_stages(col, source_type, target):
                 # s is the normalized string; NULL iff the source was
                 return (
                     F.when(
-                        s.isNull() | s.isin(*NULL_STRINGS),
+                        s.isNull() | isin(s, NULL_STRINGS),
                         F.lit(None).cast("boolean"),
                     )
-                    .when(s.isin(*TRUE_STRINGS), F.lit(True))
-                    .when(s.isin(*FALSE_STRINGS), F.lit(False))
+                    .when(isin(s, TRUE_STRINGS), F.lit(True))
+                    .when(isin(s, FALSE_STRINGS), F.lit(False))
                     .otherwise(F.lit(None).cast("boolean"))
                 )
 

@@ -26,6 +26,8 @@ from typing import Any, Sequence, Union
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
+from etl_core_spark.functions.literals import isin
+
 COMPARISON_OPERATORS = ("==", "!=", ">", "<", ">=", "<=", "contains")
 LOGICAL_OPERATORS = ("AND", "OR", "NOT")
 
@@ -101,14 +103,14 @@ def compile_rule(rule: Rule) -> Column:
     if op == "==":
         if isinstance(value, (list, tuple, set)):
             # list value ⇒ membership (reference filter_helper.py:72-73)
-            return col.isin(list(value))
+            return isin(col, value)
         if value is None:
             return col.isNull()
         return col == F.lit(value)
     if op == "!=":
         # pandas semantics: NaN != v is True, so nulls pass a != rule
         if isinstance(value, (list, tuple, set)):
-            return ~col.isin(list(value)) | col.isNull()
+            return ~isin(col, value) | col.isNull()
         if value is None:
             return col.isNotNull()
         return (col != F.lit(value)) | col.isNull()

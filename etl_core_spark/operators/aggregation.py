@@ -30,6 +30,7 @@ from typing import Any, Callable
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from etl_core_spark.operators.base import Operator, OperatorConfigError, PortMap, register_operator
 
@@ -57,6 +58,25 @@ _AGG_FUNCS: dict[str, Callable[[str], Column]] = {
     # certified only on tie-free columns (documented)
     "collect_set": lambda src: F.array_sort(F.collect_set(src)),
 }
+
+
+def _names_fields(schema: T.StructType, path: str) -> bool:
+    """True when each dot-separated part of ``path`` is the exact name
+    of a struct field, and no other field of that struct has the same
+    name in another case: such a path resolves whether or not
+    ``spark.sql.caseSensitive`` is set. Backticks quote in Spark's
+    name parser, so a path with one is never judged here."""
+    if "`" in path:
+        return False
+    dtype: T.DataType = schema
+    for part in path.split("."):
+        if not isinstance(dtype, T.StructType):
+            return False
+        same = [f for f in dtype.fields if f.name.lower() == part.lower()]
+        if len(same) != 1 or same[0].name != part:
+            return False
+        dtype = same[0].dataType
+    return True
 
 
 @dataclasses.dataclass
@@ -143,8 +163,14 @@ class AggregationOperator(Operator):
         return df.agg(*cols)
 
     def _prevalidate(self, df: DataFrame) -> None:
-        # ≈ reference schema prevalidation aggregation_component.py:69-90
+        # ≈ reference schema prevalidation aggregation_component.py:69-90.
+        # A path that spells out fields of the schema needs no
+        # analysis; any other (a map key, a qualifier, another case,
+        # a missing column) is left to Spark's analyzer
+        schema = df.schema
         for path in self.group_by + [a.src for a in self.aggregations if a.src != "*"]:
+            if _names_fields(schema, path):
+                continue
             try:
                 df.select(path)
             except Exception as exc:  # AnalysisException

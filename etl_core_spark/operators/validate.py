@@ -18,6 +18,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from etl_core_spark.functions.literals import isin
 from etl_core_spark.operators.base import (
     Operator,
     OperatorConfigError,
@@ -57,7 +58,7 @@ def _field_checks(
     if fd.data_type == DataType.ENUM:
         assert fd.enum_values is not None
         checks.append(
-            (f"{path} in enum", col.isNull() | col.isin(list(fd.enum_values)))
+            (f"{path} in enum", col.isNull() | isin(col, fd.enum_values))
         )
     if fd.data_type == DataType.OBJECT and fd.children:
         for child in fd.children:

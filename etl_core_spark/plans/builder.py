@@ -37,7 +37,7 @@ from pyspark.sql.classic.column import _to_seq
 
 from etl_core_spark.operators.base import Operator, get_operator
 from etl_core_spark.plans.config import ComponentConfig, JobConfig, JobConfigError
-from etl_core_spark.sources.base_io import SinkOperator, SourceOperator
+from etl_core_spark.sources.base_io import SinkOperator, SourceOperator, reading_confs_once
 
 
 class PlanBuilder:
@@ -98,6 +98,10 @@ class PlanBuilder:
     # -- build ----------------------------------------------------------
 
     def build(self) -> dict[str, dict[str, DataFrame]]:
+        with reading_confs_once():
+            return self._build()
+
+    def _build(self) -> dict[str, dict[str, DataFrame]]:
         comps = {c.name: c for c in self.job.components}
         classes = {n: get_operator(c.comp_type) for n, c in comps.items()}
         order, inbound, live = self._plan(classes)

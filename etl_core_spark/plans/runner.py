@@ -173,7 +173,11 @@ class JobRunner:
         received: dict[str, int] = {}
         ports: dict[str, dict[str, int]] = {}
         for src, src_port, dst, obs in self.builder.edge_counters:
-            n = obs.get["count"]
+            # ``getRow`` waits for the action's metrics as
+            # ``Observation.get`` does; reading the one long from the
+            # JVM row takes 2 round trips, ``get`` 4 (it also looks up
+            # PythonSQLUtils and pickles the row across)
+            n = obs._jo.getRow().getLong(0)
             received[dst] = received.get(dst, 0) + n
             src_ports = ports.setdefault(src, {})
             src_ports[src_port] = max(n, src_ports.get(src_port, 0))

@@ -58,6 +58,17 @@ def get_spark(
       AQE coalesces. On a cluster it should be ~2-3× total cores.
     - Arrow makes the Pandas-UDF slow paths (Excel bridge, multimodal
       decode) batch-columnar instead of row-pickled.
+    - PySpark's DataFrame debugging is off. With it on, every
+      ``F.col`` and Column method called on a thread with an active
+      session records its Python call site in the JVM for the
+      "DataFrame query context" of Spark errors: about five extra
+      Py4J round trips per Column, a stack walk, and an IPython import
+      on first use. Here that call site always points inside
+      ``etl_core_spark``, never at the user's JSON job config, so it
+      costs round trips and driver memory and tells the user nothing.
+      PySpark caches the flag per process on first use, so with the
+      default every entry point builds the same way whichever thread
+      gets there first. ``SPARK_GRAFT_EXTRA_CONF`` can turn it back on.
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     builder = (
@@ -74,6 +85,7 @@ def get_spark(
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.files.maxPartitionBytes", str(128 * 1024 * 1024))
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
     )
     if use_rocksdb_state_store or (
         use_rocksdb_state_store is None

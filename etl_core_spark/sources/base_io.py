@@ -3,6 +3,8 @@
 from __future__ import annotations
 
 import collections
+import contextlib
+import contextvars
 import re
 import threading
 import weakref
@@ -35,6 +37,35 @@ INFERENCE_CONFS = (
     "spark.sql.sources.partitionColumnTypeInference.enabled",
     "spark.sql.files.ignoreCorruptFiles",
 )
+
+#: INFERENCE_CONFS values per session, memoized while a
+#: ``reading_confs_once`` block (one plan build) is open
+_CONF_MEMO: contextvars.ContextVar[Optional[dict]] = contextvars.ContextVar(
+    "etl_core_spark_inference_confs", default=None
+)
+
+
+@contextlib.contextmanager
+def reading_confs_once():
+    """Inside the block each session's ``INFERENCE_CONFS`` are read
+    once, not once per source: a conf read is a Py4J round trip, and
+    a plan build does not change session confs."""
+    token = _CONF_MEMO.set({})
+    try:
+        yield
+    finally:
+        _CONF_MEMO.reset(token)
+
+
+def _inference_confs(spark: SparkSession) -> tuple:
+    memo = _CONF_MEMO.get()
+    if memo is not None and spark in memo:
+        return memo[spark]
+    values = tuple(spark.conf.get(c) for c in INFERENCE_CONFS)
+    if memo is not None:
+        memo[spark] = values
+    return values
+
 
 # Hadoop ``FileStatus.toString``: the fields the fingerprint keeps
 _FILE_STATUS = re.compile(
@@ -101,7 +132,7 @@ class InferredSchemaCache:
             fmt,
             path,
             tuple(sorted((k, str(v)) for k, v in options.items())),
-            tuple(spark.conf.get(c) for c in INFERENCE_CONFS),
+            _inference_confs(spark),
         )
         with self._lock:
             entry = self._entries.get(key)

@@ -90,6 +90,29 @@ def test_config_validation(tables):
         op.apply({"in": tables["orders"]})
 
 
+def test_column_paths_checked_against_the_schema(spark):
+    """Paths that spell out schema fields pass without an analysis;
+    any other path is judged by Spark's analyzer, so a case variant
+    or a map key still passes and a missing field is still a config
+    error naming the path."""
+    df = spark.createDataFrame(
+        [("g", (1.0, 2.0), {"x": 3.0})],
+        "k string, s struct<a: double, B: double>, m map<string, double>",
+    )
+
+    def run(group_by, src):
+        return agg(
+            group_by=group_by, aggregations=[{"src": src, "op": "sum", "dest": "t"}]
+        ).apply({"in": df})["out"]
+
+    assert run(["k"], "s.a").collect() == [("g", 1.0)]
+    assert run(["K"], "S.b").collect() == [("g", 2.0)]
+    assert run([], "m.x").collect() == [(3.0,)]
+    for group_by, src, bad in ((["k"], "s.nope", "s.nope"), (["k.x"], "s.a", "k.x")):
+        with pytest.raises(OperatorConfigError, match=f"unknown column path '{bad}'"):
+            run(group_by, src)
+
+
 def test_extended_agg_ops(spark):
     """r8 additions: var/skewness/kurtosis (population moments — the
     Spark convention), any/all over boolean casts, mode, sorted

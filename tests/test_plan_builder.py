@@ -301,7 +301,7 @@ def _two_sink_job(tmp_path):
 
 
 #: Py4J round trips of one warm build+run of ``_two_sink_job``
-TWO_SINK_ROUND_TRIPS = 141
+TWO_SINK_ROUND_TRIPS = 95
 
 
 def test_warm_build_and_run_round_trip_budget(spark, tmp_path, py4j_round_trips):
